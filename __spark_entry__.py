@@ -2,8 +2,8 @@
 
 entry(spark): flagship run — build the deterministic synthetic wiki corpus
 from sf0.001 documents.parquet, run the full knowledge-graph pipeline
-(parse -> prescan -> broadcast -> transform -> edges) and return the unified
-triple stream.
+(prescan pass -> dictionary side-load -> transform pass -> edges) and return
+the unified (subj, pred, obj, prop) triple stream.
 
 queries()/oracle_sql(): per-operator DataFrame callables and their DuckDB
 oracles (see wikiprep_spark/plans/queries.py and plans/oracles.py).

@@ -191,7 +191,7 @@ BENCH_QUERIES = [
     "dedup_bloom_seen",
     "q_asof_attribution",
     # graph_pagerank is oracle-gated but not benched here: it consumes
-    # the full kg pipeline output, and QUERIES' staged pipeline at sf0.1
+    # the full kg pipeline output, and QUERIES' pipeline run at sf0.1
     # would re-run ~20s of upstream inside this query's measured window —
     # the pipeline itself is already measured as kg_pipeline below
 ]
@@ -327,14 +327,10 @@ def _bench_near_dedup(spark, sf_dir, docs=None):
     }
 
 
-def run_kg_pipeline(spark, sf_dir: str, replicate: int,
-                    dict_mode: str = "inmem"):
+def run_kg_pipeline(spark, sf_dir: str, replicate: int):
     """Fused two-pass pipeline over a pre-materialized source table (the
     production configuration: input synthesis excluded from the measured
-    window, stage outputs written to a work dir as on a cluster).
-    ``dict_mode="pruned"`` benches the bounded-worker-memory dictionary
-    side-load (row-group binary search) instead of the in-memory dicts —
-    the scale path for title2id beyond ~10^7 entries."""
+    window, stage outputs written to a work dir as on a cluster)."""
     import shutil
     import tempfile
 
@@ -349,8 +345,7 @@ def run_kg_pipeline(spark, sf_dir: str, replicate: int,
     t0 = time.time()
     src = spark.read.parquet(src_path)
     result = run_pipeline(spark, src, work_dir=os.path.join(tmp, "work"),
-                          resume=False, fuse_parse=True,
-                          dict_mode=dict_mode)
+                          resume=False)
     n_pages = result["_counts"]["transformed"]
     n_triples = result["_counts"]["triples"]
     wall = time.time() - t0
@@ -433,8 +428,7 @@ def main():
     from wikiprep_spark.sources.corpus import build_src_pages as _bsp
 
     wdir = _warmup_dir()
-    warm = _rp(spark, _bsp(spark, wdir, limit=60),
-               fuse_parse=False, persist=False)
+    warm = _rp(spark, _bsp(spark, wdir, limit=60))
     warm["triples"].write.format("noop").mode("overwrite").save()
 
     # warm the STREAMING engine too — BOTH stateful paths: the first
@@ -481,10 +475,7 @@ def main():
 
     # kg pipeline: the wall is measured INSIDE run_kg_pipeline (input
     # synthesis excluded), so the guard watches the inner wall via the
-    # `observed` hook.  Measured in both dictionary modes: inmem (the
-    # default) and pruned (bounded-worker-memory row-group side-load —
-    # correctness-gated since r4, perf-gated here so a regression in the
-    # pruned reader can't hide behind the inmem number).
+    # `observed` hook.
     kg = {}
 
     def kg_run():
@@ -492,15 +483,6 @@ def main():
             spark, SF_DIR, REPLICATE)
 
     record("kg_pipeline", kg_run, observed=lambda: kg["wall"])
-
-    kgp = {}
-
-    def kg_run_pruned():
-        kgp["wall"], *_rest = run_kg_pipeline(
-            spark, SF_DIR, REPLICATE, dict_mode="pruned")
-
-    record("kg_pipeline_pruned", kg_run_pruned,
-           observed=lambda: kgp["wall"])
 
     def run_query(name):
         # construction INSIDE the measured window: iterative operators

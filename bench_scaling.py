@@ -8,9 +8,9 @@ Protocol
 - The input table is PRE-BUILT once (src_pages parquet) outside the
   measured window, so both levels read byte-identical input and no input
   synthesis pollutes the measurement.
-- Each level runs the fused two-pass pipeline (run_pipeline
-  fuse_parse=True — the reference's own prescan-pass + transform-pass
-  architecture) in a fresh driver process, CPU-PINNED with taskset to
+- Each level runs the fused two-pass pipeline (run_pipeline — the
+  reference's own prescan-pass + transform-pass architecture) in a
+  fresh driver process, CPU-PINNED with taskset to
   exactly N / 4N cores.  Plain local[k] only limits task slots while
   JVM/GC/Arrow threads spill onto idle cores, silently inflating the
   low-parallelism number; pinning makes "a cluster with N cores total"
@@ -79,12 +79,10 @@ src = spark.read.parquet({src!r})
 # warm-up outside the measured window (JIT, codegen, python worker pool):
 # both levels measure steady-state throughput, which is what a cluster
 # job of any length converges to
-run_pipeline(spark, src.limit(2000), resume=False, persist=False,
-             fuse_parse=True)["triples"].write.format("noop").mode(
+run_pipeline(spark, src.limit(2000))["triples"].write.format("noop").mode(
     "overwrite").save()
 t0 = time.time()
-result = run_pipeline(spark, src, work_dir=wd, resume=False,
-                      fuse_parse=True)
+result = run_pipeline(spark, src, work_dir=wd, resume=False)
 n_pages = result["_counts"]["transformed"]
 n_triples = result["_counts"]["triples"]
 wall = time.time() - t0

@@ -251,7 +251,11 @@ def load_vetted_lines(path: str) -> list:
 
 def all_case_dumps() -> list:
     """Every minidump under the reference's t/cases (the robustness sweep
-    t/cases.t:55-82 runs: wikiprep must exit 0 on each, vetted or not)."""
+    t/cases.t:55-82 runs: wikiprep must exit 0 on each, vetted or not).
+    Empty when the reference is absent, so parametrizing over it at import
+    leaves the module's skipif to apply."""
+    if not cases_available():
+        return []
     return sorted(
         fn[:-4] for fn in os.listdir(CASES_DIR)
         if fn.endswith(".xml") and not fn.endswith(".vetted")
@@ -424,8 +428,11 @@ def load_vetted_external_anchors(name: str) -> list:
 def template_log_cases() -> list:
     """(case_name, template_id, vetted_path) for every vetted
     per-template inclusion log (<case>.templates!<prefix>!<id>.vetted —
-    cases.t:61-64 maps '!' to '/' under the templates/ inc dir)."""
+    cases.t:61-64 maps '!' to '/' under the templates/ inc dir).  Empty
+    when the reference is absent, like all_case_dumps."""
     out = []
+    if not cases_available():
+        return out
     for fn in sorted(os.listdir(CASES_DIR)):
         if ".templates!" in fn and fn.endswith(".vetted"):
             case = fn.split(".templates!")[0]

@@ -94,3 +94,26 @@ def test_queries_without_oracle_return_rows(spark):
     for name in no_oracle:
         df = QUERIES[name](spark, SF_DIR)
         assert df.count() >= 0
+
+
+def test_kg_queries_share_one_pipeline_run(spark, monkeypatch):
+    """All 18 kg_* queries read ONE cached pipeline run per sf_dir (the
+    driver builds one kg pipeline, not one per former mode)."""
+    from wikiprep_spark.plans import queries as q
+
+    runs = []
+    real = q.run_pipeline
+
+    def counting(*args, **kwargs):
+        runs.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(q, "run_pipeline", counting)
+    kg = sorted(n for n in QUERIES if n.startswith("kg_"))
+    assert len(kg) == 18
+    for name in kg:
+        QUERIES[name](spark, SF_DIR)
+    # zero runs when an earlier test already populated the cache
+    assert len(runs) <= 1
+    assert [k for k in q._PIPELINE_CACHE if SF_DIR in k] == [
+        (id(spark), SF_DIR)]

@@ -1,9 +1,9 @@
-"""Graph, dedup, similarity, multimodal operator tests (small data)."""
+"""Graph, dedup, similarity and pipeline operator tests (small data)."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from wikiprep_spark.operators import dedup, graph, multimodal, similarity
+from wikiprep_spark.operators import dedup, graph, similarity
 
 
 def test_transitive_closure_roots(spark):
@@ -16,6 +16,32 @@ def test_transitive_closure_roots(spark):
         for r in graph.transitive_closure_roots(edges).collect()
     }
     assert got == {(1, 4, 3), (2, 4, 2), (3, 4, 1), (10, 11, 1)}
+
+
+def _pointer_jumping_oracle(edges, jumps):
+    """(node, root, depth) after ``jumps`` simultaneous pointer jumps, one
+    at a time, stopping early at the fixpoint."""
+    table = {s: (d, 1) for s, d in edges}
+    for _ in range(jumps):
+        nxt = {n: (table[p][0], depth + table[p][1]) if p in table
+               else (p, depth) for n, (p, depth) in table.items()}
+        if nxt == table:
+            break
+        table = nxt
+    return {(n, p, depth) for n, (p, depth) in table.items()}
+
+
+@pytest.mark.parametrize("cap", [1, 3, 5])
+def test_transitive_closure_roots_odd_cap(spark, cap):
+    """An odd max_iterations runs exactly that many jumps, on a chain too
+    long to resolve within the cap and on a cycle (which never does)."""
+    chain = [(i, i + 1) for i in range(1, 40)]
+    cycle = [(101, 102), (102, 103), (103, 104), (104, 105), (105, 101)]
+    for edges in (chain, cycle):
+        df = spark.createDataFrame(edges, "src long, dst long")
+        got = {tuple(r) for r in graph.transitive_closure_roots(
+            df, max_iterations=cap).collect()}
+        assert got == _pointer_jumping_oracle(edges, cap), edges
 
 
 def test_connected_components(spark):
@@ -245,84 +271,40 @@ def test_template_inclusions_partitioned_write(spark, tmp_path):
     assert hub_files > 1
 
 
-def test_pruned_dict_transform_equality(spark, tmp_path):
-    """The bounded-memory dict path (write_dicts_pruned +
-    RowGroupPrunedDict) must produce the byte-identical transformed table
-    as the in-memory dict path (SURVEY.md §4 big-dict fallback)."""
-    from wikiprep_spark.plans.pipeline import run_pipeline
-    from wikiprep_spark.sources.corpus import build_src_pages
-
-    src = build_src_pages(spark, "/root/testdata/sf0.001", limit=60).persist()
-    inmem = run_pipeline(spark, src, dict_mode="inmem")
-    pruned = run_pipeline(spark, src, dict_mode="pruned")
-
-    cols = sorted(inmem["transformed"].columns)
-    a = sorted(map(repr, inmem["transformed"].select(cols).collect()))
-    b = sorted(map(repr, pruned["transformed"].select(cols).collect()))
-    assert a == b and len(a) > 0
-    src.unpersist()
-
-
-def test_pruned_dict_lookup_unit(spark, tmp_path):
-    from wikiprep_spark.functions.dictload import (
-        RowGroupPrunedDict, key_hash,
-    )
-    from wikiprep_spark.operators.prescan import _key_hash_col
-
-    rows = [("Title %04d" % i, i) for i in range(5000)]
-    df = spark.createDataFrame(rows, "title_norm string, page_id long")
-    # JVM hash == python hash (the pruning contract)
-    sample = df.select(
-        "title_norm", _key_hash_col(F.col("title_norm")).alias("kh")
-    ).limit(50).collect()
-    assert all(key_hash(r["title_norm"]) == r["kh"] for r in sample)
-
-    from wikiprep_spark.operators.prescan import write_dicts_pruned
-
-    tb = spark.createDataFrame([(11, "body")],
-                               "template_id long, body string")
-    write_dicts_pruned(df, df.selectExpr(
-        "title_norm as from_title", "title_norm as to_title").limit(0),
-        tb, str(tmp_path / "d"))
-    d = RowGroupPrunedDict(str(tmp_path / "d" / "title2id"))
-    assert d.get("Title 0000") == 0
-    assert d.get("Title 4999") == 4999
-    assert d.get("Missing") is None
-    assert "Title 0123" in d and d["Title 0123"] == 123
-
-
 def test_fused_pipeline_equality(spark, tmp_path):
-    """The fused two-pass pipeline (no parsed-parquet materialization,
-    JVM-side dup-id scan, prescan-projection parse) must emit the same
-    edges and lineage checksums as the staged pipeline."""
+    """The fused two-pass pipeline's lineage table equals a pure-Python
+    oracle over the source rows, malformed records included: total rows,
+    content_checksum = sum of crc32(sha256(content) hex digest) and
+    byte_count = sum of len(content)."""
+    import hashlib
+    import zlib
+
     from wikiprep_spark.plans.pipeline import run_pipeline
     from wikiprep_spark.sources.corpus import build_src_pages
 
     src_dir = str(tmp_path / "src")
+    bad = spark.createDataFrame(
+        [("!bad", "a.xml", "c0", "wikitext", "garbage <id>1001</id> é")],
+        "repo string, path string, commit string, lang string, "
+        "content string")
     build_src_pages(spark, "/root/testdata/sf0.001", limit=60) \
-        .repartition(3).write.parquet(src_dir)
+        .unionByName(bad).repartition(3).write.parquet(src_dir)
     src = spark.read.parquet(src_dir)
+    contents = [r["content"] for r in src.select("content").collect()]
 
-    staged = run_pipeline(spark, src, work_dir=str(tmp_path / "w1"),
-                          resume=False)
-    fused = run_pipeline(spark, src, work_dir=str(tmp_path / "w2"),
-                         resume=False, fuse_parse=True)
-
-    for table in ("links", "anchors", "categories", "redirect_records"):
-        a = sorted(map(repr, staged[table].collect()))
-        b = sorted(map(repr, fused[table].collect()))
-        assert a == b and a, table
-    assert fused["_counts"]["transformed"] == staged["transformed"].count()
-    assert fused["_counts"]["triples"] == staged["triples"].count()
-    # lineage totals (rows, content checksum AND byte_count — all three
-    # sum the same raw-record quantities) agree across modes even though
-    # partition boundaries may differ
-    def totals(wd):
-        df = spark.read.parquet(str(tmp_path / wd / "lineage"))
-        r = df.agg(F.sum("rows"), F.sum("content_checksum"),
-                   F.sum("byte_count")).first()
-        return tuple(r)
-    assert totals("w1") == totals("w2")
+    out = run_pipeline(spark, src, work_dir=str(tmp_path / "w"),
+                       resume=False)
+    lineage = spark.read.parquet(str(tmp_path / "w" / "lineage"))
+    got = tuple(lineage.agg(F.sum("rows"), F.sum("content_checksum"),
+                            F.sum("byte_count")).first())
+    want = (
+        len(contents),
+        sum(zlib.crc32(hashlib.sha256(c.encode()).hexdigest().encode())
+            for c in contents),
+        sum(len(c) for c in contents),
+    )
+    assert got == want
+    assert out["_counts"]["transformed"] == out["transformed"].count() > 0
 
 
 def test_pipeline_resume_skips_finished_stages(spark, tmp_path):
@@ -340,26 +322,62 @@ def test_pipeline_resume_skips_finished_stages(spark, tmp_path):
     src = spark.read.parquet(src_dir)
     wd = str(tmp_path / "work")
 
+    def mtimes(stage):
+        d = os.path.join(wd, stage)
+        return {f: os.path.getmtime(os.path.join(d, f))
+                for f in os.listdir(d)}
+
     first = run_pipeline(spark, src, work_dir=wd, resume=True)
     n_triples = first["triples"].count()
-    parsed_dir = os.path.join(wd, "parsed_pages")
-    mtime_before = {f: os.path.getmtime(os.path.join(parsed_dir, f))
-                    for f in os.listdir(parsed_dir)}
+    before = {st: mtimes(st) for st in ("dicts", "transformed_pages")}
 
     # full resume: nothing recomputed, same results
     second = run_pipeline(spark, src, work_dir=wd, resume=True)
-    mtime_after = {f: os.path.getmtime(os.path.join(parsed_dir, f))
-                   for f in os.listdir(parsed_dir)}
-    assert mtime_after == mtime_before  # parse stage untouched
+    assert {st: mtimes(st) for st in before} == before
+    assert second["_counts"] == {}
     assert second["triples"].count() == n_triples
 
-    # kill marker of the LAST stage only -> that stage recomputes, parse
-    # still untouched
+    # kill marker of the LAST stage only -> that stage recomputes, the
+    # dictionary and transform stages stay untouched
     os.remove(os.path.join(wd, "triples", "_SUCCESS"))
     third = run_pipeline(spark, src, work_dir=wd, resume=True)
+    assert set(third["_counts"]) == {"triples"}
     assert third["triples"].count() == n_triples
-    assert {f: os.path.getmtime(os.path.join(parsed_dir, f))
-            for f in os.listdir(parsed_dir)} == mtime_before
+    assert {st: mtimes(st) for st in before} == before
+
+
+def test_pipeline_failure_joins_lineage_thread(spark, tmp_path,
+                                               monkeypatch):
+    """A failing transform write propagates its error only after the
+    overlapped lineage writer has been joined — no thread is left writing
+    into work_dir."""
+    import os
+    import threading
+
+    from wikiprep_spark.plans import pipeline
+    from wikiprep_spark.sources.corpus import build_src_pages
+
+    def failing_transform(live, dicts_path):
+        return live.select(
+            "page_id",
+            F.raise_error(F.lit("transform boom")).cast("string")
+            .alias("text"))
+
+    monkeypatch.setattr(pipeline, "transform_pages", failing_transform)
+    src = build_src_pages(spark, "/root/testdata/sf0.001", limit=20)
+    wd = tmp_path / "work"
+    with pytest.raises(Exception, match="transform boom"):
+        pipeline.run_pipeline(spark, src, work_dir=str(wd), resume=False)
+    assert not [t for t in threading.enumerate()
+                if t.name == "wikiprep-lineage"]
+    assert os.path.exists(wd / "lineage" / "_SUCCESS")
+
+
+def test_run_pipeline_rejects_unfused_mode(spark):
+    from wikiprep_spark.plans.pipeline import run_pipeline
+
+    with pytest.raises(ValueError):
+        run_pipeline(spark, None, fuse_parse=False)
 
 
 def test_dup_losers_from_src_equivalence(spark):
@@ -423,177 +441,6 @@ def test_dup_losers_from_src_equivalence(spark):
     # and the duplicate id appears exactly once
     n = sum(1 for pid, _ in via_parse if pid == 1005)
     assert n == 1
-
-
-def test_pruned_dict_backward_straddle(tmp_path, monkeypatch):
-    """An equal-hash run that straddles a row-group boundary must be fully
-    reachable: bisect lands on the LAST group whose min <= hash, so the
-    lookup has to rewind to the run's first group (hash collisions are
-    expected at the 10^9-key scale the pruned path is built for)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from wikiprep_spark.functions import dictload
-
-    # 6 rows, hash H for all but the first; 2-row groups put the H-run
-    # start in group 0 and its tail through groups 1-2
-    H = 10**9
-    tbl = pa.table({
-        "kh": pa.array([H - 1, H, H, H, H, H], pa.int64()),
-        "k": ["z", "a", "b", "c", "d", "e"],
-        "v": ["vz", "va", "vb", "vc", "vd", "ve"],
-    })
-    d = tmp_path / "dict"
-    d.mkdir()
-    pq.write_table(tbl, str(d / "part-0.parquet"), row_group_size=2)
-
-    fake = {"z": H - 1, "a": H, "b": H, "c": H, "d": H, "e": H}
-    monkeypatch.setattr(dictload, "key_hash", lambda k: fake[k])
-    rg = dictload.RowGroupPrunedDict(str(d))
-    assert len(rg._index) == 3  # the straddle actually exists
-    for k in "zabcde":
-        assert rg.get(k) == "v" + k, k
-
-
-def test_pruned_dicts_resume_gates_on_all_subtables(spark, tmp_path):
-    """ADVICE: a crash after the title2id sub-write but before the
-    templates sub-write must NOT count as a finished dicts stage — resume
-    has to rewrite the dictionaries when any sub-table marker is missing."""
-    import os
-
-    from wikiprep_spark.plans.pipeline import run_pipeline
-    from wikiprep_spark.sources.corpus import build_src_pages
-
-    src_dir = str(tmp_path / "src")
-    build_src_pages(spark, "/root/testdata/sf0.001", limit=40) \
-        .repartition(2).write.parquet(src_dir)
-    src = spark.read.parquet(src_dir)
-    wd = str(tmp_path / "work")
-
-    first = run_pipeline(spark, src, work_dir=wd, resume=True,
-                         dict_mode="pruned")
-    assert isinstance(first["_metrics"].stages[1]["dict_rows"], int)
-    n = first["triples"].count()
-    dicts = os.path.join(wd, "dicts_pruned")
-
-    # simulate the mid-stage crash: templates/_SUCCESS never landed
-    os.remove(os.path.join(dicts, "templates", "_SUCCESS"))
-    mtime = os.path.getmtime(os.path.join(dicts, "title2id", "_SUCCESS"))
-    second = run_pipeline(spark, src, work_dir=wd, resume=True,
-                          dict_mode="pruned")
-    assert second["triples"].count() == n
-    assert os.path.exists(os.path.join(dicts, "templates", "_SUCCESS"))
-    # the stage reran as a unit (title2id rewritten too, not skipped)
-    assert os.path.getmtime(
-        os.path.join(dicts, "title2id", "_SUCCESS")) > mtime
-
-
-def test_multimodal_plumbing(spark, docs):
-    media = multimodal.attach_binary_payload(docs, "doc_id", "text")
-    integ = multimodal.payload_integrity(media).collect()
-    assert all(r["sha_ok"] and r["len_ok"] for r in integ)
-    feats = multimodal.extract_features(media).collect()
-    assert all(r["decode_status"] == "ok_stub" for r in feats)
-    assert all(len(r["feature"]) == 8 for r in feats)
-    assert all(abs(sum(r["feature"]) - 1.0) < 1e-6 for r in feats)
-
-
-def test_decode_stub_strict_raises():
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_stub(b"xx", "image", strict=True)
-    # codec-bound payloads (video container) still raise in strict mode
-    # via the dispatcher
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_media(b"\x00\x00\x00\x18ftypmp42moovish",
-                                "video", strict=True)
-
-
-def _make_png(w, h, color=(200, 50, 7)):
-    """Minimal real RGB8 PNG, built with the stdlib (the same chunk/CRC/
-    zlib layout any encoder emits)."""
-    import struct
-    import zlib
-
-    def chunk(tag, data):
-        return (struct.pack(">I", len(data)) + tag + data
-                + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    raw = b"".join(b"\x00" + bytes(color) * w for _ in range(h))
-    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b""))
-
-
-def _make_wav(n_frames=64, rate=8000, amplitude=1000):
-    import math
-    import struct
-
-    samples = b"".join(
-        struct.pack("<h", int(amplitude * math.sin(i / 3.0)))
-        for i in range(n_frames))
-    fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
-    body = (b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(samples)) + samples)
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def test_decode_png_real():
-    png = _make_png(5, 3)
-    d = multimodal.decode_png(png)
-    assert (d["width"], d["height"], d["bit_depth"], d["channels"]) == \
-        (5, 3, 8, 3)
-    # strict mode succeeds: this is a REAL decode, not the stub
-    feat, status = multimodal.decode_media(png, "image", strict=True)
-    assert status == "ok_png" and len(feat) == 8 and feat[0] == 1.0
-    # corruption is detected (CRC), not silently featurized
-    import pytest as _pytest
-
-    bad = png[:40] + bytes([png[40] ^ 0xFF]) + png[41:]
-    with _pytest.raises(ValueError):
-        multimodal.decode_png(bad)
-
-
-def test_decode_wav_real():
-    wav = _make_wav()
-    d = multimodal.decode_wav(wav)
-    assert (d["channels"], d["rate"], d["bits"], d["n_samples"]) == \
-        (1, 8000, 16, 64)
-    assert 0.0 < d["rms"] <= d["peak"] <= 1.0
-    feat, status = multimodal.decode_media(wav, "audio", strict=True)
-    assert status == "ok_wav" and feat[0] == 2.0
-    # non-PCM stays codec-bound -> ValueError, not a fake feature
-    import struct
-
-    gsm_fmt = struct.pack("<HHIIHH", 49, 1, 8000, 1625, 65, 0)
-    gsm = (b"RIFF" + struct.pack("<I", 24) + b"WAVE"
-           + b"fmt " + struct.pack("<I", len(gsm_fmt)) + gsm_fmt)
-    with pytest.raises(ValueError):
-        multimodal.decode_wav(gsm)
-
-
-def test_media_decode_in_spark(spark):
-    """The mapInPandas chain routes each payload to its real decoder."""
-    rows = [
-        (1, "image", bytearray(_make_png(4, 4))),
-        (2, "audio", bytearray(_make_wav())),
-        (3, "blob", bytearray(b"opaque-unknown-bytes")),
-    ]
-    df = spark.createDataFrame(
-        rows, "item_id long, media_type string, payload binary")
-    media = df.select(
-        "item_id", "media_type", "payload",
-        F.struct(
-            F.lit("application/octet-stream").alias("mime"),
-            F.length("payload").cast("long").alias("n_bytes"),
-            F.sha2("payload", 256).alias("sha256"),
-        ).alias("meta"),
-    )
-    got = {r["item_id"]: r for r in
-           multimodal.extract_features(media).collect()}
-    assert got[1]["decode_status"] == "ok_png"
-    assert got[2]["decode_status"] == "ok_wav"
-    assert got[3]["decode_status"] == "ok_stub"
-    assert all(len(r["feature"]) == 8 for r in got.values())
 
 
 def test_near_dup_groups(spark):
@@ -699,53 +546,6 @@ def test_shingle_dedup(spark, docs):
     assert inter < 0.2
 
 
-def test_extract_features_malformed_payloads_degrade_to_corrupt(spark):
-    """ADVICE r4: malformed payloads that drive the stdlib decoders into
-    zlib.error / struct.error / KeyError must emit decode_status='corrupt'
-    rows, never crash the Spark task."""
-    import struct
-    import zlib
-
-    def chunk(tag, data):
-        return (struct.pack(">I", len(data)) + tag + data
-                + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
-
-    sig = b"\x89PNG\r\n\x1a\n"
-    ihdr_ok = struct.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 0)
-    payloads = [
-        # CRC-valid chunks, but IDAT fails inflate -> zlib.error
-        (1, sig + chunk(b"IHDR", ihdr_ok) + chunk(b"IDAT", b"notzlib")
-         + chunk(b"IEND", b"")),
-        # IHDR declared with a 4-byte body -> struct.error in unpack
-        (2, sig + chunk(b"IHDR", b"\x00" * 4) + chunk(b"IEND", b"")),
-        # color type 9 (outside the PNG spec) -> KeyError on channels
-        (3, sig + chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 8, 9, 0, 0, 0))
-         + chunk(b"IEND", b"")),
-        # WAV fmt chunk shorter than 16 bytes -> struct.error
-        (4, b"RIFF" + struct.pack("<I", 16) + b"WAVE"
-         + b"fmt " + struct.pack("<I", 4) + b"\x00" * 4),
-        # CRC mismatch -> the deliberate ValueError path still works
-        (5, sig + (lambda c: c[:-1] + bytes([c[-1] ^ 0xFF]))(
-            chunk(b"IHDR", ihdr_ok)) + chunk(b"IEND", b"")),
-    ]
-    df = spark.createDataFrame(
-        [(i, "image", bytearray(p)) for i, p in payloads],
-        "item_id long, media_type string, payload binary")
-    media = df.select(
-        "item_id", "media_type", "payload",
-        F.struct(
-            F.lit("application/octet-stream").alias("mime"),
-            F.length("payload").cast("long").alias("n_bytes"),
-            F.sha2("payload", 256).alias("sha256"),
-        ).alias("meta"))
-    got = {r["item_id"]: r for r in
-           multimodal.extract_features(media).collect()}
-    assert len(got) == 5
-    for i in got:
-        assert got[i]["decode_status"] == "corrupt", i
-        assert got[i]["feature"] is None
-
-
 def test_dup_losers_literal_id_forms(spark):
     """ADVICE r4: '<id>007</id>' and '<id>7</id>' are the SAME page id
     under the int() rule of both parsers; the candidate scan must group
@@ -809,68 +609,6 @@ def test_parse_page_record_id_bigint_grammar():
     for bad in (str(2 ** 63), str(10 ** 25), "1_2", "0x10", "4.0", ""):
         with pytest.raises(ValueError):
             parse_page_record(rec(bad))
-
-
-def _make_jpeg(w, h, progressive=False, precision=8, ncomp=3):
-    """Minimal structurally-valid JPEG header stream: SOI, APP0/JFIF, DQT,
-    SOFn, EOI (no entropy data — the dimension walk never reads it)."""
-    import struct
-
-    def seg(marker, data):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(data) + 2) + data
-
-    app0 = seg(0xE0, b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00")
-    dqt = seg(0xDB, b"\x00" + bytes(64))
-    sof_data = struct.pack(">BHHB", precision, h, w, ncomp) \
-        + b"\x01\x11\x00\x02\x11\x01\x03\x11\x01"[:ncomp * 3]
-    sof = seg(0xC2 if progressive else 0xC0, sof_data)
-    return b"\xff\xd8" + app0 + dqt + sof + b"\xff\xd9"
-
-
-def test_decode_jpeg_meta_real():
-    d = multimodal.decode_jpeg_meta(_make_jpeg(640, 480))
-    assert (d["width"], d["height"], d["precision"], d["components"],
-            d["progressive"]) == (640, 480, 8, 3, False)
-    assert multimodal.decode_jpeg_meta(_make_jpeg(9, 7, progressive=True))[
-        "progressive"]
-    # strict mode succeeds: dimensions are REAL metadata, not the stub
-    feat, status = multimodal.decode_media(_make_jpeg(640, 480), "image",
-                                           strict=True)
-    assert status == "ok_jpeg_meta" and feat[0] == 3.0
-    assert abs(feat[1] - 640 / 65535) < 1e-9
-    # non-JPEG returns None (falls through to the other decoders)
-    assert multimodal.decode_jpeg_meta(b"RIFFxxxx") is None
-    # malformed streams raise: truncated segment, SOS before SOF, no SOF
-    for bad in (b"\xff\xd8\xff\xe0jpegish",
-                b"\xff\xd8\xff\xda\x00\x04\x01\x00",
-                b"\xff\xd8\xff\xd9"):
-        with pytest.raises(ValueError):
-            multimodal.decode_jpeg_meta(bad)
-    # payloads ending inside a 0xFF fill-byte run must raise ValueError —
-    # the documented contract — not IndexError from reading past the end
-    # (ADVICE r4: the fill-skip loop could advance pos to len-1)
-    for bad in (b"\xff\xd8\xff", b"\xff\xd8\xff\xff",
-                b"\xff\xd8\xff\xff\xff", b"\xff\xd8\xff\xe0\x00\x02\xff"):
-        with pytest.raises(ValueError):
-            multimodal.decode_jpeg_meta(bad)
-
-
-def test_jpeg_in_spark_feature_chain(spark):
-    rows = [(1, "image", bytearray(_make_jpeg(100, 50))),
-            (2, "image", bytearray(b"\xff\xd8\xff\xe0jpegish"))]
-    df = spark.createDataFrame(
-        rows, "item_id long, media_type string, payload binary")
-    media = df.select(
-        "item_id", "media_type", "payload",
-        F.struct(
-            F.lit("image/jpeg").alias("mime"),
-            F.length("payload").cast("long").alias("n_bytes"),
-            F.sha2("payload", 256).alias("sha256"),
-        ).alias("meta"))
-    got = {r["item_id"]: r for r in
-           multimodal.extract_features(media).collect()}
-    assert got[1]["decode_status"] == "ok_jpeg_meta"
-    assert got[2]["decode_status"] == "corrupt"
 
 
 def test_embedding_near_dup_groups(spark):

@@ -91,41 +91,3 @@ def test_prescan_first_wins_stability(pages):
     assert again["title2id"] == base["title2id"]
     assert again["redir"] == base["redir"]
     assert set(again["templates"]) == set(base["templates"])
-
-
-@given(st.binary(max_size=512))
-@settings(max_examples=300, deadline=None)
-def test_media_decoders_total_on_arbitrary_bytes(payload):
-    """The stdlib media decoders are TOTAL over arbitrary bytes: each
-    returns None (not this format), a metadata dict, or raises one of the
-    exception classes extract_features maps to 'corrupt' — anything else
-    would crash a Spark task on a malformed corpus payload."""
-    from wikiprep_spark.operators import multimodal
-
-    for decoder in (multimodal.decode_png, multimodal.decode_jpeg_meta,
-                    multimodal.decode_wav):
-        try:
-            out = decoder(payload)
-            assert out is None or isinstance(out, dict)
-        except multimodal._CORRUPT_ERRORS:
-            pass
-
-
-@given(st.binary(max_size=512))
-@settings(max_examples=200, deadline=None)
-def test_media_decoders_total_with_magic_prefixes(payload):
-    """Same totality property with valid format magics prepended — this
-    drives the parsers deep into their chunk/marker walks instead of
-    bailing at the signature check."""
-    from wikiprep_spark.operators import multimodal
-
-    for magic, decoder in (
-        (b"\x89PNG\r\n\x1a\n", multimodal.decode_png),
-        (b"\xff\xd8", multimodal.decode_jpeg_meta),
-        (b"RIFF\x00\x01\x00\x00WAVE", multimodal.decode_wav),
-    ):
-        try:
-            out = decoder(magic + payload)
-            assert out is None or isinstance(out, dict)
-        except multimodal._CORRUPT_ERRORS:
-            pass

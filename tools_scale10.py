@@ -49,8 +49,7 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
 
     # steady-state warmup outside every measured window
-    warm = _rp(spark, _bsp(spark, _warmup_dir(), limit=60),
-               fuse_parse=False, persist=False)
+    warm = _rp(spark, _bsp(spark, _warmup_dir(), limit=60))
     warm["triples"].write.format("noop").mode("overwrite").save()
     _settle()
 

@@ -1,7 +1,7 @@
 """Per-page transform — the inner "query" of the pipeline.
 
 Re-expression of ``transformOne`` (``/root/reference/bin/wikiprep:539-668``)
-as a pure function: one parsed page record + the broadcast dictionaries in,
+as a pure function: one parsed page record + the prescan dictionaries in,
 one result dict out (rewritten text plus all extracted collections).  The
 12-step stage order is semantics-critical and preserved exactly:
 comments -> stub -> disambig -> templates -> related -> gallery/imagemap ->
@@ -43,7 +43,7 @@ _REDIRECT_ANCHOR_RE = re.compile(r"(.*)#.*$")
 
 class TransformEnv:
     """The cross-page dictionaries built by prescan (the reference's
-    BerkeleyDB tables; Spark-broadcast dicts here).
+    BerkeleyDB tables; dicts side-loaded per worker here).
 
     - title2id: normalized title -> page id
     - redir: normalized source title -> normalized target title (1 hop)

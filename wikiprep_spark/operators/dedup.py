@@ -357,10 +357,9 @@ def simhash(docs: DataFrame, id_col="doc_id", text_col="text",
     """(doc, simhash) 16-bit SimHash over token hashes: per-bit majority
     vote, computed with aggregate expressions only.
 
-    The token hash is the md5-derived 60-bit integer shared with the
-    pruned-dictionary layout (functions/dictload.key_hash) — unlike
-    xxhash64 it has an exact cross-engine twin, so the DuckDB oracle
-    (plans/oracles.py dedup_simhash) reproduces the full pipeline
+    The token hash is a 60-bit integer from the first 15 hex chars of
+    md5 — unlike xxhash64 it has an exact cross-engine twin, so the DuckDB
+    oracle (plans/oracles.py dedup_simhash) reproduces the full pipeline
     bit-for-bit."""
     toks = _token_sets(docs, id_col, text_col)
     th = toks.select("doc", F.transform(

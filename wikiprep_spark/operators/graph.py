@@ -64,9 +64,10 @@ def transitive_closure_roots(
     # TWO jumps per materialized round: the squaring operator composes, so
     # pairing jumps halves the checkpoint/probe rounds while executing the
     # SAME total jump sequence — outputs are identical at every total jump
-    # count, including the cycle-cutting cap (verified row-for-row), and
-    # the convergence probe merely fires at most one fused round later.
-    for _ in range((max_iterations + 1) // 2):
+    # count, including the cycle-cutting cap (an odd cap ends with one
+    # single jump below), and the convergence probe merely fires at most
+    # one fused round later.
+    for _ in range(max_iterations // 2):
         # the probe RIDES the checkpoint job via the Observation API (one
         # job per round): depth strictly increases while any pointer still
         # progresses, so an unchanged sum means fixpoint (decimal(38,0):
@@ -82,6 +83,9 @@ def transitive_closure_roots(
         if new_sum == prev_sum:  # None == None on round 1 <=> empty input
             break
         prev_sum = new_sum
+    if max_iterations % 2:
+        # identity once converged; otherwise the cap's last jump
+        jump = jump_once(jump)
     return jump.select("node", F.col("ptr").alias("root"), "depth")
 
 

@@ -16,14 +16,13 @@ Shuffle budget (the part that must survive 100 TB):
      first non-redirect claim, the last redirect, and the template-body
      candidates together — all three dictionaries derive from this single
      shuffle (only template rows carry text into it).
-The dictionaries are then pulled with Arrow toPandas and broadcast for the
-transform stage — the Spark equivalent of the reference's read-only
-BerkeleyDB tables shared across workers (bin/wikiprep:482-512).
+The dictionaries are then written as one tagged parquet table that every
+transform worker side-loads (functions/dictload.py) — the Spark equivalent
+of the reference's read-only BerkeleyDB tables shared across workers
+(bin/wikiprep:482-512).
 """
 
 from __future__ import annotations
-
-import os
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -306,63 +305,6 @@ def write_dicts(title2id: DataFrame, redirects: DataFrame,
         return None
 
 
-def _key_hash_col(k):
-    """JVM-side twin of functions/dictload.key_hash: first 15 hex chars of
-    md5 as a 60-bit int — exact int64 parquet statistics for row-group
-    pruning (string stats may be truncated)."""
-    return F.conv(F.substring(F.md5(k), 1, 15), 16, 10).cast("long")
-
-
-def write_dicts_pruned(title2id: DataFrame, redirects: DataFrame,
-                       template_bodies: DataFrame, path: str,
-                       range_partitions: int = 8) -> int | None:
-    """The big-dict layout (SURVEY.md §4 scale path): title2id and redir
-    written hash-sorted with small row groups, so transform workers
-    binary-search them via footer statistics (functions/dictload.
-    RowGroupPrunedDict) instead of materializing the whole dictionary in
-    every python worker.  Template bodies stay a small plain table.
-    Returns the total dictionary row count (observed on the write jobs,
-    same contract as write_dicts)."""
-    from pyspark.sql import Observation
-
-    observations = []
-
-    def observed(df):
-        obs = Observation()
-        observations.append(obs)
-        return df.observe(obs, F.count(F.lit(1)).alias("rows"))
-
-    def sorted_write(df, k, v, sub):
-        (
-            observed(df.select(
-                _key_hash_col(F.col(k)).alias("kh"),
-                F.col(k).alias("k"),
-                F.col(v).alias("v"),
-            ))
-            .repartitionByRange(range_partitions, "kh")
-            .sortWithinPartitions("kh", "k")
-            .write.mode("overwrite")
-            # ~1 MB row groups => a few thousand rows decoded per probe
-            .option("parquet.block.size", str(1 << 20))
-            .parquet(os.path.join(path, sub))
-        )
-
-    sorted_write(title2id, "title_norm", "page_id", "title2id")
-    sorted_write(redirects, "from_title", "to_title", "redir")
-    (
-        observed(template_bodies.select(
-            F.col("template_id").cast("string").alias("k"),
-            F.col("body").alias("v"),
-        ))
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, "templates"))
-    )
-    try:
-        return sum(obs.get["rows"] for obs in observations)
-    except Exception:
-        return None
-
-
 def redirect_records_df(redirects: DataFrame, title2id: DataFrame,
                         template_bodies: DataFrame):
     """The redirect output join (Output/Composite.pm:83-125): resolve both
@@ -371,8 +313,6 @@ def redirect_records_df(redirects: DataFrame, title2id: DataFrame,
 
     Returns (redirect_records, template_redirect_records).  Both joins are
     broadcast-able: title2id and the template list are the dimension side.
-    (The pipeline normally derives these from the already-collected dicts;
-    this join form exists for a no-collect deployment.)
     """
     tmpl_ids = template_bodies.select(
         F.col("template_id").alias("_tmpl_id")

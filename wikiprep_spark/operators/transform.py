@@ -1,7 +1,7 @@
 """Distributed per-page transform (pipeline pass 2).
 
 One Arrow-batched mapInPandas over the parsed pages: each row runs the full
-transformOne chain (functions/page.py) against the broadcast dictionaries
+transformOne chain (functions/page.py) against the side-loaded dictionaries
 and emits a wide row carrying the rewritten text plus every extracted
 collection as nested arrays.  Edge tables are exploded from this table in
 operators/edges.py — the expensive markup work happens exactly once per
@@ -86,29 +86,18 @@ def _row_from_page(src, page) -> tuple:
     )
 
 
-def transform_pages(parsed: DataFrame, env_source) -> DataFrame:
+def transform_pages(parsed: DataFrame, dicts_path: str) -> DataFrame:
     """parsed pages + the prescan dictionaries -> wide rows.
 
-    ``env_source`` is either a SparkContext broadcast of the
-    (title2id, redir, templates) triple, or a string path to the tagged
-    dictionary parquet (workers side-load it once per process via
-    functions/dictload.py — the prescanLoad equivalent).
+    ``dicts_path`` is the tagged dictionary parquet written by
+    operators/prescan.write_dicts; workers side-load it once per process
+    via functions/dictload.py (the prescanLoad equivalent).
     """
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if isinstance(env_source, str):
-            import os as _os
+        from wikiprep_spark.functions import dictload
 
-            from wikiprep_spark.functions import dictload
-
-            if _os.path.isdir(_os.path.join(env_source, "title2id")):
-                # pruned layout (write_dicts_pruned): bounded-memory
-                # row-group lookups instead of full materialization
-                t2i, red, bodies = dictload.load_env_pruned(env_source)
-            else:
-                t2i, red, bodies = dictload.load_env_from_parquet(env_source)
-        else:
-            t2i, red, bodies = env_source.value
+        t2i, red, bodies = dictload.load_env_from_parquet(dicts_path)
         env = TransformEnv(title2id=t2i, redir=red, templates=bodies)
         for batch in batches:
             if not len(batch):

@@ -233,13 +233,12 @@ KG_ORACLES["kg_incoming_links"] = (
     "SELECT target_id, count(*)::BIGINT AS n_links FROM links GROUP BY 1"
 )
 
-# the pruned-dictionary scale path must be externally indistinguishable
-# from the inmem broadcast path, so it is gated by the IDENTICAL oracles
+# names kept from the retired pipeline modes (pruned dictionaries, fused
+# vs staged parse): they resolve to the one pipeline run, so they carry
+# the IDENTICAL oracles
 KG_ORACLES["kg_links_pruned"] = KG_ORACLES["kg_links"]
 KG_ORACLES["kg_template_inclusions_pruned"] = (
     KG_ORACLES["kg_template_inclusions"])
-
-# ...and likewise the fused two-pass PRODUCTION mode (what bench.py runs)
 KG_ORACLES["kg_links_fused"] = KG_ORACLES["kg_links"]
 KG_ORACLES["kg_anchors_fused"] = KG_ORACLES["kg_anchors"]
 

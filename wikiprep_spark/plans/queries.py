@@ -24,46 +24,18 @@ _PIPELINE_CACHE: dict = {}
 
 
 def kg_pipeline(spark: SparkSession, sf_dir: str) -> dict:
+    """The fused two-pass pipeline over the synthetic corpus of
+    ``sf_dir``, memoized per (session, sf_dir): every kg_* query reads
+    this one run.  The source table is materialized to parquet once, so
+    both passes scan files instead of re-synthesizing the corpus."""
+    import tempfile
+
     key = (id(spark), sf_dir)
     if key not in _PIPELINE_CACHE:
-        src = build_src_pages(spark, sf_dir)
-        _PIPELINE_CACHE[key] = run_pipeline(spark, src)
-    return _PIPELINE_CACHE[key]
-
-
-def kg_pipeline_pruned(spark: SparkSession, sf_dir: str) -> dict:
-    """The same pipeline through the 10^8-title SCALE path: dictionaries
-    written as sorted row-group-pruned parquet and side-loaded per worker
-    (dict_mode='pruned', functions/dictload.py) instead of broadcast
-    in-memory dicts.  Gated by the SAME DuckDB oracles as the inmem path —
-    the two modes must be indistinguishable from the outside."""
-    import tempfile
-
-    key = (id(spark), sf_dir, "pruned")
-    if key not in _PIPELINE_CACHE:
-        src = build_src_pages(spark, sf_dir)
-        wd = tempfile.mkdtemp(prefix="wikiprep_pruned_")
-        _PIPELINE_CACHE[key] = run_pipeline(
-            spark, src, work_dir=wd, dict_mode="pruned")
-    return _PIPELINE_CACHE[key]
-
-
-def kg_pipeline_fused(spark: SparkSession, sf_dir: str) -> dict:
-    """The PRODUCTION configuration — fused two-pass (prescan-projection
-    parse + re-parse fused with the transform kernel, work-dir stage
-    writes; what bench.py measures) — gated by the same DuckDB oracles as
-    the default staged mode."""
-    import tempfile
-
-    key = (id(spark), sf_dir, "fused")
-    if key not in _PIPELINE_CACHE:
-        src_dir = tempfile.mkdtemp(prefix="wikiprep_fused_src_")
-        build_src_pages(spark, sf_dir).write.mode("overwrite").parquet(
-            src_dir + "/src")
-        _PIPELINE_CACHE[key] = run_pipeline(
-            spark, spark.read.parquet(src_dir + "/src"),
-            work_dir=tempfile.mkdtemp(prefix="wikiprep_fused_wd_"),
-            fuse_parse=True)
+        src_dir = tempfile.mkdtemp(prefix="wikiprep_src_") + "/src"
+        build_src_pages(spark, sf_dir).write.parquet(src_dir)
+        _PIPELINE_CACHE[key] = run_pipeline(spark,
+                                            spark.read.parquet(src_dir))
     return _PIPELINE_CACHE[key]
 
 
@@ -90,31 +62,6 @@ def _read_spread(spark, sf_dir, name):
 
 def kg_links(spark, sf_dir):
     return kg_pipeline(spark, sf_dir)["links"]
-
-
-def kg_links_pruned(spark, sf_dir):
-    """kg_links via the pruned-dictionary scale path; oracle == kg_links."""
-    return kg_pipeline_pruned(spark, sf_dir)["links"]
-
-
-def kg_template_inclusions_pruned(spark, sf_dir):
-    """kg_template_inclusions via the pruned-dictionary scale path (the
-    template-body lookups exercise RowGroupPrunedDict.get on every
-    transclusion); oracle == kg_template_inclusions."""
-    return kg_pipeline_pruned(spark, sf_dir)["template_inclusions"]
-
-
-def kg_links_fused(spark, sf_dir):
-    """kg_links via the fused two-pass production mode; oracle == kg_links."""
-    return kg_pipeline_fused(spark, sf_dir)["links"]
-
-
-def kg_anchors_fused(spark, sf_dir):
-    """kg_anchors via the fused mode (anchors carry text offsets, the
-    most parse-sensitive output); oracle == kg_anchors."""
-    return kg_pipeline_fused(spark, sf_dir)["anchors"].select(
-        "target_id", "source_id", "anchor_text"
-    )
 
 
 def kg_anchors(spark, sf_dir):
@@ -868,10 +815,13 @@ QUERIES = {
     "kg_incoming_links": kg_incoming_links,
     "kg_redirect_closure": kg_redirect_closure,
     "kg_canonical_titles": kg_canonical_titles,
-    "kg_links_pruned": kg_links_pruned,
-    "kg_template_inclusions_pruned": kg_template_inclusions_pruned,
-    "kg_links_fused": kg_links_fused,
-    "kg_anchors_fused": kg_anchors_fused,
+    # names kept from the retired pipeline modes (fused, pruned
+    # dictionaries): each resolves to the one cached kg_pipeline run and
+    # keeps its oracle (plans/oracles.py)
+    "kg_links_pruned": kg_links,
+    "kg_template_inclusions_pruned": kg_template_inclusions,
+    "kg_links_fused": kg_links,
+    "kg_anchors_fused": kg_anchors,
     "graph_closure": graph_closure,
     "graph_components": graph_components,
     "graph_pagerank": graph_pagerank,

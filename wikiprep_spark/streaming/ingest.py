@@ -5,7 +5,7 @@ handled offline by tools/riffle.  Spark-natively, the same per-page
 transform runs unchanged under Structured Streaming: readStream on the
 src_pages directory -> the stage-0 parse + transform mapInPandas chain ->
 append-mode edge sinks.  The prescan dictionaries are a batch artifact
-(broadcast), matching the reference's prescan/transform split: new
+(a tagged parquet table), matching the reference's prescan/transform split: new
 pages are transformed against the latest published dictionary snapshot and
 dictionaries are refreshed by periodic batch prescans.
 
@@ -34,12 +34,12 @@ def stream_src_pages(spark: SparkSession, path: str,
     )
 
 
-def streaming_transform(src_stream: DataFrame, env_source) -> DataFrame:
+def streaming_transform(src_stream: DataFrame, dicts_path: str) -> DataFrame:
     """The identical parse+transform chain, applied to a streaming
     DataFrame — mapInPandas is streaming-compatible as a stateless
-    projection.  ``env_source`` is the dicts path / broadcast exactly as in
-    batch transform_pages."""
-    return transform_pages(parse_pages(src_stream), env_source)
+    projection.  ``dicts_path`` is the dictionary parquet exactly as in
+    batch transform_pages (a run_pipeline result's "_dicts_path")."""
+    return transform_pages(parse_pages(src_stream), dicts_path)
 
 
 def start_edge_sink(transformed: DataFrame, out_dir: str,
