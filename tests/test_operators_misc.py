@@ -55,6 +55,63 @@ def test_connected_components(spark):
     assert got == {(1, 1), (2, 1), (3, 1), (7, 7), (8, 7), (9, 9)}
 
 
+def _union_find_components(edges):
+    """{node: min node of its undirected component}, pure Python."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for s, d in edges:
+        parent.setdefault(s, s)
+        parent.setdefault(d, d)
+        rs, rd = find(s), find(d)
+        if rs != rd:
+            parent[max(rs, rd)] = min(rs, rd)
+    return {n: find(n) for n in parent}
+
+
+# a path whose ids ascend away from one end, so the minimum label must
+# travel the whole length: 2 rounds do not finish it
+_CC_PATH = [(i, i + 1) for i in range(1, 40)]
+_CC_CASES = {
+    "path": _CC_PATH,
+    "disjoint": [(1, 2), (2, 3), (7, 8), (20, 21), (21, 22), (22, 20)],
+    "self_loop": [(9, 9), (4, 5)],
+    "empty": [],
+}
+
+
+def _cc_edges(spark, edges, ids):
+    if ids == "string":
+        edges = [("t%d" % s, "t%d" % d) for s, d in edges]
+    return edges, spark.createDataFrame(edges, "src %s, dst %s" % (ids, ids))
+
+
+@pytest.mark.parametrize("ids", ["long", "string"])
+@pytest.mark.parametrize("case", sorted(_CC_CASES))
+def test_connected_components_oracle(spark, case, ids):
+    """Components and min labels match union-find for long ids and for
+    the same graph relabelled to strings (compared as strings, so "t10"
+    sorts before "t9")."""
+    edges, df = _cc_edges(spark, _CC_CASES[case], ids)
+    got = {tuple(r) for r in graph.connected_components(df).collect()}
+    assert got == set(_union_find_components(edges).items())
+
+
+@pytest.mark.parametrize("ids", ["long", "string"])
+def test_connected_components_path_needs_three_rounds(spark, ids):
+    """The path case is long enough that a 2-round cap leaves it
+    unconverged, so the oracle test above runs the probe past round 2."""
+    edges, df = _cc_edges(spark, _CC_PATH, ids)
+    got = {tuple(r) for r in graph.connected_components(
+        df, max_iterations=2).collect()}
+    assert got != set(_union_find_components(edges).items())
+
+
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.createDataFrame(
@@ -475,9 +532,14 @@ def test_ivf_kmeans_refine(spark):
     b = similarity.ivf_kmeans_refine(emb.repartition(7), seeds, n_iters=2)
     assert a == b  # exact equality, not approx
 
-    before = similarity.ivf_inertia(emb, seeds)
-    after = similarity.ivf_inertia(emb, a)
-    assert after <= before + 1e-12
+    def inertia(centroids):
+        # mean cosine distance to the nearest centroid, the spherical-
+        # kmeans objective: the first ranked entry's neg is -max cosine
+        best = F.element_at(
+            similarity._centroid_ranking(centroids, "embedding"), 1)
+        return emb.select(F.avg(F.lit(1.0) + best["neg"])).first()[0]
+
+    assert inertia(a) <= inertia(seeds) + 1e-12
 
     # a centroid no vector chooses survives refinement unchanged: cosine
     # is scale-invariant, so 2x seed 0 ties with seed 0 on every vector

@@ -8,6 +8,7 @@ edges, self-loops).
 """
 
 import itertools
+import re
 
 from wikiprep_spark.operators.graph import triangle_counts
 
@@ -67,3 +68,27 @@ def test_duplicate_reversed_and_self_edges(spark):
     edges = [(1, 2), (2, 1), (2, 3), (3, 1), (1, 1), (3, 2), (1, 3)]
     got = _check(spark, edges)
     assert got[1] == (2, 1, 1.0) and got[2] == (2, 1, 1.0)
+
+
+def test_broadcast_closing_edges_only_for_integral_ids(spark):
+    """The closing semi-join broadcasts the oriented edge list only when
+    its ids are integral (a row count bounds bytes only for fixed-width
+    ids); string ids keep the shuffle semi-join.  Both give the oracle's
+    counts."""
+    k4 = [(a, b) for a, b in itertools.combinations([1, 2, 3, 4], 2)]
+    edge_list = k4 + [(4, 5), (5, 6), (6, 4), (6, 7)]
+    plans = {}
+    for ids, edges in (
+        ("long", edge_list),
+        ("string", [("n%d" % s, "n%d" % d) for s, d in edge_list]),
+    ):
+        df = spark.createDataFrame(edges, "src %s, dst %s" % (ids, ids))
+        out = triangle_counts(df)
+        # the planned strategy, before AQE re-plans small stages at run time
+        plans[ids] = out._jdf.queryExecution().executedPlan().toString()
+        got = {r["node"]: (r["degree"], r["n_triangles"], r["clustering"])
+               for r in out.collect()}
+        assert got == _py_triangles(edges), ids
+    assert "BroadcastHashJoin" in plans["long"]
+    assert re.search(r"BroadcastHashJoin .*LeftSemi", plans["long"])
+    assert not re.search(r"BroadcastHashJoin .*LeftSemi", plans["string"])

@@ -64,6 +64,63 @@ def _token_sets(docs: DataFrame, id_col, text_col,
     )
 
 
+def _ordered_pairs(joined: DataFrame, id_col: str) -> DataFrame:
+    """Distinct (``{id}_a``, ``{id}_b``) pairs with a < b from a self-join
+    of two frames aliased ``l`` and ``r``."""
+    a, b = F.col("l." + id_col), F.col("r." + id_col)
+    return (joined.where(a < b)
+            .select(a.alias(id_col + "_a"), b.alias(id_col + "_b"))
+            .distinct())
+
+
+def lsh_candidates(banded: DataFrame, id_col: str,
+                   max_bucket: int | None = None) -> DataFrame:
+    """LSH candidate pairs: a banded (id, band, bucket) frame self-joined on
+    its (band, bucket) cell -> distinct (``{id}_a``, ``{id}_b``), a < b.
+
+    ``max_bucket`` is the hub-bucket guard: a cell holding k ids yields
+    k^2/2 candidate rows, so cells larger than the cap are dropped (their
+    members still pair up in their other bands).  The guard is one window
+    pass over the (band, bucket)-partitioned data, and the self-join
+    shuffles on the same key.  Without the cap, an explicit exchange on the
+    join key lets BOTH self-join sides reuse it (ReusedExchange) instead of
+    recomputing the banding chain per side — measured 12x at sf0.1."""
+    if max_bucket is not None:
+        w = Window.partitionBy("band", "bucket")
+        banded = (
+            banded.withColumn("_bsz", F.count("*").over(w))
+            .where(F.col("_bsz") <= max_bucket)
+            .drop("_bsz")
+        )
+    else:
+        banded = banded.repartition("band", "bucket")
+    return _ordered_pairs(
+        banded.alias("l").join(banded.alias("r"), ["band", "bucket"]),
+        id_col)
+
+
+def score_pairs(pairs: DataFrame, side: DataFrame, score, name: str,
+                ends=("_a", "_b")) -> DataFrame:
+    """Verify a pair frame: join the per-id ``side`` frame (its id column
+    first, then value columns) onto both ends of ``pairs`` (two id
+    columns), and return (both ids, ``name``) with ``name`` =
+    ``score(a, b)``.  ``a``/``b`` map each value column name to that end's
+    column; the ends are renamed with the ``ends`` suffixes."""
+    key, *vals = side.columns
+    ids = pairs.columns
+    for pair_col, end in zip(ids, ends):
+        pairs = pairs.join(side.select(
+            F.col(key).alias(pair_col),
+            *[F.col(c).alias(c + end) for c in vals]), pair_col)
+    a, b = ({c: F.col(c + end) for c in vals} for end in ends)
+    return pairs.select(*ids, score(a, b).alias(name))
+
+
+def _jaccard(a, b):
+    return (F.size(F.array_intersect(a["toks"], b["toks"]))
+            / F.size(F.array_union(a["toks"], b["toks"])))
+
+
 def token_jaccard_pairs(
     docs: DataFrame, id_col="doc_id", text_col="text", threshold=0.5,
     shingle: int = 1, hash_tokens: bool = False,
@@ -119,30 +176,10 @@ def token_jaccard_pairs(
         F.explode(F.slice(F.transform("ranked", lambda s: s["tok"]),
                           1, p)).alias("tok"),
     )
-    candidates = (
-        prefix.alias("l")
-        .join(prefix.alias("r"), "tok")
-        .where(F.col("l.doc") < F.col("r.doc"))
-        .select(F.col("l.doc").alias("doc_a"), F.col("r.doc").alias("doc_b"))
-        .distinct()
-    )
-    return (
-        candidates.join(
-            toks.select(F.col("doc").alias("doc_a"),
-                        F.col("toks").alias("toks_a")), "doc_a")
-        .join(
-            toks.select(F.col("doc").alias("doc_b"),
-                        F.col("toks").alias("toks_b")), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.size(F.array_intersect("toks_a", "toks_b"))
-                / F.size(F.array_union("toks_a", "toks_b"))
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    candidates = _ordered_pairs(prefix.alias("l").join(prefix.alias("r"),
+                                                       "tok"), "doc")
+    return score_pairs(candidates, toks, _jaccard, "jaccard").where(
+        F.col("jaccard") >= threshold)
 
 
 def minhash_signatures(
@@ -175,6 +212,24 @@ def minhash_signatures(
     return toks.select("doc", F.array(*sig_cols).alias("sig"))
 
 
+def _minhash_bands(sigs: DataFrame, num_hashes: int,
+                   bands: int) -> DataFrame:
+    """(doc, band, bucket): each band's bucket is the xxhash64 of its
+    ``num_hashes // bands`` consecutive signature rows."""
+    rows = num_hashes // bands
+    return sigs.select(
+        "doc",
+        F.explode(F.array(*[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.xxhash64(F.slice("sig", b * rows + 1, rows)
+                           .cast("string")).alias("bucket"),
+            )
+            for b in range(bands)
+        ])).alias("bb"),
+    ).select("doc", "bb.band", "bb.bucket")
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     id_col="doc_id",
@@ -190,80 +245,22 @@ def minhash_lsh_pairs(
 
     Banding keeps the join linear in the number of colliding candidates;
     at 100 TB the band-bucket key is the only shuffle key.  ``max_bucket``
-    is the production hub-bucket guard: a (band, bucket) cell holding k
-    docs yields k^2/2 candidate rows, so one boilerplate bucket with 10^6
-    docs would emit 10^12 rows before AQE could split anything — buckets
-    larger than the cap are dropped from candidate generation (their
-    members still pair up in their other bands, which is why dropping a
-    hub band-cell costs little recall).  Pass None to disable (exhaustive
-    mode for small corpora / oracle-gated runs).
+    is the production hub-bucket guard (lsh_candidates): one boilerplate
+    bucket with 10^6 docs would emit 10^12 rows before AQE could split
+    anything.  Pass None to disable (exhaustive mode for small corpora /
+    oracle-gated runs).
     Returns (doc_a, doc_b, jaccard).
     """
-    rows_per_band = num_hashes // bands
     # ONE token-set materialization feeds the signature chain AND both
     # exact-verify sides (previously three independent executions of the
     # shingling chain — the jaccard/winnow checkpoint pattern)
     toks = _token_sets(docs, id_col, text_col, shingle).localCheckpoint()
     sigs = minhash_signatures(docs, id_col, text_col, num_hashes, shingle,
                               toks=toks)
-    banded = sigs.select(
-        "doc",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.slice("sig", b * rows_per_band + 1,
-                                    rows_per_band).cast("string")
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc", "bb.band", "bb.bucket")
-    if max_bucket is not None:
-        # one window pass over the (band, bucket)-partitioned data; the
-        # subsequent self-join shuffles on the same key, so the guard adds
-        # no extra wide dependency beyond the count
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band", "bucket")
-        banded = (
-            banded.withColumn("_bsz", F.count("*").over(w))
-            .where(F.col("_bsz") <= max_bucket)
-            .drop("_bsz")
-        )
-    else:
-        # materialize one exchange on the join key so BOTH self-join sides
-        # reuse it (ReusedExchange): without this, Spark recomputes the
-        # full signature chain per side — measured 12x slower at sf0.1
-        banded = banded.repartition("band", "bucket")
-    candidates = (
-        banded.alias("l")
-        .join(banded.alias("r"), ["band", "bucket"])
-        .where(F.col("l.doc") < F.col("r.doc"))
-        .select(F.col("l.doc").alias("doc_a"), F.col("r.doc").alias("doc_b"))
-        .distinct()
-    )
-    verified = (
-        candidates.join(
-            toks.select(F.col("doc").alias("doc_a"),
-                        F.col("toks").alias("toks_a")), "doc_a")
-        .join(
-            toks.select(F.col("doc").alias("doc_b"),
-                        F.col("toks").alias("toks_b")), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.size(F.array_intersect("toks_a", "toks_b"))
-                / F.size(F.array_union("toks_a", "toks_b"))
-            ).alias("jaccard"),
-        )
-    )
-    return verified.where(F.col("jaccard") >= threshold)
+    candidates = lsh_candidates(_minhash_bands(sigs, num_hashes, bands),
+                                "doc", max_bucket)
+    return score_pairs(candidates, toks, _jaccard, "jaccard").where(
+        F.col("jaccard") >= threshold)
 
 
 def minhash_lsh_bucket_stats(
@@ -279,25 +276,8 @@ def minhash_lsh_bucket_stats(
     count plus a ``dropped`` flag under the given cap.  Aggregate this to
     report how many buckets/docs the guard excluded — the metric the
     production pipeline logs alongside the dedup output."""
-    rows_per_band = num_hashes // bands
     sigs = minhash_signatures(docs, id_col, text_col, num_hashes, shingle)
-    banded = sigs.select(
-        "doc",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.slice("sig", b * rows_per_band + 1,
-                                    rows_per_band).cast("string")
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc", "bb.band", "bb.bucket")
+    banded = _minhash_bands(sigs, num_hashes, bands)
     stats = banded.groupBy("band", "bucket").agg(
         F.count("*").cast("long").alias("n_docs")
     )
@@ -331,25 +311,12 @@ def near_dup_groups(
     Scale shape: the pair join is the LSH machinery above; the clustering
     is O(log diameter) label-propagation rounds over the (tiny) pair
     graph, not the corpus."""
-    from wikiprep_spark.operators.graph import connected_components
+    from wikiprep_spark.operators.graph import component_representatives
 
     pairs = minhash_lsh_pairs(docs, id_col, text_col, num_hashes, bands,
                               threshold, shingle, max_bucket)
-    cc = connected_components(
-        pairs.select(F.col("doc_a").alias("src"),
-                     F.col("doc_b").alias("dst"))
-    )
-    return (
-        docs.select(F.col(id_col).alias("doc_id"))
-        .join(cc.withColumnRenamed("node", "doc_id"), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("component", F.col("doc_id"))
-            .alias("representative_id"),
-            (F.coalesce("component", F.col("doc_id")) != F.col("doc_id"))
-            .alias("is_duplicate"),
-        )
-    )
+    return component_representatives(
+        docs.select(F.col(id_col).alias("doc_id")), pairs)
 
 
 def simhash(docs: DataFrame, id_col="doc_id", text_col="text",

@@ -1,19 +1,29 @@
-"""Iterative graph operators: transitive closure and connected components.
+"""Graph operators over DataFrame edge lists: transitive closure,
+connected components, PageRank and triangle counts.  No GraphFrames
+dependency.
 
 The north rule requires canonicalization beyond the reference's 1-hop
 redirect semantics: a full redirect transitive closure (exposed as a
 separate canonical_map — the P/R-gated edges keep the reference's 1-hop +
 drop-double rule) and connected components over title-equivalence edges.
 
-Both are driver-side loops over DataFrames with pointer jumping
-(path halving), so the number of shuffle rounds is O(log diameter), with
-``localCheckpoint`` per round to cut lineage growth.  No GraphFrames
-dependency.
+- ``transitive_closure_roots`` and ``connected_components`` are
+  driver-side loops with pointer jumping (path halving), so the number of
+  shuffle rounds is O(log diameter), with ``localCheckpoint`` per round to
+  cut lineage growth.  Each has ONE convergence probe that rides the
+  round's checkpoint job as an ``Observation``: the closure sums depths,
+  the components loop asks whether any row's label changed (exact for
+  any orderable label type — long ids and title strings alike).
+  ``component_representatives`` turns a pair graph into the min-id
+  representative decision both near-dup operators return.
+- ``pagerank`` runs a fixed number of iterations, no probe.
+- ``triangle_counts`` is one pass: degree-ordered orientation, wedges,
+  and a closing semi-join.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, Observation, functions as F, types as T
 
 
 def transitive_closure_roots(
@@ -32,11 +42,9 @@ def transitive_closure_roots(
     # ONE frame suffices: the frontier (node -> current endpoint, depth)
     # and the jump table are identical by induction — both start as the
     # edge list and both square each round — so the loop maintains only
-    # the jump table and renames it at the end.  (The previous version
-    # carried both, plus an isEmpty probe that re-executed the join:
-    # 3 jobs per round instead of 2, measured ~2x slower.)
-    from pyspark.sql import Observation
-
+    # the jump table and renames it at the end.  (Carrying both plus a
+    # separate probe job that re-executed the join cost 3 jobs per round
+    # instead of 2, measured ~2x slower.)
     def jump_once(j):
         return (
             j.alias("a")
@@ -99,7 +107,9 @@ def connected_components(
 
     Each round: every node adopts the minimum label among itself and its
     neighbors' labels, then labels are compressed by pointing at the label's
-    own label.  Converges in O(log diameter) rounds on most graphs.
+    own label.  Converges in O(log diameter) rounds on most graphs; the
+    loop stops after the first round in which no label changed, so node
+    ids of any orderable type (long ids, title strings) share one probe.
     """
     sym = (
         # both orientations from ONE pass over the edge producer: the
@@ -119,16 +129,11 @@ def connected_components(
         # Spark re-executes the whole upstream per consuming job
         .localCheckpoint()
     )
-    from pyspark.sql import Observation
-
     labels = (
         sym.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
     )
-    numeric = isinstance(labels.schema["component"].dataType,
-                         (T.LongType, T.IntegerType))
-    prev_sum = None
     for _ in range(max_iterations):
         neighbor_min = (
             sym.join(labels, sym.b == labels.node)
@@ -136,6 +141,8 @@ def connected_components(
             .agg(F.min("component").alias("nmin"))
             .withColumnRenamed("a", "node")
         )
+        # labels only ever decrease (least), so a row changed iff it took
+        # a smaller neighbor label here or a smaller label-of-label below
         new_labels = (
             labels.join(neighbor_min, "node", "left")
             .select(
@@ -143,6 +150,8 @@ def connected_components(
                 F.least(
                     F.col("component"), F.coalesce("nmin", F.col("component"))
                 ).alias("component"),
+                F.coalesce(F.col("nmin") < F.col("component"), F.lit(False))
+                .alias("changed"),
             )
         )
         # path compression: component <- label(component)
@@ -161,38 +170,40 @@ def connected_components(
                 F.least(
                     F.col("component"), F.coalesce("cc2", F.col("component"))
                 ).alias("component"),
+                (F.col("changed") | F.coalesce(
+                    F.col("cc2") < F.col("component"), F.lit(False)))
+                .alias("changed"),
             )
         )
-        # convergence probe.  For numeric node ids: labels only ever
-        # decrease (least), so the label sum strictly decreases iff
-        # anything changed; the probe RIDES the checkpoint job via the
-        # Observation API (one job per round instead of two), and
-        # decimal(38,0) cannot overflow at any node-id scale.
-        # Non-numeric labels (title strings) fall back to the join-based
-        # changed check.
-        labels_prev = labels
-        if numeric:
-            obs = Observation()
-            compressed = compressed.observe(
-                obs, F.sum(F.col("component").cast("decimal(38,0)"))
-                .alias("s"))
-        labels = compressed.localCheckpoint()
-        if numeric:
-            new_sum = obs.get["s"]
-            if new_sum is None:
-                break  # empty edge set: sum() is NULL, nothing to propagate
-            if prev_sum is not None and new_sum == prev_sum:
-                break
-            prev_sum = new_sum
-        else:
-            changed = (
-                labels.alias("n")
-                .join(labels_prev.alias("o"), "node")
-                .where(F.col("n.component") != F.col("o.component"))
-            )
-            if changed.isEmpty():
-                break
+        # the convergence probe RIDES the checkpoint job (one job per
+        # round): stop once no row changed — max() is NULL on an empty
+        # edge set, where there is nothing to propagate either
+        obs = Observation()
+        labels = (
+            compressed.observe(obs, F.max("changed").alias("changed"))
+            .localCheckpoint()
+            .select("node", "component")
+        )
+        if not obs.get["changed"]:
+            break
     return labels
+
+
+def component_representatives(ids: DataFrame, pairs: DataFrame) -> DataFrame:
+    """The near-dup DECISION tail: for every id of the one-column ``ids``
+    frame, (id, representative_id, is_duplicate), where the representative
+    is the minimum id of its connected component in the undirected graph
+    of ``pairs`` (its first two columns), or the id itself when unpaired.
+    The component map is joined back to ``ids`` (broadcast when small)."""
+    (key,) = ids.columns
+    src, dst = pairs.columns[:2]
+    cc = connected_components(pairs, src, dst)
+    rep = F.coalesce("component", F.col(key))
+    return (
+        ids.join(cc.withColumnRenamed("node", key), key, "left")
+        .select(key, rep.alias("representative_id"),
+                (rep != F.col(key)).alias("is_duplicate"))
+    )
 
 
 def pagerank(
@@ -276,10 +287,11 @@ def redirect_canonical_map(redirects: DataFrame) -> DataFrame:
     )
 
 
-# closing-edge broadcast bound for triangle_counts: 8M canonical edges
-# (~a few hundred MB as a built hash relation) — comfortably inside
-# executor memory and the 8 GB broadcast cap; larger graphs keep the
-# shuffle semi-join
+# closing-edge broadcast bound for triangle_counts: 8M canonical edges of
+# two integral ids (~a few hundred MB as a built hash relation) —
+# comfortably inside executor memory and the 8 GB broadcast cap; larger
+# graphs, and ids of any other type (title strings have no fixed width),
+# keep the shuffle semi-join
 TRIANGLE_BROADCAST_MAX_EDGES = 8_000_000
 
 
@@ -361,8 +373,11 @@ def triangle_counts(edges: DataFrame, src: str = "src",
     # exchange (guide §3.1: broadcast replaces the shuffle of the BIG
     # side); past the bound, fall back to the shuffle semi-join.  The
     # checkpointed leaf defeats size estimation, hence the explicit
-    # count-guarded hint.
-    if n_edges <= TRIANGLE_BROADCAST_MAX_EDGES:
+    # count-guarded hint — a row count bounds bytes only for fixed-width
+    # integral ids.
+    integral = all(isinstance(edges.schema[c].dataType, T.IntegralType)
+                   for c in (src, dst))
+    if integral and n_edges <= TRIANGLE_BROADCAST_MAX_EDGES:
         closing = F.broadcast(closing)
     tris = wedges.join(closing, ["v1", "v2"], "left_semi")
     per_node = (

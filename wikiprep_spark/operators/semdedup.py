@@ -19,8 +19,9 @@ re-derives the full decision surface independently:
   seeds without touching the decision logic, at the cost of the oracle
   becoming literal-pinned.
 - assignment = argmax cosine over the LITERAL centroid array — a pure
-  projection on the frame that carries the vectors (zero join, the
-  operators/similarity.py quantizer), ties broken by centroid id.
+  projection on the frame that carries the vectors (zero join): the first
+  entry of similarity._centroid_ranking, the IVF coarse quantizer, whose
+  ascending (-cosine, centroid id) sort breaks ties to the lower id.
 - the within-cluster order is (centroid_cosine DESC, vec_id ASC) on the
   UNROUNDED cosine — identical left-to-right double folds make it
   bit-identical across engines (same contract as sim_cosine_topk).
@@ -31,14 +32,16 @@ clusters stay small (the paper uses 100k clusters for LAION), the pair
 join's per-key fanout is bounded by the cluster size; a ``max_cluster``
 guard excludes degenerate clusters from the pair step (conservative:
 their members are all KEPT, never silently dropped), with the same
-observability contract as the LSH hub-bucket guards in operators/dedup.
+observability contract as the LSH hub-bucket guard (dedup.lsh_candidates).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from wikiprep_spark.operators.similarity import _dot, _norm
+from wikiprep_spark.operators.similarity import (
+    _centroid_ranking, _cosine, _vectors,
+)
 
 
 def semdedup_seed_centroids(emb: DataFrame, n_clusters: int = 16,
@@ -57,31 +60,6 @@ def semdedup_seed_centroids(emb: DataFrame, n_clusters: int = 16,
     )
     return [(i, [float(x) for x in r[vec_col]])
             for i, r in enumerate(seeds)]
-
-
-def _best_centroid(centroids: list, vec_col: str,
-                   norm_col: str | None = None):
-    """(cluster_id, centroid_cosine) struct column: argmax cosine over the
-    literal centroids, ties to the lower centroid id — a projection, not a
-    join.  Folds left-to-right exactly like the DuckDB twin.  Centroid
-    norms fold driver-side and the row norm can be hoisted to a column —
-    both bit-identical to the inline folds (operators/similarity.py
-    _literal_norm)."""
-    from wikiprep_spark.operators.similarity import _literal_norm
-
-    v = F.col(vec_col).cast("array<double>")
-    vnorm = F.col(norm_col) if norm_col else _norm(v)
-    scored = []
-    for cid, cvec in centroids:
-        lit = F.array(*[F.lit(float(x)) for x in cvec])
-        cos = _dot(v, lit) / (vnorm * F.lit(_literal_norm(cvec)))
-        scored.append(F.struct(
-            (-cos).alias("neg"), F.lit(cid).alias("cluster_id")))
-    best = F.element_at(F.array_sort(F.array(*scored)), 1)
-    return F.struct(
-        best["cluster_id"].alias("cluster_id"),
-        (-best["neg"]).alias("centroid_cos"),
-    )
 
 
 def semantic_dedup(
@@ -108,20 +86,21 @@ def semantic_dedup(
     if centroids is None:
         centroids = semdedup_seed_centroids(
             emb, n_clusters, id_col, vec_col)
-    v = F.col(vec_col).cast("array<double>")
     # spread a one-task scan (operators/spread.py) so the quantizer
     # projection parallelizes; hoist the row norm once per vector and
-    # reuse it for the quantizer AND the pair test below (bit-identical)
-    assigned = spread_small_scan(emb).select(
-        F.col(id_col).alias("vec_id"),
-        v.alias("v"),
-    ).withColumn("_n", _norm(F.col("v"))).select(
-        "vec_id", "v", "_n",
-        _best_centroid(centroids, vec_col="v", norm_col="_n").alias("bc"),
+    # reuse it for the quantizer AND the pair test below (bit-identical).
+    # The nearest centroid is the first of the ranking: its ``-neg`` is
+    # the centroid cosine, and ties sort to the lower centroid id.
+    assigned = _vectors(
+        spread_small_scan(emb), id_col, vec_col, ("vec_id", "v", "_n"),
     ).select(
         "vec_id", "v", "_n",
-        F.col("bc.cluster_id").alias("cluster_id"),
-        F.col("bc.centroid_cos").alias("centroid_cos"),
+        F.element_at(_centroid_ranking(centroids, "v", "_n"), 1)
+        .alias("bc"),
+    ).select(
+        "vec_id", "v", "_n",
+        F.col("bc.centroid").alias("cluster_id"),
+        (-F.col("bc.neg")).alias("centroid_cos"),
     )
     w = Window.partitionBy("cluster_id").orderBy(
         F.desc("centroid_cos"), F.asc("vec_id"))
@@ -154,8 +133,7 @@ def semantic_dedup(
         F.col("v").alias("vi"),
         F.col("_n").alias("ni"),
     )
-    pair_cos = _dot(F.col("vi"), F.col("vj")) / (
-        F.col("ni") * F.col("nj"))
+    pair_cos = _cosine(F.col("vi"), F.col("vj"), F.col("ni"), F.col("nj"))
     dropped = (
         late.join(early, "cluster_id")
         .where(F.col("rj") < F.col("ri"))

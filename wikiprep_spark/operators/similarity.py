@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from wikiprep_spark.operators.dedup import lsh_candidates, score_pairs
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -26,13 +28,58 @@ def _norm(a):
     )
 
 
-def with_unit_vectors(emb: DataFrame, vec_col="embedding") -> DataFrame:
-    """Pre-normalize embeddings so cosine becomes a plain dot product."""
-    n = _norm(F.col(vec_col).cast("array<double>"))
-    return emb.withColumn(
-        "_unit",
-        F.transform(F.col(vec_col).cast("array<double>"),
-                    lambda v: v / n),
+def _cosine(u, v, nu, nv):
+    """cos(u, v) given the hoisted norms ``nu`` and ``nv``."""
+    return _dot(u, v) / (nu * nv)
+
+
+def _pair_cosine(a, b):
+    """``score_pairs`` score over ``_vectors`` sides named (vec, v, n)."""
+    return _cosine(a["v"], b["v"], a["n"], b["n"])
+
+
+def _vectors(df: DataFrame, id_col: str, vec_col: str, names,
+             *extra) -> DataFrame:
+    """(id, vector as array<double>, its norm, *extra) under ``names``.
+
+    The norm is hoisted to one column per VECTOR instead of one evaluation
+    per PAIR: ``_norm`` is a deterministic fold over the same array, so
+    the value is bit-identical either way, but the per-pair work drops
+    from dot+2 norms to the dot alone (the pair side is the big one)."""
+    i, v, n = names
+    return df.select(
+        F.col(id_col).alias(i),
+        F.col(vec_col).cast("array<double>").alias(v),
+        *extra,
+    ).withColumn(n, _norm(F.col(v)))
+
+
+def _query_cosines(corpus: DataFrame, qs: DataFrame, on=None) -> DataFrame:
+    """(query_id, neighbor_id, cosine) for every broadcast query against
+    the corpus rows it joins ``on`` (all of them when None), self-matches
+    excluded.  The sides come from ``_vectors`` as (neighbor_id, cvec,
+    _cn) and (query_id, qvec, _qn)."""
+    return corpus.join(F.broadcast(qs), on).where(
+        F.col("neighbor_id") != F.col("query_id")
+    ).select(
+        "query_id", "neighbor_id",
+        _cosine(F.col("cvec"), F.col("qvec"), F.col("_cn"), F.col("_qn"))
+        .alias("cosine"),
+    )
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """The top-k tail: rank each query's neighbors by (cosine desc,
+    neighbor_id) and keep ranks 1..k, cosine rounded 6."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id",
+                F.col("rank").cast("long").alias("rank"),
+                F.round("cosine", 6).alias("cosine"))
     )
 
 
@@ -49,39 +96,9 @@ def cosine_topk(
     big-corpus problem); ranking is a per-query window with a deterministic
     (cosine desc, neighbor_id) tie-break.  Self-matches are excluded.
     """
-    # norms hoisted to one column per VECTOR instead of one evaluation per
-    # PAIR: _norm is a deterministic fold over the same array, so the
-    # value is bit-identical either way, but the per-pair HOF work drops
-    # from dot+2 norms to the dot alone (the pair side is the big one)
-    corpus = emb.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cvec"),
-    ).withColumn("_cn", _norm(F.col("cvec")))
-    qs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qvec"),
-    ).withColumn("_qn", _norm(F.col("qvec")))
-    scored = corpus.join(F.broadcast(qs)).where(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    scored = scored.select(
-        "query_id",
-        "neighbor_id",
-        (
-            _dot(F.col("cvec"), F.col("qvec"))
-            / (F.col("_cn") * F.col("_qn"))
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id",
-                F.col("rank").cast("long").alias("rank"),
-                F.round("cosine", 6).alias("cosine"))
-    )
+    corpus = _vectors(emb, id_col, vec_col, ("neighbor_id", "cvec", "_cn"))
+    qs = _vectors(queries, id_col, vec_col, ("query_id", "qvec", "_qn"))
+    return _topk(_query_cosines(corpus, qs), k)
 
 
 def hyperplane_values(dim: int, seed: int) -> list:
@@ -100,17 +117,24 @@ def _hyperplane(dim: int, seed: int):
     return F.array(*[F.lit(v) for v in hyperplane_values(dim, seed)])
 
 
+def _sign_bucket(v, dim: int, seeds):
+    """Bucket id whose bit p is the sign of ``v`` against the hyperplane of
+    the p-th seed."""
+    bucket = F.lit(0)
+    for p, seed in enumerate(seeds):
+        side = _dot(v, _hyperplane(dim, seed=seed)) > 0
+        bucket = bucket + F.when(side, F.lit(1 << p)).otherwise(F.lit(0))
+    return bucket
+
+
 def lsh_bucket(emb: DataFrame, dim: int, n_planes: int = 8,
                vec_col="embedding") -> DataFrame:
     """Random-hyperplane LSH: bucket = sign bits against n_planes fixed
     hyperplanes. Adds a ``bucket`` int column; one narrow projection, no
     shuffle."""
-    bucket = F.lit(0)
     v = F.col(vec_col).cast("array<double>")
-    for p in range(n_planes):
-        side = _dot(v, _hyperplane(dim, seed=p + 1)) > 0
-        bucket = bucket + F.when(side, F.lit(1 << p)).otherwise(F.lit(0))
-    return emb.withColumn("bucket", bucket)
+    return emb.withColumn("bucket",
+                          _sign_bucket(v, dim, range(1, n_planes + 1)))
 
 
 def lsh_cosine_topk(
@@ -126,39 +150,11 @@ def lsh_cosine_topk(
     exact cosine rank within the bucket.  Same output shape as cosine_topk;
     recall < 1 by construction (the judge-visible approximation knob is
     n_planes)."""
-    bucketed = lsh_bucket(emb, dim, n_planes, vec_col)
-    corpus = bucketed.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cvec"),
-        "bucket",
-    ).withColumn("_cn", _norm(F.col("cvec")))
-    qs = lsh_bucket(queries, dim, n_planes, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qvec"),
-        "bucket",
-    ).withColumn("_qn", _norm(F.col("qvec")))
-    scored = corpus.join(F.broadcast(qs), "bucket").where(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    # per-vector norms (bit-identical hoist, see cosine_topk)
-    scored = scored.select(
-        "query_id",
-        "neighbor_id",
-        (
-            _dot(F.col("cvec"), F.col("qvec"))
-            / (F.col("_cn") * F.col("_qn"))
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id",
-                F.col("rank").cast("long").alias("rank"),
-                F.round("cosine", 6).alias("cosine"))
-    )
+    corpus = _vectors(lsh_bucket(emb, dim, n_planes, vec_col), id_col,
+                      vec_col, ("neighbor_id", "cvec", "_cn"), "bucket")
+    qs = _vectors(lsh_bucket(queries, dim, n_planes, vec_col), id_col,
+                  vec_col, ("query_id", "qvec", "_qn"), "bucket")
+    return _topk(_query_cosines(corpus, qs, "bucket"), k)
 
 
 def cosine_near_dup_pairs(
@@ -188,57 +184,23 @@ def cosine_near_dup_pairs(
 
     emb = spread_small_scan(emb)
     v = F.col(vec_col).cast("array<double>")
-    band_cols = []
-    for b in range(bands):
-        bucket = F.lit(0)
-        for p in range(planes_per_band):
-            seed = 1000 + b * planes_per_band + p
-            side = _dot(v, _hyperplane(dim, seed=seed)) > 0
-            bucket = bucket + F.when(side, F.lit(1 << p)).otherwise(F.lit(0))
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"), bucket.alias("bucket"))
-        )
+    band_cols = [
+        F.struct(F.lit(b).alias("band"), _sign_bucket(
+            v, dim, range(1000 + b * planes_per_band,
+                          1000 + (b + 1) * planes_per_band),
+        ).alias("bucket"))
+        for b in range(bands)
+    ]
     banded = emb.select(
         F.col(id_col).alias("vec"), F.explode(F.array(*band_cols)).alias("bb")
     ).select("vec", "bb.band", "bb.bucket")
-    if max_bucket is not None:
-        w = Window.partitionBy("band", "bucket")
-        banded = (
-            banded.withColumn("_bsz", F.count("*").over(w))
-            .where(F.col("_bsz") <= max_bucket)
-            .drop("_bsz")
-        )
-    else:
-        # one exchange on the join key, reused by both self-join sides
-        # (otherwise the hyperplane dot products run twice)
-        banded = banded.repartition("band", "bucket")
-    candidates = (
-        banded.alias("l")
-        .join(banded.alias("r"), ["band", "bucket"])
-        .where(F.col("l.vec") < F.col("r.vec"))
-        .select(F.col("l.vec").alias("vec_a"), F.col("r.vec").alias("vec_b"))
-        .distinct()
-    )
-    # per-vector norms computed ONCE on the vector side of the join — the
-    # candidate pair stream is orders of magnitude larger than the corpus,
-    # and _norm is a deterministic fold over the same array, so hoisting
-    # it out of the per-pair expression changes nothing but the work
+    candidates = lsh_candidates(banded, "vec", max_bucket)
+    # one projection with the norm folded inline from the cast, where
+    # _vectors projects twice
     vecs = emb.select(F.col(id_col).alias("vec"), v.alias("v"),
                       _norm(v).alias("n"))
-    verified = (
-        candidates.join(vecs.select(F.col("vec").alias("vec_a"),
-                                    F.col("v").alias("va"),
-                                    F.col("n").alias("na")), "vec_a")
-        .join(vecs.select(F.col("vec").alias("vec_b"),
-                          F.col("v").alias("vb"),
-                          F.col("n").alias("nb")), "vec_b")
-        .select(
-            "vec_a", "vec_b",
-            (_dot(F.col("va"), F.col("vb"))
-             / (F.col("na") * F.col("nb"))).alias("cosine"),
-        )
-    )
-    return verified.where(F.col("cosine") >= threshold)
+    return score_pairs(candidates, vecs, _pair_cosine, "cosine",
+                       ends=("a", "b")).where(F.col("cosine") >= threshold)
 
 
 def cosine_pairs_exact(
@@ -250,22 +212,12 @@ def cosine_pairs_exact(
     """Exact all-pairs cosine >= threshold (the correctness baseline for
     cosine_near_dup_pairs; quadratic — use the banded-LSH variant at
     corpus scale).  Returns (vec_a, vec_b, cosine), vec_a < vec_b."""
-    vecs = emb.select(F.col(id_col).alias("vec"),
-                      F.col(vec_col).cast("array<double>").alias("v"))
-    vecs = vecs.withColumn("n", _norm(F.col("v")))
-    a = vecs.select(F.col("vec").alias("vec_a"), F.col("v").alias("va"),
-                    F.col("n").alias("na"))
-    b = vecs.select(F.col("vec").alias("vec_b"), F.col("v").alias("vb"),
-                    F.col("n").alias("nb"))
-    return (
-        a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .select(
-            "vec_a", "vec_b",
-            (_dot(F.col("va"), F.col("vb"))
-             / (F.col("na") * F.col("nb"))).alias("cosine"),
-        )
-        .where(F.col("cosine") >= threshold)
-    )
+    vecs = _vectors(emb, id_col, vec_col, ("vec", "v", "n"))
+    pairs = vecs.select(F.col("vec").alias("vec_a")).join(
+        vecs.select(F.col("vec").alias("vec_b")),
+        F.col("vec_a") < F.col("vec_b"))
+    return score_pairs(pairs, vecs, _pair_cosine, "cosine",
+                       ends=("a", "b")).where(F.col("cosine") >= threshold)
 
 
 def embedding_near_dup_groups(
@@ -290,26 +242,13 @@ def embedding_near_dup_groups(
     is O(log diameter) label-propagation rounds over the (tiny) pair
     graph, not the corpus; the final join back to ``emb`` broadcasts the
     component map when it is small."""
-    from wikiprep_spark.operators.graph import connected_components
+    from wikiprep_spark.operators.graph import component_representatives
 
     pairs = cosine_near_dup_pairs(emb, dim, threshold, bands,
                                   planes_per_band, id_col, vec_col,
                                   max_bucket)
-    cc = connected_components(
-        pairs.select(F.col("vec_a").alias("src"),
-                     F.col("vec_b").alias("dst"))
-    )
-    return (
-        emb.select(F.col(id_col).alias("vec_id"))
-        .join(cc.withColumnRenamed("node", "vec_id"), "vec_id", "left")
-        .select(
-            "vec_id",
-            F.coalesce("component", F.col("vec_id"))
-            .alias("representative_id"),
-            (F.coalesce("component", F.col("vec_id")) != F.col("vec_id"))
-            .alias("is_duplicate"),
-        )
-    )
+    return component_representatives(
+        emb.select(F.col(id_col).alias("vec_id")), pairs)
 
 
 def _literal_norm(cvec: list) -> float:
@@ -340,7 +279,7 @@ def _centroid_ranking(centroids: list, vec_col: str,
     scored = []
     for cid, cvec in centroids:
         lit = F.array(*[F.lit(float(x)) for x in cvec])
-        cos = _dot(v, lit) / (vnorm * F.lit(_literal_norm(cvec)))
+        cos = _cosine(v, lit, vnorm, F.lit(_literal_norm(cvec)))
         scored.append(F.struct(
             (-cos).alias("neg"), F.lit(cid).alias("centroid")))
     return F.array_sort(F.array(*scored))
@@ -362,10 +301,7 @@ def ivf_assign(emb: DataFrame, centroids: list, id_col="vec_id",
     """Assign each vector to its ``n_probe`` nearest coarse centroids by
     cosine (IVF coarse quantization) via the literal-quantizer projection.
     Returns (id, centroid, probe_rank) with probe_rank 1..n_probe."""
-    staged = emb.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
-    ).withColumn("_n", _norm(F.col("_v")))
+    staged = _vectors(emb, id_col, vec_col, ("id", "_v", "_n"))
     ranked = F.slice(_centroid_ranking(centroids, "_v", "_n"), 1, n_probe)
     return staged.select(
         F.col("id"),
@@ -453,20 +389,6 @@ def ivf_kmeans_refine(emb: DataFrame, centroids: list, n_iters: int = 2,
     return centroids
 
 
-def ivf_inertia(emb: DataFrame, centroids: list, id_col="vec_id",
-                vec_col="embedding") -> float:
-    """Mean cosine distance (1 - cos) of every vector to its nearest
-    centroid — the spherical-kmeans objective the refinement minimizes."""
-    v = F.col(vec_col).cast("array<double>")
-    best = F.greatest(*[
-        _dot(v, F.array(*[F.lit(float(x)) for x in cvec]))
-        / (_norm(v) * F.lit(_literal_norm(cvec)))
-        for _, cvec in centroids
-    ])
-    row = emb.select(F.avg(F.lit(1.0) - best).alias("inertia")).first()
-    return float(row["inertia"])
-
-
 def ivf_cosine_topk(
     emb: DataFrame,
     queries: DataFrame,
@@ -494,16 +416,11 @@ def ivf_cosine_topk(
     # id would shuffle the full corpus once for nothing; the row norm is
     # hoisted once per vector (bit-identical) and reused by both the
     # quantizer (16 centroid cosines) and the pair scoring below
-    corpus = emb.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cvec"),
-    ).withColumn("_cn", _norm(F.col("cvec"))).withColumn(
-        "centroid", nearest_centroid_col(centroids, "cvec", "_cn")
-    )
-    qs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qvec"),
-    ).withColumn("_qn", _norm(F.col("qvec"))).select(
+    corpus = _vectors(emb, id_col, vec_col, ("neighbor_id", "cvec", "_cn"))
+    corpus = corpus.withColumn(
+        "centroid", nearest_centroid_col(centroids, "cvec", "_cn"))
+    qs = _vectors(queries, id_col, vec_col, ("query_id", "qvec", "_qn"))
+    qs = qs.select(
         "query_id", "qvec", "_qn",
         F.posexplode(
             F.slice(_centroid_ranking(centroids, "qvec", "_qn"),
@@ -511,20 +428,5 @@ def ivf_cosine_topk(
         ).alias("pos", "s"),
     ).select("query_id", "qvec", "_qn",
              F.col("s.centroid").alias("centroid"))
-    scored = corpus.join(F.broadcast(qs), "centroid").where(
-        F.col("neighbor_id") != F.col("query_id")
-    ).select(
-        "query_id", "neighbor_id",
-        (_dot(F.col("cvec"), F.col("qvec"))
-         / (F.col("_cn") * F.col("_qn"))).alias("cosine"),
-    ).dropDuplicates(["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id",
-                F.col("rank").cast("long").alias("rank"),
-                F.round("cosine", 6).alias("cosine"))
-    )
+    return _topk(_query_cosines(corpus, qs, "centroid")
+                 .dropDuplicates(["query_id", "neighbor_id"]), k)

@@ -1,10 +1,12 @@
 """Stage 0: src_pages(repo, path, commit, lang, content) -> parsed pages.
 
 The input table shape is fixed by the BASELINE input hint: one MediaWiki
-page XML record per row in ``content``.  Parsing happens once, in an
-Arrow-batched mapInPandas, and the result is checkpointed; all later stages
-read the parsed table with column pruning (prescan reads only the skinny
-identity columns, transform reads the text).
+page XML record per row in ``content``.  Parsing is an Arrow-batched
+mapInPandas, and the parsed table is never materialized: the fused
+two-pass pipeline (plans/pipeline.py) parses twice, once per pass —
+``parse_pages_prescan`` keeps text only for templates, which is all the
+prescan aggregation reads, and ``parse_pages`` feeds the transform kernel
+in the same python chain.
 
 ``seq`` is the total-order key replacing the reference's dump document
 order: the lexicographic (repo, path, commit) key.  Using the key itself
