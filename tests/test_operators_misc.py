@@ -270,64 +270,6 @@ def test_lsh_topk_subset_of_exact(spark):
     assert exact.count() == 15
 
 
-def test_sample_pages(spark):
-    from wikiprep_spark.sources.corpus import build_src_pages
-    from wikiprep_spark.sources.pages import sample_pages
-
-    src = build_src_pages(spark, "/root/testdata/sf0.001", limit=60)
-    n = src.count()
-    sampled = sample_pages(src, fraction=0.3, seed=7)
-    n_s = sampled.count()
-    assert 0 < n_s < n
-    # seeded: deterministic across runs
-    assert sample_pages(src, fraction=0.3, seed=7).count() == n_s
-    # sampled rows are a subset of the corpus
-    assert sampled.exceptAll(src).count() == 0
-
-
-def test_category_hierarchy(spark):
-    from wikiprep_spark.operators.stats import category_hierarchy
-
-    edges_df = spark.createDataFrame(
-        [(1, 100), (2, 100), (3, 200), (100, 200)],
-        "page_id long, category_id long",
-    )
-    got = {r["parent_id"]: list(r["member_ids"])
-           for r in category_hierarchy(edges_df).collect()}
-    assert got == {100: [1, 2], 200: [3, 100]}
-
-
-def test_template_inclusions_partitioned_write(spark, tmp_path):
-    from wikiprep_spark.operators.edges import (
-        write_template_inclusions_partitioned,
-    )
-
-    rows = [(p, t, 0, "name", f"v{p}") for p in range(50)
-            for t in ([11] if p % 2 else [11, 12])]  # 11 is the hub
-    df = spark.createDataFrame(
-        rows,
-        "page_id long, template_id long, incl_idx int, param string, "
-        "value string",
-    )
-    path = str(tmp_path / "tincl")
-    write_template_inclusions_partitioned(df, path, salt_buckets=4,
-                                           num_partitions=8)
-
-    back = spark.read.parquet(path)
-    assert back.count() == len(rows)
-    # partition pruning: reading one template touches only its directory
-    one = back.where(F.col("template_id") == 12)
-    files = one.select(F.input_file_name()).distinct().collect()
-    assert files and all("template_id=12" in r[0] for r in files)
-    assert one.count() == 25
-    # hub salting: template 11's rows span multiple files
-    hub_files = (
-        back.where(F.col("template_id") == 11)
-        .select(F.input_file_name()).distinct().count()
-    )
-    assert hub_files > 1
-
-
 def test_fused_pipeline_equality(spark, tmp_path):
     """The fused two-pass pipeline's lineage table equals a pure-Python
     oracle over the source rows, malformed records included: total rows,
@@ -437,67 +379,102 @@ def test_run_pipeline_rejects_unfused_mode(spark):
         run_pipeline(spark, None, fuse_parse=False)
 
 
-def test_dup_losers_from_src_equivalence(spark):
-    """JVM-side dup-id extraction must match the parse-derived one,
-    including on corpora with duplicate page ids AND malformed records:
-    a garbage record containing "<id>N</id>" must not join the dup set
-    (it would anti-join away the validly-parsed page with that id)."""
+def _page_rec(id_literal, title, body):
+    return ("<page><title>%s</title><id>%s</id><revision>"
+            "<timestamp>2008-01-01T00:00:00Z</timestamp>"
+            "<text>%s</text></revision></page>"
+            % (title, id_literal, body))
+
+
+def _live_vs_first_wins_oracle(spark, src):
+    """Live (page_id, seq) pairs after dup_losers, and the same set from a
+    pure-Python oracle of the one page-id rule (parse_page_record): sort
+    by seq, keep records it rejects with a NULL page_id (they are counted,
+    never losers), keep the first record per id.  Also returns how many
+    records the oracle rejected."""
     from wikiprep_spark.operators import prescan as P
+    from wikiprep_spark.sources.mediawiki_xml import parse_page_record
+    from wikiprep_spark.sources.pages import parse_pages, parse_pages_prescan
+
+    live = P.live_pages(parse_pages(src),
+                        P.dup_losers(parse_pages_prescan(src)))
+    got = {tuple(r) for r in live.select("page_id", "seq").collect()}
+
+    first, rejected = {}, set()
+    for r in sorted(src.collect(),
+                    key=lambda r: (r["repo"], r["path"], r["commit"])):
+        seq = "%s\x00%s\x00%s" % (r["repo"], r["path"], r["commit"])
+        try:
+            pid = parse_page_record(r["content"])["id"]
+        except ValueError:
+            rejected.add((None, seq))
+            continue
+        first.setdefault(pid, seq)
+    return got, set(first.items()) | rejected, len(rejected)
+
+
+def test_dup_losers_from_src_equivalence(spark):
+    """First page wins per id (bin/wikiprep:466-470): dup_losers computed
+    from the source rows equals the pure-Python oracle on a hostile
+    corpus — duplicate ids, malformed records that merely contain
+    "<id>N</id>", single and double wrapping, int64-overflowing ids."""
     from wikiprep_spark.sources.corpus import build_src_pages, _row
-    from wikiprep_spark.sources.pages import parse_pages
 
     src = build_src_pages(spark, "/root/testdata/sf0.001", limit=30)
-    # inject duplicate-id pages (same id 1005, different paths)
-    dup_rows = [
+    hostile = [
+        # duplicate id 1005 (also a corpus page) under two more paths
         ("wiki/dup", "a.xml", "c1", "wikitext",
          _row(1005, "Dup A", "text a")[4]),
         ("wiki/dup", "b.xml", "c2", "wikitext",
          _row(1005, "Dup B", "text b")[4]),
-        # malformed records that the python parser rejects; "!" sorts the
-        # seq key BEFORE every valid record, so if either leaked into the
-        # JVM dup set it would win min(seq) and evict a real page
+        # malformed records that merely contain "<id>N</id>" of a real
+        # page; "!" sorts their seq BEFORE every valid record, so if one
+        # counted as a page it would win its id and evict the real one
         ("!bad", "a.xml", "c0", "wikitext",
          "garbage <id>1001</id> not xml"),
         ("!bad", "b.xml", "c0", "wikitext",
          "<page><title>T</title><id>1002</id>"),
-        # wrapped record (valid; parser unwraps to the inner <page>)
+        # singly-wrapped 1005 (valid: the export shape, and it sorts
+        # first, so it is the 1005 that wins) and a doubly-wrapped one
+        # (rejected)
         ("!wrap", "w.xml", "c0", "wikitext",
          "<mediawiki>" + _row(1005, "Dup W", "text w")[4] + "</mediawiki>"),
-        # DOUBLY-wrapped record: both the python parser (one wrapping
-        # level only) and the JVM from_xml id rule must reject it —
-        # if only one path did, the dup sets would diverge (ADVICE r4)
         ("!wrap2", "w.xml", "c0", "wikitext",
          "<export><mediawiki>" + _row(1005, "Dup W2", "text w2")[4]
          + "</mediawiki></export>"),
-        # duplicate id OVERFLOWING int64 (ADVICE r4): both paths must
-        # reject it identically — python parse raises (page_id null),
-        # the JVM candidate scan try_casts it to NULL — so neither path
-        # produces a loser and the frames stay equal; with plain int()/
-        # cast the python side would accept what the JVM side nulls
+        # the same int64-overflowing id twice: both records are rejected,
+        # so neither is a page nor a loser
         ("!huge", "a.xml", "c0", "wikitext",
-         "<page><title>Huge A</title><id>99999999999999999999</id>"
-         "<revision><text>ha</text></revision></page>"),
+         _page_rec("99999999999999999999", "Huge A", "ha")),
         ("!huge", "b.xml", "c0", "wikitext",
-         "<page><title>Huge B</title><id>99999999999999999999</id>"
-         "<revision><text>hb</text></revision></page>"),
+         _page_rec("99999999999999999999", "Huge B", "hb")),
     ]
-    dup = spark.createDataFrame(
-        dup_rows,
+    src = src.unionByName(spark.createDataFrame(
+        hostile,
         "repo string, path string, commit string, lang string, "
-        "content string",
-    )
-    src = src.unionByName(dup)
+        "content string"))
 
-    parsed = parse_pages(src)
-    via_parse = {tuple(r) for r in P.live_pages(parsed)
-                 .select("page_id", "seq").collect()}
-    via_src = {tuple(r) for r in P.live_pages(
-        parsed, P.dup_losers_from_src(src)).select("page_id", "seq")
-        .collect()}
-    assert via_parse == via_src
-    # and the duplicate id appears exactly once
-    n = sum(1 for pid, _ in via_parse if pid == 1005)
-    assert n == 1
+    got, want, n_rejected = _live_vs_first_wins_oracle(spark, src)
+    assert n_rejected == 5
+    assert got == want
+    assert sum(1 for pid, _ in got if pid == 1005) == 1
+    assert (1005, "!wrap\x00w.xml\x00c0") in got
+
+
+def test_dup_losers_literal_id_forms(spark):
+    """'<id>007</id>' and '<id>7</id>' are the SAME page id under the
+    page-id rule, so the later one is a loser; 8 is a bystander."""
+    src = spark.createDataFrame(
+        [("r", "a.xml", "c1", "wikitext", _page_rec("007", "Padded", "a")),
+         ("r", "b.xml", "c2", "wikitext", _page_rec("7", "Bare", "b")),
+         ("r", "c.xml", "c3", "wikitext", _page_rec("8", "Other", "c"))],
+        "repo string, path string, commit string, lang string, "
+        "content string")
+
+    got, want, n_rejected = _live_vs_first_wins_oracle(spark, src)
+    assert n_rejected == 0
+    assert got == want
+    assert got == {(7, "r\x00a.xml\x00c1"), (8, "r\x00c.xml\x00c3")}
 
 
 def test_near_dup_groups(spark):
@@ -608,39 +585,9 @@ def test_shingle_dedup(spark, docs):
     assert inter < 0.2
 
 
-def test_dup_losers_literal_id_forms(spark):
-    """ADVICE r4: '<id>007</id>' and '<id>7</id>' are the SAME page id
-    under the int() rule of both parsers; the candidate scan must group
-    numerically (bigint cast) or the duplicate escapes detection."""
-    from wikiprep_spark.operators import prescan as P
-    from wikiprep_spark.sources.pages import parse_pages
-
-    def rec(id_literal, title, body):
-        return ("<page><title>%s</title><id>%s</id><revision>"
-                "<timestamp>2008-01-01T00:00:00Z</timestamp>"
-                "<text>%s</text></revision></page>"
-                % (title, id_literal, body))
-
-    src = spark.createDataFrame(
-        [("r", "a.xml", "c1", "wikitext", rec("007", "Padded", "a")),
-         ("r", "b.xml", "c2", "wikitext", rec("7", "Bare", "b")),
-         ("r", "c.xml", "c3", "wikitext", rec("8", "Other", "c"))],
-        "repo string, path string, commit string, lang string, "
-        "content string")
-    parsed = parse_pages(src)
-    via_parse = {tuple(r) for r in P.live_pages(parsed)
-                 .select("page_id", "seq").collect()}
-    via_src = {tuple(r) for r in P.live_pages(
-        parsed, P.dup_losers_from_src(src)).select("page_id", "seq")
-        .collect()}
-    assert via_parse == via_src
-    assert sum(1 for pid, _ in via_src if pid == 7) == 1  # dup caught
-    assert sum(1 for pid, _ in via_src if pid == 8) == 1
-
-
 def test_parse_page_record_single_wrap_only():
-    """The python parser accepts exactly one wrapping element — matching
-    what the JVM-side from_xml id rule can see (id | page.id)."""
+    """The parser accepts exactly one wrapping element — the MediaWiki
+    export shape, <page> under the root; deeper nesting is rejected."""
     from wikiprep_spark.sources.mediawiki_xml import (
         make_page_xml, parse_page_record)
 
@@ -654,11 +601,10 @@ def test_parse_page_record_single_wrap_only():
 
 
 def test_parse_page_record_id_bigint_grammar():
-    """The python id rule must match the JVM side exactly (ADVICE r4):
-    ids outside BIGINT range (which from_xml's BIGINT field nulls out,
-    and which would overflow the parsed table's long column) and int()
-    extensions like '1_2' underscore separators are REJECTED, not
-    silently accepted to diverge from the src-scan dup path."""
+    """The page-id grammar: a trimmed, optionally signed integer literal
+    ('007' is 7).  Ids outside BIGINT range (which would overflow the
+    parsed table's BIGINT page_id column) and int() extensions like '1_2'
+    underscore separators are REJECTED, not silently accepted."""
     from wikiprep_spark.sources.mediawiki_xml import parse_page_record
 
     def rec(id_literal):

@@ -19,16 +19,29 @@ from wikiprep_spark.functions.edges import (
 from wikiprep_spark.functions.page import TransformEnv, transform_one
 from wikiprep_spark.functions.prescan import prescan_pages
 from wikiprep_spark.plans.pipeline import run_pipeline
-from wikiprep_spark.sources.corpus import build_src_pages
+from wikiprep_spark.sources.corpus import _row, build_src_pages
 from wikiprep_spark.sources.mediawiki_xml import parse_page_record
 
 LIMIT = 60
 SF_DIR = "/root/testdata/sf0.001"
 
 
+# a disambiguation page whose first list line's anchor holds a tab: the
+# kernel replaces it (functions/edges.disambig_rows), and no writer may
+# let one through
+TAB_DISAMBIG = _row(9000, "Tabbed (disambiguation)",
+                    "{{dab}}\n* [[Doc 1|left\tright]] is an article\n"
+                    "* [[Doc 2]] is another")
+
+
 @pytest.fixture(scope="module")
 def corpus(spark):
-    return build_src_pages(spark, SF_DIR, limit=LIMIT).cache()
+    extra = spark.createDataFrame(
+        [TAB_DISAMBIG],
+        "repo string, path string, commit string, lang string, "
+        "content string")
+    return build_src_pages(spark, SF_DIR, limit=LIMIT).unionByName(
+        extra).cache()
 
 
 @pytest.fixture(scope="module")
@@ -147,6 +160,14 @@ def test_analytic_expectations(result):
            for r in result["disambig"].collect()}
     assert (1000 + 3 * n + 0, 0, 1000) in dis
     assert (1000 + 3 * n + 0, 1, 1003) in dis
+    tabbed = {(r["line_no"], r["target_id"], r["anchor_text"])
+              for r in result["disambig"].collect()
+              if r["disambig_id"] == 9000}
+    assert tabbed == {(0, 1001, "left right"), (1, 1002, "Doc 2")}
+    dis_props = [r["prop"] for r in result["triples"]
+                 .where("pred = 'disambiguates'").collect()]
+    assert "left right" in dis_props
+    assert not any("\t" in (p or "") for p in dis_props)
 
     ti = {(r["page_id"], r["template_id"], r["param"])
           for r in result["template_inclusions"].collect()}
@@ -160,12 +181,42 @@ def test_analytic_expectations(result):
     }
 
 
-def test_triples_single_scan_equivalence(result):
-    """triples_from_transformed (one scan) must equal triples_view (8-pass
-    per-edge derivation) as a multiset."""
-    from wikiprep_spark.operators import edges as edge_ops
+def _triples_view(links, anchors, categories, redirects, related,
+                  disambig, external, template_incl):
+    """Unified (subj, pred, obj, prop) triple stream as the union of the
+    eight per-kind edge tables — the P/R comparison surface (FIXTURES.md
+    §4), one scan per edge kind."""
+    from pyspark.sql import functions as F
 
-    eight_pass = edge_ops.triples_view(
+    def t(df, subj, pred, obj, prop=None):
+        return df.select(
+            F.col(subj).cast("string").alias("subj"),
+            F.lit(pred).alias("pred"),
+            F.col(obj).cast("string").alias("obj"),
+            (F.col(prop) if prop else F.lit(None)).cast("string").alias("prop"),
+        )
+
+    return (
+        t(links, "source_id", "links_to", "target_id")
+        .unionByName(t(anchors, "target_id", "anchored_by", "source_id",
+                       "anchor_text"))
+        .unionByName(t(categories, "page_id", "in_category", "category_id"))
+        .unionByName(t(redirects, "from_id", "redirects_to", "to_id",
+                       "to_title"))
+        .unionByName(t(related, "page_id", "related_to", "related_id"))
+        .unionByName(t(disambig, "disambig_id", "disambiguates", "target_id",
+                       "anchor_text"))
+        .unionByName(t(external, "source_id", "links_external", "url",
+                       "anchor"))
+        .unionByName(t(template_incl, "page_id", "includes_template",
+                       "template_id", "param"))
+    )
+
+
+def test_triples_single_scan_equivalence(result):
+    """triples_from_transformed (one scan) must equal _triples_view (8-pass
+    per-edge derivation) as a multiset."""
+    eight_pass = _triples_view(
         result["links"],
         result["anchors"],
         result["categories"].select("page_id", "category_id"),

@@ -5,7 +5,7 @@ Re-expression of ``prescan`` (``/root/reference/bin/wikiprep:440-480``),
 ``Wikiprep::Templates::prescan`` (Templates.pm:32-88) as a pure function over
 an ordered page stream.  This is the semantic oracle; the distributed
 version in operators/prescan.py reproduces exactly these outcomes with
-window functions (first-id-wins, first-title-wins, last-redirect-wins).
+min/max aggregations (first-id-wins, first-title-wins, last-redirect-wins).
 """
 
 from __future__ import annotations

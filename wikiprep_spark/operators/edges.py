@@ -86,8 +86,9 @@ def bare_urls_edges(transformed: DataFrame) -> DataFrame:
 
 
 def disambig_edges(transformed: DataFrame) -> DataFrame:
-    """(disambig_id, line_no, pos, target_id, anchor_text), tabs -> spaces;
-    one (line_no, null, null, null) row marks a link-free list line."""
+    """(disambig_id, line_no, pos, target_id, anchor_text); one (line_no,
+    null, null, null) row marks a link-free list line.  The kernel already
+    replaced tabs in the anchors (functions/edges.disambig_rows)."""
     d = transformed.where(_ok() & (F.col("is_disambig") == 1)).select(
         F.col("page_id").alias("disambig_id"),
         F.explode("disambig").alias("d"),
@@ -97,7 +98,7 @@ def disambig_edges(transformed: DataFrame) -> DataFrame:
         F.col("d.line_no").alias("line_no"),
         F.col("d.pos").alias("pos"),
         F.col("d.target_id").alias("target_id"),
-        F.regexp_replace(F.col("d.anchor"), "\t", " ").alias("anchor_text"),
+        F.col("d.anchor").alias("anchor_text"),
     )
 
 
@@ -113,39 +114,6 @@ def template_inclusion_edges(transformed: DataFrame) -> DataFrame:
         F.col("t.incl_idx").alias("incl_idx"),
         F.col("t.param").alias("param"),
         F.col("t.value").alias("value"),
-    )
-
-
-def write_template_inclusions_partitioned(
-    inclusions: DataFrame, path: str, salt_buckets: int = 16,
-    num_partitions: int | None = None,
-) -> None:
-    """Materialize the inclusion log partitioned by template_id — the
-    reference's per-template-id files (Output/Legacy.pm:195-214) as a
-    partition-pruned parquet layout.
-
-    Hub templates (the {{cite web}} analogue) dominate the log, so rows are
-    redistributed on (template_id, salt) before the write: a hub template's
-    rows land on ``salt_buckets`` tasks instead of one straggler, and each
-    writes its own file under the template's partition directory."""
-    salted = inclusions.withColumn(
-        "_salt", F.pmod(F.xxhash64("page_id", "incl_idx"),
-                        F.lit(salt_buckets))
-    )
-    # explicit num_partitions pins the fan-out (AQE would otherwise
-    # coalesce a small shuffle back into few tasks); default lets AQE size
-    # partitions by bytes, which is what you want at production scale
-    keys = [F.col("template_id"), F.col("_salt")]
-    shuffled = (
-        salted.repartition(num_partitions, *keys) if num_partitions
-        else salted.repartition(*keys)
-    )
-    (
-        shuffled
-        .drop("_salt")
-        .write.mode("overwrite")
-        .partitionBy("template_id")
-        .parquet(path)
     )
 
 
@@ -172,8 +140,8 @@ def triples_from_transformed(transformed: DataFrame,
     wide table: per row, every edge kind is packed into a single
     array<struct> with higher-order functions and exploded once — versus
     eight separate scans for the per-kind edge tables.  Semantically
-    identical to triples_view over the individual edge tables (tested);
-    at scale this is the difference between one and eight passes over the
+    identical to the union of the individual edge tables (tested); at
+    scale this is the difference between one and eight passes over the
     transformed corpus."""
     pid = F.col("page_id").cast("string")
 
@@ -210,8 +178,7 @@ def triples_from_transformed(transformed: DataFrame,
         F.transform("related", lambda r: s(pid, "related_to", r, nul)),
         F.transform(
             "disambig",
-            lambda d: s(pid, "disambiguates", d["target_id"],
-                        F.regexp_replace(d["anchor"], "\t", " ")),
+            lambda d: s(pid, "disambiguates", d["target_id"], d["anchor"]),
         ),
         F.transform("external",
                     lambda e: s(pid, "links_external", e["url"],
@@ -234,40 +201,3 @@ def triples_from_transformed(transformed: DataFrame,
         F.col("to_title").alias("prop"),
     )
     return page_triples.unionByName(redirect_triples)
-
-
-def triples_view(
-    links: DataFrame,
-    anchors: DataFrame,
-    categories: DataFrame,
-    redirects: DataFrame,
-    related: DataFrame,
-    disambig: DataFrame,
-    external: DataFrame,
-    template_incl: DataFrame,
-) -> DataFrame:
-    """Unified (subj, pred, obj, prop) triple stream over all edge tables —
-    the P/R comparison surface (FIXTURES.md §4)."""
-    def t(df, subj, pred, obj, prop=None):
-        return df.select(
-            F.col(subj).cast("string").alias("subj"),
-            F.lit(pred).alias("pred"),
-            F.col(obj).cast("string").alias("obj"),
-            (F.col(prop) if prop else F.lit(None)).cast("string").alias("prop"),
-        )
-
-    return (
-        t(links, "source_id", "links_to", "target_id")
-        .unionByName(t(anchors, "target_id", "anchored_by", "source_id",
-                       "anchor_text"))
-        .unionByName(t(categories, "page_id", "in_category", "category_id"))
-        .unionByName(t(redirects, "from_id", "redirects_to", "to_id",
-                       "to_title"))
-        .unionByName(t(related, "page_id", "related_to", "related_id"))
-        .unionByName(t(disambig, "disambig_id", "disambiguates", "target_id",
-                       "anchor_text"))
-        .unionByName(t(external, "source_id", "links_external", "url",
-                       "anchor"))
-        .unionByName(t(template_incl, "page_id", "includes_template",
-                       "template_id", "param"))
-    )

@@ -8,10 +8,12 @@ wikiprep_spark/functions/prescan.py for the semantic oracle and the cited
 reference lines).
 
 Shuffle budget (the part that must survive 100 TB):
-  1. duplicate-id detection: a count aggregation over the skinny
-     (page_id, seq) projection; the loser row keys are joined back as a
-     BROADCAST anti join, so the full-text rows are never shuffled and no
-     second copy of the corpus is materialized.
+  1. duplicate-id detection: a count aggregation over the (page_id, seq)
+     projection of the parsed pages — the pipeline reads it from its
+     cached pass-1 parse, so the python id rule (sources/mediawiki_xml.py)
+     is the only one and runs once per record; the loser row keys are
+     joined back as a BROADCAST anti join, so the full-text rows are never
+     shuffled and no second copy of the corpus is materialized.
   2. ONE groupBy(title_norm) aggregation computing, per title, the
      first non-redirect claim, the last redirect, and the template-body
      candidates together — all three dictionaries derive from this single
@@ -30,7 +32,14 @@ from pyspark.sql import DataFrame, functions as F
 from wikiprep_spark.functions.templates import preprocess_template_body
 
 
-def _dup_losers(ids: DataFrame) -> DataFrame:
+def dup_losers(parsed: DataFrame) -> DataFrame:
+    """(page_id, seq) of every page beyond the first occurrence of its id,
+    in dump (seq) order (bin/wikiprep:466-470).  Records the parser
+    rejected (NULL page_id) are never losers.  The first-wins rule is a
+    min(seq) per page_id, so the result only depends on the parsed ids —
+    read it from a cached parse and no consumer re-runs the python parse
+    to find its losers."""
+    ids = parsed.where(F.col("page_id").isNotNull()).select("page_id", "seq")
     dup_ids = (
         ids.groupBy("page_id")
         .agg(F.min("seq").alias("win_seq"), F.count("*").alias("n"))
@@ -44,94 +53,11 @@ def _dup_losers(ids: DataFrame) -> DataFrame:
     )
 
 
-def _exact_page_id_col():
-    """parse_page_record's exact id rule as a JVM expression: the first
-    <id> child of the <page> element (of a bare record, or the <page>
-    under a wrapping root), NULL for records the python parser rejects —
-    from_xml in PERMISSIVE mode nulls out malformed XML."""
-    x = F.expr("from_xml(content, 'id BIGINT, page STRUCT<id: BIGINT>')")
-    root_tag = F.regexp_extract(
-        "content", r"^\s*(?:<\?[^>]*\?>\s*)?<([A-Za-z_][\w.-]*)", 1
-    )
-    return x, root_tag
-
-
-def dup_losers_from_src(src_pages: DataFrame) -> DataFrame:
-    """Duplicate-id losers computed ENTIRELY JVM-side from the raw source
-    table, in two phases (the 100 TB shape — duplicate ids are rare, so
-    exact work should touch only the records that might collide):
-
-    1. CANDIDATE scan: regexp_extract_all collects every literal
-       ``<id...>N</id>`` number per record (cheap codegen pass over the
-       corpus); a number seen in >= 2 records marks those records as
-       candidates.  This over-approximates: revision ids and garbage
-       records inflate the set but can never hide a real duplicate
-       (any parseable page's id appears literally in its record).
-    2. VERIFY parse: only candidate records get the full from_xml parse
-       with parse_page_record's exact id rule — malformed records null
-       out here, so a garbage record that merely *contains* "<id>N</id>"
-       can never join the dup set and anti-join away the validly-parsed
-       page with that id (a pure-regex extraction had exactly that
-       failure mode, and running from_xml over the whole corpus costs
-       ~2x the candidate scan).
-
-    In the fused two-pass pipeline this keeps the dup-id subquery from
-    dragging a full python parse pass into every job that consumes
-    live_pages."""
-    seq = F.concat_ws("\x00", "repo", "path", "commit").alias("seq")
-    # cast each candidate to BIGINT before distinct/grouping so literal
-    # variants of the same numeric id ('007' vs '7') collide — matching the
-    # id rule of both parse_page_record and the from_xml verify; a
-    # string-keyed grouping would let such a duplicate escape the scan.
-    # try_cast (not cast): an id literal overflowing int64 yields NULL on
-    # BOTH the default and ANSI dialects (plain cast throws under
-    # spark.sql.ansi.enabled), and parse_page_record rejects such ids too,
-    # so both paths drop oversized ids identically; the NULLs are filtered
-    # rather than grouped so they can't manufacture phantom candidates.
-    cands = src_pages.select(
-        seq,
-        F.explode(
-            F.array_distinct(F.expr(
-                r"transform(regexp_extract_all(content,"
-                r" '<id[^>]*>\\s*(\\d+)\\s*</id>', 1),"
-                r" x -> try_cast(x AS BIGINT))"))
-        ).alias("cid"),
-    ).where(F.col("cid").isNotNull())
-    dup_cand = (
-        cands.groupBy("cid").agg(F.count("*").alias("n"))
-        .where(F.col("n") > 1).select("cid")
-    )
-    verify_seqs = (
-        cands.join(F.broadcast(dup_cand), "cid").select("seq").distinct()
-    )
-    x, root_tag = _exact_page_id_col()
-    # join BEFORE the parse projection: from_xml runs only on the
-    # candidate records (then a two-step select so it runs once per row)
-    survivors = src_pages.select(seq, "content").join(
-        F.broadcast(verify_seqs), "seq")
-    staged = survivors.select(
-        "seq", x.alias("_x"), root_tag.alias("_root"))
-    ids = staged.select(
-        F.when(F.col("_root") == "page", F.col("_x.id"))
-        .otherwise(F.col("_x.page.id")).alias("page_id"),
-        "seq",
-    ).where(F.col("page_id").isNotNull())
-    return _dup_losers(ids)
-
-
-def live_pages(parsed: DataFrame, losers: DataFrame | None = None) -> DataFrame:
-    """First page wins per id over ALL pages, in dump (seq) order
-    (bin/wikiprep:466-470).
-
-    Duplicate ids are rare, so the losers (every (page_id, seq) beyond the
-    first occurrence) form a small set that broadcast-anti-joins against
-    the full rows — no shuffle of the page texts.  Pass a precomputed
-    ``losers`` frame (dup_losers_from_src) to keep this subquery off the
-    python parse path."""
-    if losers is None:
-        ids = parsed.where(F.col("page_id").isNotNull()).select(
-            "page_id", "seq")
-        losers = _dup_losers(ids)
+def live_pages(parsed: DataFrame, losers: DataFrame) -> DataFrame:
+    """First page wins per id over ALL pages: ``parsed`` minus the
+    ``losers`` (dup_losers).  Duplicate ids are rare, so the losers form a
+    small set that broadcast-anti-joins against the full rows — no shuffle
+    of the page texts."""
     return parsed.join(F.broadcast(losers), ["page_id", "seq"], "left_anti")
 
 
@@ -250,7 +176,9 @@ def template_bodies_df(template_pages: DataFrame) -> DataFrame:
 def tagged_dicts_df(title2id: DataFrame, redirects: DataFrame,
                     template_bodies: DataFrame) -> DataFrame:
     """All three dictionaries as one tagged (kind, k, v) table — the
-    persisted form of the reference's prescanSave output."""
+    persisted form of the reference's prescanSave output, written as
+    parquet in one distributed job (no driver roundtrip) and side-loaded
+    by the transform workers via functions/dictload.py."""
     tagged = (
         title2id.select(
             F.lit("t").alias("kind"),
@@ -272,37 +200,17 @@ def tagged_dicts_df(title2id: DataFrame, redirects: DataFrame,
             )
         )
     )
-    return tagged
-
-
-def write_dicts(title2id: DataFrame, redirects: DataFrame,
-                template_bodies: DataFrame, path: str) -> int | None:
-    """Write the tagged dictionary table as parquet (one distributed job,
-    no driver roundtrip) for worker-side loading via functions/dictload.py.
-    Returns the row count, observed on the write job itself."""
-    from pyspark.sql import Observation
-
-    tagged = tagged_dicts_df(title2id, redirects, template_bodies)
     # the 3-way union triples the partition count of the (cached) title
-    # aggregate it reads, so the write fans out into 3x as many tiny tasks
+    # aggregate it reads, so a write fans out into 3x as many tiny tasks
     # and files as the data warrants.  Coalesce (narrow, no shuffle) by
     # that factor and pack ~4 aggregate partitions per write task on top
     # (//12): measured ~0.5s off the prescan stage at sf0.1, and fewer,
     # better-sized dict files at any scale; parallelism still grows
     # linearly with the aggregate's own partition count
-    try:
-        n_parts = tagged.rdd.getNumPartitions()
-    except Exception:  # pragma: no cover - planning quirk
-        n_parts = None
-    if n_parts and n_parts > 12:
-        tagged = tagged.coalesce(max(1, n_parts // 12))
-    obs = Observation()
-    tagged = tagged.observe(obs, F.count(F.lit(1)).alias("rows"))
-    tagged.write.mode("overwrite").parquet(path)
-    try:
-        return obs.get["rows"]
-    except Exception:
-        return None
+    n_parts = tagged.rdd.getNumPartitions()
+    if n_parts > 12:
+        tagged = tagged.coalesce(n_parts // 12)
+    return tagged
 
 
 def redirect_records_df(redirects: DataFrame, title2id: DataFrame,

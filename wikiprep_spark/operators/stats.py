@@ -1,8 +1,10 @@
 """Graph statistics aggregates (the reference's Statistics.pm, re-enabled).
 
 The reference ships %statCategories / %statIncomingLinks / %catHierarchy but
-leaves the module commented out (bin/wikiprep:52-53); they are pure groupBys
-and genuinely useful, so they're first-class here (SURVEY.md §2.4 A3-A5).
+leaves the module commented out (bin/wikiprep:52-53); the two counts are
+pure groupBys and genuinely useful, so they're first-class here (SURVEY.md
+§2.4 A3-A4).  The category hierarchy is the categories edge table itself
+(parent = category_id), so it needs no operator of its own.
 
 Incoming-link and category counts group on HUB keys (top categories and
 highly-linked pages dominate), so both run as explicit two-phase salted
@@ -47,15 +49,6 @@ def incoming_link_counts(links_edges: DataFrame) -> DataFrame:
     return salted_count(
         links_edges.select("source_id", "target_id"),
         "target_id", out="n_links",
-    )
-
-
-def category_hierarchy(categories_edges: DataFrame) -> DataFrame:
-    """Parent category -> member page ids (Statistics.pm:43-56), as sorted
-    arrays for deterministic comparison."""
-    return (
-        categories_edges.groupBy(F.col("category_id").alias("parent_id"))
-        .agg(F.array_sort(F.collect_list("page_id")).alias("member_ids"))
     )
 
 

@@ -89,9 +89,9 @@ def _row_from_page(src, page) -> tuple:
 def transform_pages(parsed: DataFrame, dicts_path: str) -> DataFrame:
     """parsed pages + the prescan dictionaries -> wide rows.
 
-    ``dicts_path`` is the tagged dictionary parquet written by
-    operators/prescan.write_dicts; workers side-load it once per process
-    via functions/dictload.py (the prescanLoad equivalent).
+    ``dicts_path`` is the tagged dictionary parquet the pipeline writes
+    from operators/prescan.tagged_dicts_df; workers side-load it once per
+    process via functions/dictload.py (the prescanLoad equivalent).
     """
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

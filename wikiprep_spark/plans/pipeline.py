@@ -3,13 +3,16 @@
 The reference's own two-pass architecture (bin/wikiprep: a prescan pass
 and a transform pass over the same dump), SURVEY.md §7.1:
 
-  src_pages ─ pass 1: parse in flight ─ prescan aggregation ─ dicts ─┐
-  src_pages ─ pass 2: re-parse fused with the transform kernel ──────┴─ edges/triples
+  src_pages ─ pass 1: parse (cached) ─ dup-id losers ─ prescan aggregation ─ dicts ─┐
+  src_pages ─ pass 2: re-parse fused with the transform kernel, minus the losers ───┴─ edges/triples
 
-The XML parse is never materialized: pass 1 parses with the prescan
-projection and aggregates the dictionaries, pass 2 re-parses fused with
-the transform kernel in one python chain.  Re-parsing costs ~10% of the
-kernel and removes a columnar encode+decode round trip of every page text.
+Pass 1 parses with the prescan projection (page text kept only for
+templates) and caches that skinny parse: the duplicate-id losers and the
+dictionary aggregation both read it, so the python page-id rule runs once
+per record in this pass.  Pass 2 re-parses fused with the transform kernel
+in one python chain, anti-joining the same cached losers; the full parse
+is never materialized.  Re-parsing costs ~10% of the kernel and removes a
+columnar encode+decode round trip of every page text.
 
 Each stage writes a parquet table under ``work_dir`` (the Iceberg-table
 stand-in in this environment — swap the writer for
@@ -168,23 +171,23 @@ def run_pipeline(
     # --- pass 1: prescan — one title-keyed aggregation for all three
     # dictionaries; id-dedup is a broadcast anti join (no full-data shuffle)
     t0 = time.time()
-    parsed = parse_pages(src_pages)
-    # JVM-only dup-id scan of the source, cached: without this, the
-    # anti-join's subquery re-runs the python parse inside EVERY job that
-    # consumes live_pages (measured as a full extra parse pass in both the
-    # prescan and transform jobs)
-    losers = prescan_ops.dup_losers_from_src(src_pages).persist()
-    live = prescan_ops.live_pages(parsed, losers)
     # the dictionary aggregation reads text only for template pages — parse
     # with the prescan projection so the pass doesn't Arrow-ship every
-    # page's full text back to the JVM
-    live_pre = prescan_ops.live_pages(parse_pages_prescan(src_pages), losers)
+    # page's full text back to the JVM.  Cached: the dup-id losers derive
+    # from it too, and without the cache the anti-join's subquery re-runs
+    # the python parse inside EVERY job that consumes live_pages (measured
+    # as a full extra parse pass in both the prescan and transform jobs)
+    pre = parse_pages_prescan(src_pages).persist()
+    losers = prescan_ops.dup_losers(pre).persist()
+    live_pre = prescan_ops.live_pages(pre, losers)
+    parsed = parse_pages(src_pages)
+    live = prescan_ops.live_pages(parsed, losers)
     # the dictionary branches and the collect job share this aggregate;
     # Spark does no cross-branch CSE, so cache it once (skinny rows — only
     # template candidates carry text).  Materialize it NOW: if the union
-    # branches of write_dicts race a cold cache inside one job, each branch
-    # recomputes the full parse upstream (measured 4x prescan blowup on a
-    # 4-executor cluster before this count)
+    # branches of the dictionary write race a cold cache inside one job,
+    # each branch recomputes the full parse upstream (measured 4x prescan
+    # blowup on a 4-executor cluster before this count)
     agg = prescan_ops.title_aggregate(live_pre).persist()
     agg.count()
     title2id = prescan_ops.title2id_df(agg)
@@ -202,8 +205,8 @@ def run_pipeline(
     n_dict_rows = None
     dicts_path = os.path.join(work_dir, "dicts")
     if not (resume and _stage_done(dicts_path)):
-        n_dict_rows = prescan_ops.write_dicts(title2id, redirects,
-                                              template_bodies, dicts_path)
+        n_dict_rows = _write(prescan_ops.tagged_dicts_df(
+            title2id, redirects, template_bodies), dicts_path)
     metrics.record("prescan", time.time() - t0, dict_rows=n_dict_rows)
 
     transformed_path = os.path.join(work_dir, "transformed_pages")

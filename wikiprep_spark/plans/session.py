@@ -40,19 +40,6 @@ def build_session(
             k = os.cpu_count() or 8
         if k >= 2:
             task_cpus = 2
-    elif master.startswith("local-cluster["):
-        # [n_executors, cores_per_executor, mem_mb]: budget 2 cpus per
-        # task within each executor JVM so each executor keeps
-        # cores/2 python workers + their JVM Arrow feeders ~= cores
-        # hot threads — the same sizing a production executor uses
-        try:
-            cores_per_exec = int(
-                master[len("local-cluster["):-1].split(",")[1]
-            )
-        except (ValueError, IndexError):
-            cores_per_exec = 2
-        if cores_per_exec >= 2:
-            task_cpus = 2
 
     builder = (
         SparkSession.builder.appName(app_name)

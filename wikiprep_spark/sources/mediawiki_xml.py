@@ -31,10 +31,8 @@ def parse_page_record(content: str) -> dict:
         raise ValueError("malformed page XML: %s" % exc) from exc
     if el.tag != "page":
         # tolerate exactly ONE wrapping element (e.g. <mediawiki>) — the
-        # shape MediaWiki exports use.  Deeper nesting is rejected so this
-        # parser stays 1:1 with the JVM-side from_xml id rule
-        # (operators/prescan.py _exact_page_id_col: id | page.id), which can
-        # only see one wrapping level; a record both paths must agree on.
+        # shape MediaWiki exports use, where <page> is a direct child of
+        # the root.  Deeper nesting is not an export record and is rejected.
         found = el.find("page")
         if found is None:
             raise ValueError("no <page> element")
@@ -43,17 +41,15 @@ def parse_page_record(content: str) -> dict:
     page_id_text = el.findtext("id")
     if page_id_text is None:
         raise ValueError("page without <id>")
-    # exactly the JVM cast-from-string grammar (trimmed, optional sign,
-    # digits) — bare int() also accepts '1_2' (underscore separators),
-    # which from_xml's BIGINT field would null out instead
+    # an integer literal only (trimmed, optional sign, digits) — bare
+    # int() also accepts '1_2' (underscore separators), which is no page
+    # id; '007' and '7' both parse to 7, so they are the same id
     if not re.fullmatch(r"[+-]?\d+", page_id_text.strip()):
         raise ValueError("non-numeric page <id>")
     page_id = int(page_id_text)
     # ids outside int64 are rejected, not silently accepted: the parsed
-    # table's page_id column is BIGINT and the JVM-side dup-id verify
-    # (operators/prescan.py try_cast ... AS BIGINT) nulls such ids out —
-    # accepting them here would let the python parse path and the src-scan
-    # dup-loser path diverge on the same record (and overflow Arrow).
+    # table's page_id column is BIGINT, so such an id would overflow the
+    # Arrow conversion of the whole batch.
     if not (-(2 ** 63) <= page_id < 2 ** 63):
         raise ValueError("page <id> outside BIGINT range")
     rev = el.find("revision")

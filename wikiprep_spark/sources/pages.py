@@ -2,11 +2,12 @@
 
 The input table shape is fixed by the BASELINE input hint: one MediaWiki
 page XML record per row in ``content``.  Parsing is an Arrow-batched
-mapInPandas, and the parsed table is never materialized: the fused
-two-pass pipeline (plans/pipeline.py) parses twice, once per pass —
-``parse_pages_prescan`` keeps text only for templates, which is all the
-prescan aggregation reads, and ``parse_pages`` feeds the transform kernel
-in the same python chain.
+mapInPandas, and the fused two-pass pipeline (plans/pipeline.py) parses
+twice, once per pass — ``parse_pages_prescan`` keeps text only for
+templates, which is all the prescan aggregation reads, and the pipeline
+caches that skinny parse (the duplicate-id losers derive from it too);
+``parse_pages`` feeds the transform kernel in the same python chain and
+is never materialized.
 
 ``seq`` is the total-order key replacing the reference's dump document
 order: the lexicographic (repo, path, commit) key.  Using the key itself
@@ -88,14 +89,6 @@ def _parse_batch(batch: pd.DataFrame) -> pd.DataFrame:
             "is_template", "parse_error", "text_chars", "record_chars",
         ],
     )
-
-
-def sample_pages(src_pages: DataFrame, fraction: float,
-                 seed: int = 42) -> DataFrame:
-    """Bernoulli page sampling for building test sets — the reference's
-    samplewiki tool (tools/samplewiki/samplewiki.c:26-40), seeded for
-    reproducibility."""
-    return src_pages.sample(fraction=fraction, seed=seed)
 
 
 def parse_pages(src_pages: DataFrame) -> DataFrame:
