@@ -585,6 +585,60 @@ def test_shingle_dedup(spark, docs):
     assert inter < 0.2
 
 
+def _inline_token_sets(docs, shingle):
+    """The token-set expression with the word array captured by the
+    shingle lambda instead of read from a projected column."""
+    toks = F.split(dedup.normalized_text("text"), " ")
+    if shingle > 1:
+        toks = F.transform(
+            F.sequence(F.lit(0),
+                       F.greatest(F.size(toks) - shingle, F.lit(0))),
+            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, shingle)),
+        )
+    return docs.select(F.col("doc_id").alias("doc"),
+                       F.array_distinct(toks).alias("toks"))
+
+
+def _inline_signatures(toks, num_hashes):
+    """The signature expression with xxhash64 inside every permutation."""
+    m = dedup._MERSENNE
+
+    def perm(a, b):
+        return lambda t: F.pmod(
+            F.pmod(F.xxhash64(t), F.lit(m)) * F.lit(a) + F.lit(b), F.lit(m))
+
+    return toks.select("doc", F.array(*[
+        F.array_min(F.transform("toks", perm(2 * i + 1, 1000003 * (i + 1))))
+        for i in range(num_hashes)]).alias("sig"))
+
+
+@pytest.mark.parametrize("shingle", [1, 2, 3, 5])
+def test_token_sets_and_signatures_match_inline_form(spark, shingle):
+    """The hoisted word array and token hashes give the same token sets
+    and signatures, row for row, as the expressions they replace."""
+    base = "the quick brown fox jumps over the lazy dog near the river bank"
+    docs = spark.createDataFrame(
+        [
+            (0, ""),
+            (1, "word"),
+            (2, "two words"),
+            (3, "Three\tWORDS  here"),
+            (4, "  Tabs\t\tand   runs OF\tspaces  "),
+            (5, "a b a b a b a b a b"),
+            (6, base),
+            (7, base.replace("lazy", "sleepy")),
+            (8, base.upper()),
+        ],
+        "doc_id long, text string",
+    )
+    toks = dedup._token_sets(docs, "doc_id", "text", shingle)
+    want = _inline_token_sets(docs, shingle)
+    assert sorted(toks.collect()) == sorted(want.collect())
+    sigs = dedup.minhash_signatures(docs, toks=toks)
+    assert (sorted(sigs.collect())
+            == sorted(_inline_signatures(want, 32).collect()))
+
+
 def test_parse_page_record_single_wrap_only():
     """The parser accepts exactly one wrapping element — the MediaWiki
     export shape, <page> under the root; deeper nesting is rejected."""

@@ -107,3 +107,23 @@ def test_pipeline_pass2_parses_once(spark, monkeypatch, tmp_path):
     # dicts, transformed_pages, triples, lineage and live itself
     assert len(plans) == 5
     assert not any("from_xml" in p for p in plans)
+
+
+def test_hof_lambdas_hoist_row_constants(spark):
+    """Row-constant work sits in a projection below the higher-order
+    functions that read it: a lambda shares no subexpression it captures,
+    so an inline copy re-runs per array element (the normalizing regex per
+    shingle, the token hash per minhash permutation) or per tie-break
+    branch (the language stopword counts)."""
+    from wikiprep_spark.operators import dedup, textops
+
+    def evals(df, fn):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return len(re.findall(fn + r"\(", plan))
+
+    docs = spark.read.parquet(os.path.join(SF001, "documents.parquet"))
+    toks = dedup._token_sets(docs, "doc_id", "text", shingle=3)
+    assert evals(toks, "regexp_replace") == 1
+    sigs = dedup.minhash_signatures(docs, toks=toks.localCheckpoint())
+    assert evals(sigs, "xxhash64") == 1
+    assert evals(textops.lang_id(docs), "regexp_replace") == 1

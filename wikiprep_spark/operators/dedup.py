@@ -2,9 +2,12 @@
 
 Everything here is built from JVM-side column expressions (no Python UDFs):
 hashing via xxhash64/md5, shingling via split/transform, banding via
-pmod — so the plans stay inside whole-stage codegen and shuffle only on the
-grouping keys.  Designed for the ``documents`` table shape
-(doc_id, text, ...), but any (id, text) pair works.
+pmod — so the plans stay in the JVM and shuffle only on the grouping keys.
+Higher-order functions (transform, filter, aggregate) are interpreted per
+element rather than code-generated, so row-constant work (the normalized
+word array, the token hashes) is projected as a column below them.
+Designed for the ``documents`` table shape (doc_id, text, ...), but any
+(id, text) pair works.
 """
 
 from __future__ import annotations
@@ -45,23 +48,30 @@ def _token_sets(docs: DataFrame, id_col, text_col,
 
     Shingles (n>1) are the standard minhash/Jaccard unit for text dedup:
     they keep the element space large enough that unrelated documents
-    share few elements even over a small vocabulary."""
+    share few elements even over a small vocabulary.
+
+    The word array is projected once as the column ``_w`` and the
+    shingle lambda reads that column: a lambda does not share the
+    subexpressions it captures, so capturing the ``split(normalize(text))``
+    expression itself would re-run the whole regex chain once per shingle
+    position (quadratic per document)."""
     from wikiprep_spark.operators.spread import spread_small_scan
 
     docs = spread_small_scan(docs)
-    toks = F.split(normalized_text(text_col), " ")
+    words = docs.select(
+        F.col(id_col).alias("doc"),
+        F.split(normalized_text(text_col), " ").alias("_w"),
+    )
+    toks = F.col("_w")
     if shingle > 1:
         toks = F.transform(
             F.sequence(F.lit(0),
                        F.greatest(F.size(toks) - shingle, F.lit(0))),
             lambda i: F.concat_ws(
-                " ", F.slice(toks, i + 1, shingle)
+                " ", F.slice(F.col("_w"), i + 1, shingle)
             ),
         )
-    return docs.select(
-        F.col(id_col).alias("doc"),
-        F.array_distinct(toks).alias("toks"),
-    )
+    return words.select("doc", F.array_distinct(toks).alias("toks"))
 
 
 def _ordered_pairs(joined: DataFrame, id_col: str) -> DataFrame:
@@ -188,9 +198,11 @@ def minhash_signatures(
 ) -> DataFrame:
     """(doc, sig: array<long>) minhash signatures over token sets.
 
-    Permutation h_i(x) = (a_i * xxhash64(x) + b_i) mod M with deterministic
-    odd multipliers — all computed by a single higher-order-function
-    expression per row (aggregate over the token array), no shuffle at all.
+    Permutation h_i(x) = (a_i * (xxhash64(x) mod M) + b_i) mod M with
+    deterministic odd multipliers, no shuffle at all.  The token hashes
+    are computed once per row into a long array (``_h``); each of the
+    ``num_hashes`` permutations is then an ``array_min`` over a transform
+    of those longs, so no permutation lambda re-hashes a string.
     ``toks`` optionally supplies a prebuilt (doc, toks) frame so a caller
     that also needs the token sets (LSH verify) computes them once.
     """
@@ -200,16 +212,16 @@ def minhash_signatures(
     def perm(a, b):
         # closure factory: pyspark inspects lambda arity, so defaults-as-
         # captures would be misread as extra lambda arguments
-        return lambda t: F.pmod(
-            F.pmod(F.xxhash64(t), F.lit(_MERSENNE)) * F.lit(a) + F.lit(b),
-            F.lit(_MERSENNE),
-        )
+        return lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(_MERSENNE))
 
+    hashed = toks.select("doc", F.transform(
+        "toks", lambda t: F.pmod(F.xxhash64(t), F.lit(_MERSENNE))
+    ).alias("_h"))
     sig_cols = [
-        F.array_min(F.transform("toks", perm(2 * i + 1, 1000003 * (i + 1))))
+        F.array_min(F.transform("_h", perm(2 * i + 1, 1000003 * (i + 1))))
         for i in range(num_hashes)
     ]
-    return toks.select("doc", F.array(*sig_cols).alias("sig"))
+    return hashed.select("doc", F.array(*sig_cols).alias("sig"))
 
 
 def _minhash_bands(sigs: DataFrame, num_hashes: int,

@@ -1,7 +1,8 @@
 """Text analysis operators for training-data curation: token counting,
 quality scoring, language-ID heuristic, document fingerprinting.
 
-All JVM-side column expressions (whole-stage codegen), no Python UDFs.
+All JVM-side column expressions, no Python UDFs; the higher-order
+functions among them read projected columns (see operators/dedup.py).
 Each has an exact ANSI-SQL counterpart in plans/oracles.py.
 """
 
@@ -36,19 +37,28 @@ def quality_score(docs: DataFrame, id_col="doc_id",
     """Heuristic quality features: length, mean token length, alpha ratio,
     stopword ratio — the usual cheap pre-training filters.  Score =
     stopword_ratio capped at 0.5, scaled, minus a short-doc penalty;
-    rounded for stable cross-engine comparison."""
-    norm = normalized_text(text_col)
-    toks = F.split(norm, " ")
-    n_tokens = F.size(toks).cast("double")
-    n_chars = F.length(norm).cast("double")
-    alpha_chars = F.length(F.regexp_replace(norm, r"[^a-z]", "")).cast(
-        "double"
+    rounded for stable cross-engine comparison.
+
+    The normalized text and the four counts are projected as columns
+    first: the stopword filter is a lambda over the word array, and a
+    higher-order function shares no subexpression with the rest of the
+    row, so every inline copy of the count chain would re-run the
+    normalizing regex."""
+    stops = LANG_STOPWORDS["en"]
+    counts = docs.select(
+        F.col(id_col), normalized_text(text_col).alias("_norm")
+    ).select(
+        F.col(id_col),
+        F.size(F.split("_norm", " ")).cast("double").alias("_nt"),
+        F.length("_norm").cast("double").alias("_nc"),
+        F.length(F.regexp_replace("_norm", r"[^a-z]", "")).cast(
+            "double").alias("_na"),
+        F.size(F.filter(F.split("_norm", " "), lambda t: t.isin(*stops))
+               ).cast("double").alias("_ns"),
     )
-    stop_hits = F.size(
-        F.filter(toks, lambda t: t.isin(*LANG_STOPWORDS["en"]))
-    ).cast("double")
-    stop_ratio = F.when(n_tokens > 0, stop_hits / n_tokens).otherwise(0.0)
-    alpha_ratio = F.when(n_chars > 0, alpha_chars / n_chars).otherwise(0.0)
+    n_tokens, n_chars = F.col("_nt"), F.col("_nc")
+    stop_ratio = F.when(n_tokens > 0, F.col("_ns") / n_tokens).otherwise(0.0)
+    alpha_ratio = F.when(n_chars > 0, F.col("_na") / n_chars).otherwise(0.0)
     mean_tok_len = F.when(n_tokens > 0, (n_chars - (n_tokens - 1)) / n_tokens
                           ).otherwise(0.0)
     score = (
@@ -56,7 +66,7 @@ def quality_score(docs: DataFrame, id_col="doc_id",
         + F.least(alpha_ratio, F.lit(1.0)) * 0.3
         + F.when((n_tokens >= 20) & (n_tokens <= 1000), 0.2).otherwise(0.0)
     )
-    return docs.select(
+    return counts.select(
         F.col(id_col),
         F.round(stop_ratio, 6).alias("stopword_ratio"),
         F.round(alpha_ratio, 6).alias("alpha_ratio"),
@@ -68,23 +78,30 @@ def quality_score(docs: DataFrame, id_col="doc_id",
 def lang_id(docs: DataFrame, id_col="doc_id", text_col="text") -> DataFrame:
     """Stopword-vote language identification with deterministic tie-break
     (highest count wins; ties resolve in en<de<fr<es preference order via
-    strict > comparison chain)."""
-    toks = F.split(normalized_text(text_col), " ")
+    strict > comparison chain).
+
+    The word array is projected once and each language's stopword count
+    lands in its own column before the tie-break chain runs: the nested
+    ``when`` chain repeats every count, and a count is a filter lambda,
+    which shares no subexpression with its copies."""
 
     def stop_filter(ws):
         return lambda t: t.isin(*ws)
 
-    counts = {
-        lang: F.size(F.filter(toks, stop_filter(ws)))
+    counts = docs.select(
+        F.col(id_col), F.split(normalized_text(text_col), " ").alias("_w")
+    ).select(F.col(id_col), *[
+        F.size(F.filter("_w", stop_filter(ws))).alias("_n_" + lang)
         for lang, ws in LANG_STOPWORDS.items()
-    }
+    ])
     best_lang = F.lit("unknown")
     best_count = F.lit(0)
     for lang in ["es", "fr", "de", "en"]:  # later wins ties -> en preferred
-        cond = counts[lang] >= best_count
+        n = F.col("_n_" + lang)
+        cond = n >= best_count
         best_lang = F.when(cond, F.lit(lang)).otherwise(best_lang)
-        best_count = F.when(cond, counts[lang]).otherwise(best_count)
-    return docs.select(
+        best_count = F.when(cond, n).otherwise(best_count)
+    return counts.select(
         F.col(id_col),
         F.when(best_count > 0, best_lang).otherwise(F.lit("unknown")).alias(
             "detected_lang"
