@@ -1,10 +1,12 @@
 """End-to-end golden tests: run the sequential prescan + per-page transform
 over the fixture corpora and compare emitted edge sets against expectations
 derived from the reference's .vetted golden files (set-based, since the
-reference's own output row order is Perl-hash order)."""
+reference's own output row order is Perl-hash order).  Edge rows come from
+the one writer the Spark pipeline explodes,
+functions/edges.edge_collections."""
 
 from tests.corpora import ALL
-from wikiprep_spark.functions import edges
+from wikiprep_spark.functions.edges import EDGE_COLUMNS, edge_collections
 from wikiprep_spark.functions.page import TransformEnv, transform_one
 from wikiprep_spark.functions.prescan import (
     build_redirect_records,
@@ -20,12 +22,18 @@ def run(name):
     return pre, {r["id"]: r for r in results}
 
 
+def collections(page):
+    """The page's edge collections from the one writer, by column name."""
+    return dict(zip(EDGE_COLUMNS, edge_collections(page)))
+
+
 def all_anchor_rows(results):
-    rows = []
-    for r in results.values():
-        if "text" in r:
-            rows.extend(edges.anchor_rows(r))
-    return rows
+    """(target_id, source_id, loc, anchor_text) over every transformed page."""
+    return [
+        (target_id, r["id"], loc, text)
+        for r in results.values() if "text" in r
+        for target_id, loc, text in collections(r)["anchors"]
+    ]
 
 
 def test_anchors_golden():
@@ -41,7 +49,7 @@ def test_anchors_golden():
         (5, 4, 35, "Nested anchors and some more"),
     }
     # the bogus category link is captured as a category, not an anchor
-    assert edges.category_rows(results[4]) == [(4, 8)]
+    assert collections(results[4])["categories"] == [8]
 
 
 def test_dates_golden():
@@ -103,14 +111,14 @@ def test_template_redirect_routed_to_index():
 def test_categories_golden():
     # categories.hgw.xml.vetted
     _, results = run("categories")
-    assert edges.category_rows(results[100]) == [(100, 2), (100, 3)]
-    assert edges.category_rows(results[4]) == [(4, 3)]
-    assert edges.category_rows(results[5]) == [(5, 3), (5, 2)]
+    assert collections(results[100])["categories"] == [2, 3]
+    assert collections(results[4])["categories"] == [3]
+    assert collections(results[5])["categories"] == [3, 2]
     assert results[2]["text"].strip() == "Something%20%20%20dddd."
     # colon-category links stay as text
     assert "Category:X" in results[5]["text"]
     assert "Guano" in results[5]["text"]
-    assert edges.link_rows(results[5]) == []
+    assert collections(results[5])["anchors"] == []  # so no links rows
 
 
 def test_related_golden():
@@ -126,11 +134,12 @@ def test_related_golden():
 def test_disambig_golden():
     # disambig.disambig.vetted
     _, results = run("disambig")
-    rows = []
-    for r in results.values():
-        if r.get("isDisambig"):
-            rows.extend(edges.disambig_rows(r))
-    assert set(rows) == {
+    rows = {
+        (r["id"], *row)
+        for r in results.values() if r.get("isDisambig")
+        for row in collections(r)["disambig"]
+    }
+    assert rows == {
         (1, 0, 0, None, "T a b"), (1, 1, 0, None, "A2"),
         (1, 2, 0, None, "A3"),
         (2, 0, 0, None, "B1"), (2, 1, 0, None, "B2"), (2, 2, 0, None, "B3"),
@@ -145,7 +154,7 @@ def test_externalurls_golden():
     # externalurls.external_anchors.vetted + .hgw.xml.vetted <urls>
     _, results = run("externalurls")
     r = results[1]
-    with_anchor = {(u, a) for _, u, a in edges.external_rows(r)
+    with_anchor = {(u, a) for u, a in collections(r)["external"]
                    if a is not None}
     assert with_anchor == {
         ("http://6.example.com", "some text"),
@@ -177,14 +186,13 @@ def test_interwiki_golden():
     _, results = run("interwiki")
     assert all_anchor_rows(results) == []
     r = results[1]
-    iw = edges.interwiki_rows(r)
     # direct links + one from the expanded {{memoryalpha}} template
-    titles = {(ns, t) for _, ns, t in iw}
+    titles = set(collections(r)["interwiki"])
     assert ("Memoryalpha", "Test") in titles
     assert ("Memoryalpha", "Category: education") in titles or \
            ("Memoryalpha", "Category:  education") in titles
     assert ("Wowwiki", "Sword of a Thousand Truths") in titles
     assert ("Memoryalpha", "A") in titles  # {{memoryalpha}} -> PAGENAME
-    assert edges.link_rows(r) == []
+    assert collections(r)["anchors"] == []  # so no links rows
     # template inclusion logged
     assert 1090150 in r["templates"]

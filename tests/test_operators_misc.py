@@ -276,6 +276,7 @@ def test_fused_pipeline_equality(spark, tmp_path):
     content_checksum = sum of crc32(sha256(content) hex digest) and
     byte_count = sum of len(content)."""
     import hashlib
+    import json
     import zlib
 
     from wikiprep_spark.plans.pipeline import run_pipeline
@@ -304,6 +305,11 @@ def test_fused_pipeline_equality(spark, tmp_path):
     )
     assert got == want
     assert out["_counts"]["transformed"] == out["transformed"].count() > 0
+    # metrics.jsonl carries the row counts observed on the write jobs
+    with open(tmp_path / "w" / "metrics.jsonl") as fh:
+        rows = {e["stage"]: e["rows"] for e in map(json.loads, fh)}
+    assert (rows["transform"], rows["triples"]) == (
+        out["_counts"]["transformed"], out["_counts"]["triples"])
 
 
 def test_pipeline_resume_skips_finished_stages(spark, tmp_path):

@@ -10,12 +10,7 @@ import hashlib
 
 import pytest
 
-from wikiprep_spark.functions.edges import (
-    anchor_rows,
-    category_rows,
-    link_rows,
-    related_rows,
-)
+from wikiprep_spark.functions.edges import EDGE_COLUMNS, edge_collections
 from wikiprep_spark.functions.page import TransformEnv, transform_one
 from wikiprep_spark.functions.prescan import prescan_pages
 from wikiprep_spark.plans.pipeline import run_pipeline
@@ -27,17 +22,21 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 # a disambiguation page whose first list line's anchor holds a tab: the
-# kernel replaces it (functions/edges.disambig_rows), and no writer may
-# let one through
+# kernel writer (functions/edges.edge_collections) replaces it, and no
+# Spark table or triple may let one through
 TAB_DISAMBIG = _row(9000, "Tabbed (disambiguation)",
                     "{{dab}}\n* [[Doc 1|left\tright]] is an article\n"
                     "* [[Doc 2]] is another")
+# an article whose anchors end/start with a tab: the writer strips all
+# surrounding whitespace (Python's str.strip), not only spaces
+TAB_ANCHORS = _row(9001, "Tabbed anchors",
+                   "See [[Doc 1|foo\t]] and [[Doc 2|\tbar baz]].")
 
 
 @pytest.fixture(scope="module")
 def corpus(spark):
     extra = spark.createDataFrame(
-        [TAB_DISAMBIG],
+        [TAB_DISAMBIG, TAB_ANCHORS],
         "repo string, path string, commit string, lang string, "
         "content string")
     return build_src_pages(spark, SF_DIR, limit=LIMIT).unionByName(
@@ -86,29 +85,31 @@ def test_edges_match_sequential(result, sequential):
     _, seq_results = sequential
     ok = [r for r in seq_results if "text" in r]
 
-    def flat(fn):
-        out = []
-        for r in ok:
-            out.extend(fn(r))
-        return set(out)
+    def flat(column):
+        """(page_id, row) over the sequential pages' ``column`` collection
+        from the one writer."""
+        i = EDGE_COLUMNS.index(column)
+        return {(r["id"], row) for r in ok for row in edge_collections(r)[i]}
 
     got_anchors = {
         (r["target_id"], r["source_id"], r["loc"], r["anchor_text"])
         for r in result["anchors"].collect()
     }
-    assert got_anchors == flat(anchor_rows)
+    want_anchors = {(t, p, loc, text)
+                    for p, (t, loc, text) in flat("anchors")}
+    assert got_anchors == want_anchors
 
     got_links = {(r["source_id"], r["target_id"])
                  for r in result["links"].collect()}
-    assert got_links == flat(link_rows)
+    assert got_links == {(p, t) for t, p, _, _ in want_anchors}
 
     got_cats = {(r["page_id"], r["category_id"])
                 for r in result["categories"].collect()}
-    assert got_cats == flat(category_rows)
+    assert got_cats == flat("categories")
 
     got_related = {(r["page_id"], r["related_id"])
                    for r in result["related"].collect()}
-    assert got_related == flat(related_rows)
+    assert got_related == flat("related")
 
 
 def test_analytic_expectations(result):
@@ -168,6 +169,14 @@ def test_analytic_expectations(result):
                  .where("pred = 'disambiguates'").collect()]
     assert "left right" in dis_props
     assert not any("\t" in (p or "") for p in dis_props)
+
+    tab_anchors = {(r["target_id"], r["anchor_text"])
+                   for r in result["anchors"].where("source_id = 9001")
+                   .collect()}
+    assert tab_anchors == {(1001, "foo"), (1002, "bar baz")}
+    tab_props = {r["prop"] for r in result["triples"]
+                 .where("pred = 'anchored_by' AND obj = '9001'").collect()}
+    assert tab_props == {"foo", "bar baz"}
 
     ti = {(r["page_id"], r["template_id"], r["param"])
           for r in result["template_inclusions"].collect()}

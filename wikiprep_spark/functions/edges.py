@@ -1,113 +1,72 @@
-"""Edge/triple row materialization from a transformed page.
+"""The edge rows of a transformed page — the one writer.
 
-Pure kernels shared by the golden tests and the Spark edge operators.
-Row shapes follow the reference's output writers
-(``/root/reference/lib/Wikiprep/Output/Legacy.pm`` /
-``Output/Composite.pm``), including their text transforms:
-anchor rows replace newlines with spaces and trim; disambig rows replace
-tabs; self-links are dropped from anchors and the links list.
+``edge_collections`` turns a ``transform_one`` page record into the eight
+nested collections of the wide transformed row
+(operators/transform.TRANSFORMED_SCHEMA), applying every row rule of the
+reference wikiprep's output writers (``lib/Wikiprep/Output/Legacy.pm`` /
+``Output/Composite.pm``) here and nowhere else:
+
+- anchors (Legacy.pm:151-174): resolved, non-self links only; newlines
+  become spaces and the text is stripped of surrounding whitespace;
+- disambiguation lines (Legacy.pm:280-305): tabs in anchors become spaces,
+  and a link-free list line keeps one (line_no, NULL, NULL, NULL) row;
+- template inclusions (Legacy.pm:188-215): newlines in values become
+  spaces, params starting with '=' are skipped, and a parameter-less
+  inclusion keeps one placeholder row;
+- categories, interwiki, external links, bare URLs and related articles
+  pass through as transform_one left them.
+
+The Spark edge tables and the triples (operators/edges.py) only explode
+these collections, so the goldens that check this function check what
+the pipeline writes.
 """
 
 from __future__ import annotations
 
-import re
-
-from wikiprep_spark.functions.related import (
-    get_link_ids,
-    remove_duplicates_and_self,
+# the wide-row column of each collection edge_collections returns, in order
+EDGE_COLUMNS = (
+    "anchors", "categories", "interwiki", "external", "bare_urls",
+    "related", "disambig", "template_incl",
 )
 
-_NL_RE = re.compile(r"\n")
 
-
-def anchor_rows(page):
-    """(target_id, source_id, loc, anchor_text) — Legacy.pm:151-174.
-    Only resolved, non-self links; newlines -> spaces; trimmed."""
-    rows = []
-    for a in page.get("wikiLinks", ()):
-        target_id = a.get("targetId")
-        if target_id is None or target_id == page["id"]:
-            continue
-        text = _NL_RE.sub(" ", a["anchorText"]).strip()
-        rows.append((target_id, page["id"], a["linkLocation"], text))
-    return rows
-
-
-def link_rows(page):
-    """(source_id, target_id) distinct, self-free — Legacy.pm:224-226."""
-    ids = remove_duplicates_and_self(
-        get_link_ids(page.get("wikiLinks", ())), page["id"]
-    )
-    return [(page["id"], t) for t in ids]
-
-
-def category_rows(page):
-    """(page_id, category_id), order-preserving (already deduped/self-free
-    by transform_one)."""
-    return [(page["id"], c) for c in page.get("categories", ())]
-
-
-def related_rows(page):
-    """(page_id, related_id) — Legacy.pm:269-278."""
-    return [(page["id"], r) for r in page.get("relatedArticles", ())]
-
-
-def external_rows(page):
-    """(source_id, url, anchor_or_None) — one row per external link struct;
-    the legacy external_anchors file keeps only rows with an anchor."""
-    return [
-        (page["id"], l["url"], l.get("anchor"))
-        for l in page.get("externalLinks", ())
+def edge_collections(page) -> tuple:
+    """The EDGE_COLUMNS collections of a transformed (``"text"``-carrying)
+    page record, row shapes as in TRANSFORMED_SCHEMA."""
+    page_id = page["id"]
+    anchors = [
+        (a["targetId"], a["linkLocation"],
+         a["anchorText"].replace("\n", " ").strip())
+        for a in page["wikiLinks"]
+        if "targetId" in a and a["targetId"] != page_id
     ]
-
-
-def bare_url_rows(page):
-    """(page_id, url) — the deduped <urls> list of the page record."""
-    return [(page["id"], u) for u in page.get("bareUrls", ())]
-
-
-def interwiki_rows(page):
-    """(page_id, namespace, title)."""
-    return [(page["id"], ns, t) for ns, t in page.get("interwiki", ())]
-
-
-def disambig_rows(page):
-    """(disambig_id, line_no, pos, target_id_or_None, anchor_text) —
-    Legacy.pm:280-305 with tabs replaced by spaces."""
-    rows = []
+    disambig = []
     for line_no, group in enumerate(page.get("disambigLinks", ())):
-        for pos, a in enumerate(group):
-            rows.append(
-                (
-                    page["id"],
-                    line_no,
-                    pos,
-                    a.get("targetId"),
-                    a["anchorText"].replace("\t", " "),
-                )
-            )
+        disambig.extend(
+            (line_no, pos, a.get("targetId"),
+             a["anchorText"].replace("\t", " "))
+            for pos, a in enumerate(group)
+        )
         if not group:
-            rows.append((page["id"], line_no, None, None, None))
-    return rows
-
-
-def template_inclusion_rows(page):
-    """(page_id, template_id, incl_idx, param, value) — Legacy.pm:188-215:
-    newlines in values -> spaces; params starting with '=' skipped."""
-    rows = []
-    for template_id, incl_list in page.get("templates", {}).items():
+            disambig.append((line_no, None, None, None))
+    template_incl = []
+    for template_id, incl_list in page["templates"].items():
         for incl_idx, params in enumerate(incl_list):
-            emitted = False
-            for param, value in params.items():
-                if param.startswith("="):
-                    continue
-                rows.append(
-                    (page["id"], template_id, incl_idx, param,
-                     _NL_RE.sub(" ", value))
-                )
-                emitted = True
-            if not emitted:
-                # a parameter-less inclusion still logs a Page/End block
-                # (Legacy.pm:201-210) — keep one row so it stays visible
-                rows.append((page["id"], template_id, incl_idx, None, None))
-    return rows
+            rows = [
+                (template_id, incl_idx, param, value.replace("\n", " "))
+                for param, value in params.items()
+                if not param.startswith("=")
+            ]
+            # a parameter-less inclusion still logs a Page/End block
+            # (Legacy.pm:201-210) — keep one row so it stays visible
+            template_incl.extend(rows or [(template_id, incl_idx, None, None)])
+    return (
+        anchors,
+        list(page["categories"]),
+        list(page["interwiki"]),
+        [(l["url"], l.get("anchor")) for l in page["externalLinks"]],
+        list(page["bareUrls"]),
+        list(page["relatedArticles"]),
+        disambig,
+        template_incl,
+    )

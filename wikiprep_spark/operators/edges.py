@@ -1,47 +1,41 @@
 """Edge/triple materialization from the wide transformed-pages table.
 
-Declarative explodes + column expressions only — Catalyst prunes the wide
-table down to the columns each edge table needs, so producing one edge kind
-never pays for the others.  Writer-level text transforms follow the
-reference output writers (see functions/edges.py for the cited lines).
+Every row rule of the reference's output writers (self-link removal,
+anchor newline/whitespace cleanup, disambiguation tabs, template-value
+newlines, placeholder rows) is applied once, in the kernel writer
+functions/edges.edge_collections, before the rows cross the Arrow
+boundary.  This side only explodes: each edge table is a projection of
+one nested column (Catalyst prunes the wide table to it, so producing one
+edge kind never pays for the others), and the triples pack every kind
+into one array per row and explode it once.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+
 def _ok():
     return F.col("status") == "ok"
 
 
 def anchors_edges(transformed: DataFrame) -> DataFrame:
-    """(target_id, source_id, loc, anchor_text): resolved, non-self anchors;
-    newlines -> spaces, trimmed (Output/Legacy.pm:151-174)."""
-    a = transformed.where(_ok()).select(
-        F.col("page_id").alias("source_id"),
-        F.explode("anchors").alias("a"),
-    )
-    return a.select(
+    """(target_id, source_id, loc, anchor_text): resolved, non-self anchors
+    (Output/Legacy.pm:151-174, rules applied by the kernel writer)."""
+    return transformed.where(_ok()).select(
+        F.col("page_id").alias("source_id"), F.explode("anchors").alias("a")
+    ).select(
         F.col("a.target_id").alias("target_id"),
         "source_id",
         F.col("a.loc").alias("loc"),
-        F.trim(F.regexp_replace(F.col("a.anchor"), "\n", " ")).alias(
-            "anchor_text"
-        ),
-    ).where(F.col("target_id") != F.col("source_id"))
+        F.col("a.anchor").alias("anchor_text"),
+    )
 
 
 def links_edges(transformed: DataFrame) -> DataFrame:
-    """(source_id, target_id) distinct, self-free."""
-    a = transformed.where(_ok()).select(
-        F.col("page_id").alias("source_id"),
-        F.explode("anchors").alias("a"),
-    )
-    return (
-        a.select("source_id", F.col("a.target_id").alias("target_id"))
-        .where(F.col("target_id") != F.col("source_id"))
-        .distinct()
-    )
+    """(source_id, target_id) distinct, self-free (Legacy.pm:224-226)."""
+    return anchors_edges(transformed).select(
+        "source_id", "target_id").distinct()
 
 
 def categories_edges(transformed: DataFrame) -> DataFrame:
@@ -87,8 +81,7 @@ def bare_urls_edges(transformed: DataFrame) -> DataFrame:
 
 def disambig_edges(transformed: DataFrame) -> DataFrame:
     """(disambig_id, line_no, pos, target_id, anchor_text); one (line_no,
-    null, null, null) row marks a link-free list line.  The kernel already
-    replaced tabs in the anchors (functions/edges.disambig_rows)."""
+    null, null, null) row marks a link-free list line."""
     d = transformed.where(_ok() & (F.col("is_disambig") == 1)).select(
         F.col("page_id").alias("disambig_id"),
         F.explode("disambig").alias("d"),
@@ -103,8 +96,8 @@ def disambig_edges(transformed: DataFrame) -> DataFrame:
 
 
 def template_inclusion_edges(transformed: DataFrame) -> DataFrame:
-    """(page_id, template_id, incl_idx, param, value); values had newlines
-    replaced already; params starting with '=' were dropped in the kernel."""
+    """(page_id, template_id, incl_idx, param, value); a parameter-less
+    inclusion keeps one row with a null param and value."""
     t = transformed.where(_ok()).select(
         "page_id", F.explode("template_incl").alias("t")
     )
@@ -124,14 +117,6 @@ def pages_table(transformed: DataFrame) -> DataFrame:
         "is_stub", "is_disambig", "is_category", "is_image",
         "categories", "related", "text", "content_sha256",
     )
-
-
-PRED_TABLES = {
-    "links_to": ("links", "source_id", "target_id"),
-    "anchored_by": ("anchors", "target_id", "source_id"),
-    "in_category": ("categories", "page_id", "category_id"),
-    "related_to": ("related", "page_id", "related_id"),
-}
 
 
 def triples_from_transformed(transformed: DataFrame,
@@ -154,24 +139,15 @@ def triples_from_transformed(transformed: DataFrame,
         )
 
     nul = F.lit(None).cast("string")
-    non_self = F.filter(
-        "anchors", lambda a: a["target_id"] != F.col("page_id")
-    )
     combined = F.concat(
-        # links_to: distinct non-self anchor targets of the page
+        # links_to: the distinct anchor targets of the page
         F.transform(
-            F.array_distinct(
-                F.transform(non_self, lambda a: a["target_id"])
-            ),
+            F.array_distinct(F.transform("anchors", lambda a: a["target_id"])),
             lambda t: s(pid, "links_to", t, nul),
         ),
-        # anchored_by: newline->space + trim on the anchor text
         F.transform(
-            non_self,
-            lambda a: s(
-                a["target_id"], "anchored_by", pid,
-                F.trim(F.regexp_replace(a["anchor"], "\n", " ")),
-            ),
+            "anchors",
+            lambda a: s(a["target_id"], "anchored_by", pid, a["anchor"]),
         ),
         F.transform("categories",
                     lambda c: s(pid, "in_category", c, nul)),

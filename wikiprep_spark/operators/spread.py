@@ -23,13 +23,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def spread_small_scan(df: DataFrame, target: int | None = None) -> DataFrame:
-    """Round-robin repartition ``df`` up to ``target`` (default: the
-    session's defaultParallelism) partitions iff it is currently planned
-    with fewer — the under-parallel-scan guard.  Returns ``df`` unchanged
-    when the input is already parallel enough (the at-scale path)."""
-    sc = df.sparkSession.sparkContext
-    want = target or sc.defaultParallelism
+def spread_small_scan(df: DataFrame) -> DataFrame:
+    """Round-robin repartition ``df`` up to the session's
+    defaultParallelism partitions iff it is currently planned with fewer —
+    the under-parallel-scan guard.  Returns ``df`` unchanged when the input
+    is already parallel enough (the at-scale path)."""
+    want = df.sparkSession.sparkContext.defaultParallelism
     if want <= 1:
         return df
     try:

@@ -1,11 +1,12 @@
 """Distributed per-page transform (pipeline pass 2).
 
 One Arrow-batched mapInPandas over the parsed pages: each row runs the full
-transformOne chain (functions/page.py) against the side-loaded dictionaries
-and emits a wide row carrying the rewritten text plus every extracted
-collection as nested arrays.  Edge tables are exploded from this table in
-operators/edges.py — the expensive markup work happens exactly once per
-page.
+transformOne chain (functions/page.py) against the side-loaded dictionaries,
+then the one edge-row writer (functions/edges.edge_collections), and emits
+a wide row carrying the rewritten text plus every edge collection as nested
+arrays, the reference writers' row rules already applied.  The edge tables
+and the triples in operators/edges.py only explode this table — the markup
+work and the row rules run exactly once per page.
 """
 
 from __future__ import annotations
@@ -15,10 +16,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from wikiprep_spark.functions.edges import (
-    disambig_rows,
-    template_inclusion_rows,
-)
+from wikiprep_spark.functions.edges import EDGE_COLUMNS, edge_collections
 from wikiprep_spark.functions.page import TransformEnv, transform_one
 
 TRANSFORMED_SCHEMA = (
@@ -40,8 +38,7 @@ TRANSFORMED_SCHEMA = (
 _COLUMNS = [
     "page_id", "title", "ns", "timestamp", "status", "org_length",
     "new_length", "is_stub", "is_disambig", "is_category", "is_image",
-    "text", "anchors", "categories", "interwiki", "external", "bare_urls",
-    "related", "disambig", "template_incl", "content_sha256",
+    "text", *EDGE_COLUMNS, "content_sha256",
 ]
 
 
@@ -60,29 +57,12 @@ def _row_from_page(src, page) -> tuple:
             None, None, None, None, None, None, None, None, None,
             src["content_sha256"],
         )
-    anchors = [
-        (a.get("targetId"), a["linkLocation"], a["anchorText"])
-        for a in page["wikiLinks"]
-        if "targetId" in a
-    ]
-    interwiki = list(page["interwiki"])
-    external = [(l["url"], l.get("anchor")) for l in page["externalLinks"]]
-    disambig = [
-        (line_no, pos, target_id, anchor)
-        for (_pid, line_no, pos, target_id, anchor) in disambig_rows(page)
-    ]
-    template_incl = [
-        (tid, idx, param, value)
-        for (_pid, tid, idx, param, value) in template_inclusion_rows(page)
-    ]
     return (
         page["id"], page["title"], src["ns"], page.get("timestamp"),
         "ok", page["orgLength"], page["newLength"],
         page["isStub"], page["isDisambig"], page["isCategory"],
-        page["isImage"], page["text"],
-        anchors, list(page["categories"]), interwiki, external,
-        list(page["bareUrls"]), list(page["relatedArticles"]), disambig,
-        template_incl, src["content_sha256"],
+        page["isImage"], page["text"], *edge_collections(page),
+        src["content_sha256"],
     )
 
 

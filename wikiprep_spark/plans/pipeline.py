@@ -20,9 +20,9 @@ stand-in in this environment — swap the writer for
 A completed stage is detected by Spark's ``_SUCCESS`` marker, so a killed
 run resumes from the last finished stage without recomputing earlier ones;
 within a stage, Spark's task retry handles partial work.  Per-stage metrics
-(rows, seconds) and per-partition lineage (row counts, sha256 checksums of
-the input contents) land in ``work_dir/metrics.jsonl`` and
-``work_dir/lineage``.
+(seconds; rows as observed on the stage's write job, null for a resumed
+stage) and per-partition lineage (row counts, sha256 checksums of the input
+contents) land in ``work_dir/metrics.jsonl`` and ``work_dir/lineage``.
 """
 
 from __future__ import annotations
@@ -226,7 +226,8 @@ def run_pipeline(
             counts["transformed"] = _write(
                 transform_pages(live, dicts_path), transformed_path)
         transformed = spark.read.parquet(transformed_path)
-        metrics.record("transform", time.time() - t0)
+        metrics.record("transform", time.time() - t0,
+                       rows=counts.get("transformed"))
 
         # edge tables: lazy projections of the wide table
         for name, builder in EDGE_BUILDERS.items():
@@ -256,7 +257,8 @@ def run_pipeline(
         # documented column order
         out["triples"] = spark.read.parquet(triples_path).select(
             "subj", "pred", "obj", "prop")
-        metrics.record("triples", time.time() - t0)
+        metrics.record("triples", time.time() - t0,
+                       rows=counts.get("triples"))
     finally:
         if lineage_thread is not None:
             lineage_thread.join()
