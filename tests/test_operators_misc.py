@@ -274,17 +274,27 @@ def test_fused_pipeline_equality(spark, tmp_path):
     """The fused two-pass pipeline's lineage table equals a pure-Python
     oracle over the source rows, malformed records included: total rows,
     content_checksum = sum of crc32(sha256(content) hex digest) and
-    byte_count = sum of len(content)."""
+    byte_count = sum of len(content).  Duplicate page ids keep the first
+    page in seq order (bin/wikiprep:466-470): corpus page 1005 comes twice
+    more under "wiki/dup" and once under "!wrap", which sorts first and
+    wins."""
     import hashlib
     import json
     import zlib
 
     from wikiprep_spark.plans.pipeline import run_pipeline
-    from wikiprep_spark.sources.corpus import build_src_pages
+    from wikiprep_spark.sources.corpus import _row, build_src_pages
 
     src_dir = str(tmp_path / "src")
     bad = spark.createDataFrame(
-        [("!bad", "a.xml", "c0", "wikitext", "garbage <id>1001</id> é")],
+        [("!bad", "a.xml", "c0", "wikitext", "garbage <id>1001</id> é"),
+         ("wiki/dup", "a.xml", "c1", "wikitext",
+          _row(1005, "Dup A", "text a")[4]),
+         ("wiki/dup", "b.xml", "c2", "wikitext",
+          _row(1005, "Dup B", "text b")[4]),
+         ("!wrap", "w.xml", "c0", "wikitext",
+          "<mediawiki>" + _row(1005, "Dup W", "text w")[4]
+          + "</mediawiki>")],
         "repo string, path string, commit string, lang string, "
         "content string")
     build_src_pages(spark, "/root/testdata/sf0.001", limit=60) \
@@ -305,6 +315,11 @@ def test_fused_pipeline_equality(spark, tmp_path):
     )
     assert got == want
     assert out["_counts"]["transformed"] == out["transformed"].count() > 0
+    ids = [r["page_id"] for r in out["transformed"].select("page_id")
+           .collect()]
+    assert len(ids) == len(set(ids))
+    assert out["transformed"].where("page_id = 1005").first()["title"] \
+        == "Dup W"
     # metrics.jsonl carries the row counts observed on the write jobs
     with open(tmp_path / "w" / "metrics.jsonl") as fh:
         rows = {e["stage"]: e["rows"] for e in map(json.loads, fh)}
@@ -362,9 +377,10 @@ def test_pipeline_failure_joins_lineage_thread(spark, tmp_path,
     from wikiprep_spark.plans import pipeline
     from wikiprep_spark.sources.corpus import build_src_pages
 
-    def failing_transform(live, dicts_path):
-        return live.select(
-            "page_id",
+    def failing_transform(src_pages, dicts_path):
+        return src_pages.select(
+            F.lit(None).cast("long").alias("page_id"),
+            F.lit("").alias("seq"),
             F.raise_error(F.lit("transform boom")).cast("string")
             .alias("text"))
 

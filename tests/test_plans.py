@@ -65,48 +65,50 @@ def _plan_nodes(plan):
 
 
 def test_pipeline_pass2_parses_once(spark, monkeypatch, tmp_path):
-    """The pipeline's pass-2 input (``live``) runs the python parse once:
-    its duplicate-id loser broadcast reads the cached pass-1 parse, never
-    a second parse of the source, and no pipeline plan carries a separate
-    JVM-side XML id scan."""
+    """One python operator per pass: the transformed_pages write runs the
+    parse inside the transform kernel — one MapInPandas — and drops the
+    duplicate-id losers after it with a broadcast anti-join whose build
+    side reads the cached pass-1 parse, never a second parse; the
+    dictionary write runs no python (template bodies are preprocessed in
+    the pass-1 parse), and no plan carries a JVM-side XML id scan."""
     from wikiprep_spark.plans import pipeline
     from wikiprep_spark.sources.corpus import build_src_pages
 
-    seen, plans = {}, []
-    transform_pages, write = pipeline.transform_pages, pipeline._write
-
-    def spy_transform(parsed, dicts_path):
-        seen["live"] = parsed
-        plans.append(pa.formatted_plan(parsed))
-        return transform_pages(parsed, dicts_path)
+    writes = {}
+    write = pipeline._write
 
     def spy_write(df, path, partition_by=None):
-        plans.append(pa.formatted_plan(df))
+        writes[os.path.basename(path)] = df
         return write(df, path, partition_by)
 
-    monkeypatch.setattr(pipeline, "transform_pages", spy_transform)
     monkeypatch.setattr(pipeline, "_write", spy_write)
-    # a plain parquet source, so the only python in the plan is the parse
+    # a plain parquet source, so the only python in the plan is ours
     src_path = str(tmp_path / "src")
     build_src_pages(spark, SF001).write.parquet(src_path)
     pipeline.run_pipeline(spark, spark.read.parquet(src_path),
                           work_dir=str(tmp_path / "work"))
+    assert set(writes) == {"dicts", "transformed_pages", "triples",
+                           "lineage"}
 
-    plan = seen["live"]._jdf.queryExecution().executedPlan()
-    if plan.nodeName() == "AdaptiveSparkPlan":
-        plan = plan.executedPlan()
-    nodes = list(_plan_nodes(plan))
-    assert [n.nodeName() for n in nodes].count("MapInPandas") == 1
-    anti = [n for n in nodes if n.nodeName() == "BroadcastHashJoin"
+    def nodes(df):
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.executedPlan()
+        return list(_plan_nodes(plan))
+
+    transform = nodes(writes["transformed_pages"])
+    assert [n.nodeName() for n in transform].count("MapInPandas") == 1
+    anti = [n for n in transform if n.nodeName() == "BroadcastHashJoin"
             and "LeftAnti" in n.toString()]
     assert len(anti) == 1
     build = [n.nodeName()
              for n in _plan_nodes(anti[0].children().apply(1))]
     assert build[0] == "BroadcastExchange"
     assert "InMemoryTableScan" in build and "MapInPandas" not in build
-    # dicts, transformed_pages, triples, lineage and live itself
-    assert len(plans) == 5
-    assert not any("from_xml" in p for p in plans)
+    assert "ArrowEvalPython" not in [n.nodeName()
+                                     for n in nodes(writes["dicts"])]
+    assert not any("from_xml" in pa.formatted_plan(df)
+                   for df in writes.values())
 
 
 def test_hof_lambdas_hoist_row_constants(spark):

@@ -11,13 +11,17 @@ Shuffle budget (the part that must survive 100 TB):
   1. duplicate-id detection: a count aggregation over the (page_id, seq)
      projection of the parsed pages — the pipeline reads it from its
      cached pass-1 parse, so the python id rule (sources/mediawiki_xml.py)
-     is the only one and runs once per record; the loser row keys are
-     joined back as a BROADCAST anti join, so the full-text rows are never
-     shuffled and no second copy of the corpus is materialized.
+     is the only one and runs once per record in pass 1; the loser row
+     keys are joined back as a BROADCAST anti join — to the cached parse
+     in pass 1 and to the transform kernel's output in pass 2 — so the
+     full-text rows are never shuffled and no second copy of the corpus
+     is materialized.
   2. ONE groupBy(title_norm) aggregation computing, per title, the
      first non-redirect claim, the last redirect, and the template-body
      candidates together — all three dictionaries derive from this single
-     shuffle (only template rows carry text into it).
+     shuffle (only template rows carry text into it, already preprocessed
+     by the pass-1 parse, so the dictionaries are plain projections of
+     the aggregate and their write runs no python).
 The dictionaries are then written as one tagged parquet table that every
 transform worker side-loads (functions/dictload.py) — the Spark equivalent
 of the reference's read-only BerkeleyDB tables shared across workers
@@ -26,10 +30,7 @@ of the reference's read-only BerkeleyDB tables shared across workers
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-
-from wikiprep_spark.functions.templates import preprocess_template_body
 
 
 def dup_losers(parsed: DataFrame) -> DataFrame:
@@ -54,10 +55,11 @@ def dup_losers(parsed: DataFrame) -> DataFrame:
 
 
 def live_pages(parsed: DataFrame, losers: DataFrame) -> DataFrame:
-    """First page wins per id over ALL pages: ``parsed`` minus the
-    ``losers`` (dup_losers).  Duplicate ids are rare, so the losers form a
-    small set that broadcast-anti-joins against the full rows — no shuffle
-    of the page texts."""
+    """First page wins per id over ALL pages: ``parsed`` — any rows
+    carrying the parse's (page_id, seq), the pass-1 parse or the pass-2
+    kernel's output — minus the ``losers`` (dup_losers).  Duplicate ids
+    are rare, so the losers form a small set that broadcast-anti-joins
+    against the full rows — no shuffle of the page texts."""
     return parsed.join(F.broadcast(losers), ["page_id", "seq"], "left_anti")
 
 
@@ -152,24 +154,14 @@ def template_pages_df(agg: DataFrame) -> DataFrame:
     )
 
 
-def _preprocess_body_udf():
-    # Arrow-batched (Templates.pm:41-86 preprocessing); template pages are a
-    # small slice of the corpus but this keeps the package free of
-    # row-at-a-time Python UDFs.  Built lazily: pandas_udf resolves its DDL
-    # return type against the active session.
-    def _run(texts: pd.Series) -> pd.Series:
-        return texts.fillna("").map(preprocess_template_body)
-
-    return F.pandas_udf(_run, "string")
-
-
 def template_bodies_df(template_pages: DataFrame) -> DataFrame:
-    """(template_id, title_norm, body): preprocessed bodies
-    (Templates.pm:41-86)."""
+    """(template_id, title_norm, body): the template pages' texts, which
+    the pass-1 parse (sources/pages.parse_pages_prescan) already
+    preprocessed (Templates.pm:41-86)."""
     return template_pages.select(
         F.col("page_id").alias("template_id"),
         "title_norm",
-        _preprocess_body_udf()(F.col("text")).alias("body"),
+        F.col("text").alias("body"),
     )
 
 

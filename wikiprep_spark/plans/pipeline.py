@@ -1,18 +1,23 @@
 """End-to-end pipeline orchestration with checkpoint/resume and metrics.
 
 The reference's own two-pass architecture (bin/wikiprep: a prescan pass
-and a transform pass over the same dump), SURVEY.md §7.1:
+and a transform pass over the same dump), SURVEY.md §7.1, with one python
+operator per pass:
 
   src_pages ─ pass 1: parse (cached) ─ dup-id losers ─ prescan aggregation ─ dicts ─┐
-  src_pages ─ pass 2: re-parse fused with the transform kernel, minus the losers ───┴─ edges/triples
+  src_pages ─ pass 2: parse + transform kernel ─ minus the losers ──────────────────┴─ edges/triples
 
 Pass 1 parses with the prescan projection (page text kept only for
-templates) and caches that skinny parse: the duplicate-id losers and the
-dictionary aggregation both read it, so the python page-id rule runs once
-per record in this pass.  Pass 2 re-parses fused with the transform kernel
-in one python chain, anti-joining the same cached losers; the full parse
-is never materialized.  Re-parsing costs ~10% of the kernel and removes a
-columnar encode+decode round trip of every page text.
+templates, as the preprocessed template body) and caches that skinny
+parse: the duplicate-id losers and the dictionary aggregation both read
+it, so the python page-id rule runs once per record in this pass and the
+dictionary write runs no python.  Pass 2 parses inside the transform
+kernel (operators/transform.transform_pages), so each task starts one
+python worker, and the broadcast anti-join drops the cached losers from
+the kernel's output on (page_id, seq) — loser pages are transformed and
+then dropped, which costs little since duplicate ids are rare.  The full
+parse is never materialized.  Re-parsing costs ~10% of the kernel and
+removes a columnar encode+decode round trip of every page text.
 
 Each stage writes a parquet table under ``work_dir`` (the Iceberg-table
 stand-in in this environment — swap the writer for
@@ -180,8 +185,6 @@ def run_pipeline(
     pre = parse_pages_prescan(src_pages).persist()
     losers = prescan_ops.dup_losers(pre).persist()
     live_pre = prescan_ops.live_pages(pre, losers)
-    parsed = parse_pages(src_pages)
-    live = prescan_ops.live_pages(parsed, losers)
     # the dictionary branches and the collect job share this aggregate;
     # Spark does no cross-branch CSE, so cache it once (skinny rows — only
     # template candidates carry text).  Materialize it NOW: if the union
@@ -223,8 +226,9 @@ def run_pipeline(
         # --- pass 2: transform
         t0 = time.time()
         if not transform_done:
-            counts["transformed"] = _write(
-                transform_pages(live, dicts_path), transformed_path)
+            live = prescan_ops.live_pages(
+                transform_pages(src_pages, dicts_path), losers).drop("seq")
+            counts["transformed"] = _write(live, transformed_path)
         transformed = spark.read.parquet(transformed_path)
         metrics.record("transform", time.time() - t0,
                        rows=counts.get("transformed"))
@@ -266,7 +270,7 @@ def run_pipeline(
         raise lineage_err[0]
     metrics.save(os.path.join(work_dir, "metrics.jsonl"))
 
-    out["parsed"] = parsed
+    out["parsed"] = parse_pages(src_pages)
     out["transformed"] = transformed
     out["title2id"] = title2id
     out["redirects_raw"] = redirects

@@ -1,13 +1,16 @@
 """Stage 0: src_pages(repo, path, commit, lang, content) -> parsed pages.
 
 The input table shape is fixed by the BASELINE input hint: one MediaWiki
-page XML record per row in ``content``.  Parsing is an Arrow-batched
-mapInPandas, and the fused two-pass pipeline (plans/pipeline.py) parses
-twice, once per pass — ``parse_pages_prescan`` keeps text only for
-templates, which is all the prescan aggregation reads, and the pipeline
-caches that skinny parse (the duplicate-id losers derive from it too);
-``parse_pages`` feeds the transform kernel in the same python chain and
-is never materialized.
+page XML record per row in ``content``.  ``parse_rows`` is the one row
+rule — page id, normalized title, namespace, redirect target, ``seq`` —
+and every pass of the fused two-pass pipeline (plans/pipeline.py) runs it
+inside its one python operator: ``parse_pages_prescan`` is pass 1's, which
+keeps text only for templates, already preprocessed (Templates.pm:41-86),
+since the template bodies are all the prescan aggregation reads; the
+pipeline caches that skinny parse (the duplicate-id losers derive from it
+too).  Pass 2 parses inside the transform kernel
+(operators/transform.transform_pages), so the full parse is never
+materialized; ``parse_pages`` is that full parse as a table.
 
 ``seq`` is the total-order key replacing the reference's dump document
 order: the lexicographic (repo, path, commit) key.  Using the key itself
@@ -23,6 +26,7 @@ from pyspark.sql import DataFrame
 
 from wikiprep_spark.config import ENWIKI
 from wikiprep_spark.functions.page import parse_redirect
+from wikiprep_spark.functions.templates import preprocess_template_body
 from wikiprep_spark.functions.titles import (
     is_namespace_ok,
     normalize_title,
@@ -37,8 +41,17 @@ PARSED_SCHEMA = (
     "parse_error string, text_chars long, record_chars long"
 )
 
+PARSED_COLUMNS = [
+    "seq", "page_id", "title", "title_norm", "ns", "timestamp", "text",
+    "content_sha256", "redirect_target", "ns_ok_prescan", "is_template",
+    "parse_error", "text_chars", "record_chars",
+]
 
-def _parse_batch(batch: pd.DataFrame) -> pd.DataFrame:
+
+def parse_rows(batch: pd.DataFrame) -> list[tuple]:
+    """One PARSED_COLUMNS tuple per source row of ``batch`` (repo, path,
+    commit, content).  A record the parser rejects keeps its row, with a
+    NULL page_id and the reason in ``parse_error``."""
     site = ENWIKI
     tmpl_prefix = site.template_namespace + ":"
     rows = []
@@ -81,14 +94,11 @@ def _parse_batch(batch: pd.DataFrame) -> pd.DataFrame:
                 len(content),
             )
         )
-    return pd.DataFrame(
-        rows,
-        columns=[
-            "seq", "page_id", "title", "title_norm", "ns", "timestamp",
-            "text", "content_sha256", "redirect_target", "ns_ok_prescan",
-            "is_template", "parse_error", "text_chars", "record_chars",
-        ],
-    )
+    return rows
+
+
+def _parse_batch(batch: pd.DataFrame) -> pd.DataFrame:
+    return pd.DataFrame(parse_rows(batch), columns=PARSED_COLUMNS)
 
 
 def parse_pages(src_pages: DataFrame) -> DataFrame:
@@ -103,16 +113,21 @@ def parse_pages(src_pages: DataFrame) -> DataFrame:
 
 
 def parse_pages_prescan(src_pages: DataFrame) -> DataFrame:
-    """Prescan-projection parse: identical rows, but page text is kept ONLY
-    for Template-namespace pages (the only text the dictionary aggregation
-    reads).  Arrow-returning the full text column for every page is pure
-    transfer cost in the prescan pass of the fused two-pass pipeline."""
+    """Prescan-projection parse: identical rows, but ``text`` is kept ONLY
+    for Template-namespace pages, as the preprocessed template body
+    (Templates.pm:41-86) — the only text the dictionary aggregation reads,
+    so the dictionary write runs no python of its own.  Arrow-returning
+    the full text column for every page is pure transfer cost in the
+    prescan pass of the fused two-pass pipeline."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
             if len(batch):
                 out = _parse_batch(batch)
-                out.loc[~out["is_template"], "text"] = None
+                out["text"] = [
+                    preprocess_template_body(text or "") if tmpl else None
+                    for text, tmpl in zip(out["text"], out["is_template"])
+                ]
                 yield out
 
     return src_pages.mapInPandas(gen, schema=PARSED_SCHEMA)

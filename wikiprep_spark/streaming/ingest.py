@@ -3,8 +3,9 @@
 The reference is strictly batch (SURVEY.md §2.9) — incremental updates were
 handled offline by tools/riffle.  Spark-natively, the same per-page
 transform runs unchanged under Structured Streaming: readStream on the
-src_pages directory -> the stage-0 parse + transform mapInPandas chain ->
-append-mode edge sinks.  The prescan dictionaries are a batch artifact
+src_pages directory -> the transform kernel, the same one python operator
+that parses and transforms each record in batch pass 2 -> append-mode
+edge sinks.  The prescan dictionaries are a batch artifact
 (a tagged parquet table), matching the reference's prescan/transform split: new
 pages are transformed against the latest published dictionary snapshot and
 dictionaries are refreshed by periodic batch prescans.
@@ -18,7 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from wikiprep_spark.operators.transform import transform_pages
-from wikiprep_spark.sources.pages import parse_pages
 
 
 def stream_src_pages(spark: SparkSession, path: str,
@@ -35,11 +35,12 @@ def stream_src_pages(spark: SparkSession, path: str,
 
 
 def streaming_transform(src_stream: DataFrame, dicts_path: str) -> DataFrame:
-    """The identical parse+transform chain, applied to a streaming
-    DataFrame — mapInPandas is streaming-compatible as a stateless
-    projection.  ``dicts_path`` is the dictionary parquet exactly as in
-    batch transform_pages (a run_pipeline result's "_dicts_path")."""
-    return transform_pages(parse_pages(src_stream), dicts_path)
+    """The batch pass-2 kernel (operators/transform.transform_pages),
+    applied to a streaming DataFrame — mapInPandas is streaming-compatible
+    as a stateless projection — and emitting transformed_pages rows.
+    ``dicts_path`` is the dictionary parquet exactly as in batch (a
+    run_pipeline result's "_dicts_path")."""
+    return transform_pages(src_stream, dicts_path).drop("seq")
 
 
 def start_edge_sink(transformed: DataFrame, out_dir: str,
