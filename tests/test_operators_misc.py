@@ -499,6 +499,87 @@ def test_dup_losers_literal_id_forms(spark):
     assert got == {(7, "r\x00a.xml\x00c1"), (8, "r\x00c.xml\x00c3")}
 
 
+def test_redirect_records_match_sequential(spark):
+    """The redirect output join (Output/Composite.pm:83-125) over the title
+    aggregate equals the sequential oracle (functions/prescan.py
+    build_redirect_records) as multisets on a hostile corpus, listed in
+    dump order."""
+    from collections import Counter
+
+    from wikiprep_spark.functions.prescan import (
+        build_redirect_records,
+        prescan_pages,
+    )
+    from wikiprep_spark.operators import prescan as P
+    from wikiprep_spark.sources.mediawiki_xml import parse_page_record
+    from wikiprep_spark.sources.pages import parse_pages_prescan
+
+    pages = [
+        (1, "Beta", "article beta"),
+        (2, "Template:Infobox", "{{{1}}} box"),
+        # a redirect to a template: routed to template_redirects
+        (3, "Template:Ibox", "#REDIRECT [[Template:Infobox]]"),
+        # a redirect from a template page: a later template claims the
+        # title, so the redirect is dropped
+        (4, "Template:Old", "#REDIRECT [[Beta]]"),
+        (5, "Template:Old", "old body"),
+        # a Template-namespace redirect nothing claims: kept, from 'unknown'
+        (6, "Template:Moved", "#REDIRECT [[Beta]]"),
+        # claimed by an earlier non-redirect page: dropped
+        (7, "Alpha", "article alpha"),
+        (8, "Alpha", "#REDIRECT [[Beta]]"),
+        # claimed by a later page: kept, from_id is that claim
+        (9, "Gamma", "#REDIRECT [[Beta]]"),
+        (10, "Gamma", "article gamma"),
+        # both ends unresolvable
+        (11, "Nowhere", "#REDIRECT [[Nothing]]"),
+        # a double redirect: R1's target is no claimed title
+        (12, "R1", "#REDIRECT [[R2]]"),
+        (13, "R2", "#REDIRECT [[Beta]]"),
+        # two redirects with one title: the last wins
+        (14, "Dual", "#REDIRECT [[Beta]]"),
+        (15, "Dual", "#REDIRECT [[Alpha]]"),
+        # a Template-namespace page shadowed by an earlier same-title
+        # page is not a template id; the alias resolves to the first
+        (16, "Template:Shadow", "first shadow"),
+        (17, "Template:Shadow", "second shadow"),
+        (18, "Shadow alias", "#REDIRECT [[Template:Shadow]]"),
+        # a duplicate id loses to the first page: Zeta is never claimed
+        (1, "Zeta", "article zeta"),
+        (19, "To zeta", "#REDIRECT [[Zeta]]"),
+    ]
+    rows = [("r", "%02d.xml" % i, "c", "wikitext", _page_rec(pid, t, body))
+            for i, (pid, t, body) in enumerate(pages)]
+    src = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, "
+              "content string")
+
+    pre = parse_pages_prescan(src)
+    agg = P.title_aggregate(P.live_pages(pre, P.dup_losers(pre)))
+    recs, tmpl = P.redirect_records_df(agg)
+    got_recs = Counter(tuple(r) for r in recs.collect())
+    got_tmpl = Counter(tuple(r) for r in tmpl.collect())
+
+    want_recs, want_tmpl = build_redirect_records(
+        prescan_pages(parse_page_record(r[4]) for r in rows))
+    assert got_recs == Counter(
+        (d["from_id"], d["from_title"], d["to_id"], d["to_title"])
+        for d in want_recs)
+    assert got_tmpl == Counter(want_tmpl)
+    # the corpus reaches every case
+    assert got_tmpl == Counter({(2, "Template:Ibox"): 1,
+                                (16, "Shadow alias"): 1})
+    assert got_recs == Counter({
+        ("unknown", "Template:Moved", "1", "Beta"): 1,
+        ("10", "Gamma", "1", "Beta"): 1,
+        ("unknown", "Nowhere", "unknown", "Nothing"): 1,
+        ("unknown", "R1", "unknown", "R2"): 1,
+        ("unknown", "R2", "1", "Beta"): 1,
+        ("unknown", "Dual", "7", "Alpha"): 1,
+        ("unknown", "To zeta", "unknown", "Zeta"): 1,
+    })
+
+
 def test_near_dup_groups(spark):
     """Dedup decisions: transitively-linked near-dups collapse to one
     min-id representative; unique docs represent themselves."""

@@ -64,39 +64,65 @@ def _plan_nodes(plan):
         yield from _plan_nodes(kids.apply(i))
 
 
-def test_pipeline_pass2_parses_once(spark, monkeypatch, tmp_path):
+@pytest.fixture(scope="module")
+def pipeline_writes(spark, tmp_path_factory):
+    """One run_pipeline over the sf0.001 parquet source (a plain parquet
+    source, so the only python in the plans is ours) with a spy on
+    ``_write``.  Returns, per written table, the DataFrame handed to the
+    writer and the job description in force on the writing thread; the
+    pipeline's output dict; and the job description after the call, which
+    the caller set to ``caller`` before it."""
+    from wikiprep_spark.plans import pipeline
+    from wikiprep_spark.sources.corpus import build_src_pages
+
+    sc = spark.sparkContext
+    tmp = tmp_path_factory.mktemp("pipeline_plans")
+    writes, descriptions = {}, {}
+    write = pipeline._write
+
+    def spy_write(df, path, partition_by=None):
+        name = os.path.basename(path)
+        writes[name] = df
+        descriptions[name] = sc.getLocalProperty("spark.job.description")
+        return write(df, path, partition_by)
+
+    src_path = str(tmp / "src")
+    build_src_pages(spark, SF001).write.parquet(src_path)
+    sc.setJobDescription("caller")
+    try:
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(pipeline, "_write", spy_write)
+            out = pipeline.run_pipeline(spark, spark.read.parquet(src_path),
+                                        work_dir=str(tmp / "work"))
+        after = sc.getLocalProperty("spark.job.description")
+    finally:
+        sc.setJobDescription(None)
+    return writes, descriptions, out, after
+
+
+def _nodes(df):
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return list(_plan_nodes(plan))
+
+
+def _count(nodes, cls):
+    return sum(1 for n in nodes if n.getClass().getSimpleName() == cls)
+
+
+def test_pipeline_pass2_parses_once(pipeline_writes):
     """One python operator per pass: the transformed_pages write runs the
     parse inside the transform kernel — one MapInPandas — and drops the
     duplicate-id losers after it with a broadcast anti-join whose build
     side reads the cached pass-1 parse, never a second parse; the
     dictionary write runs no python (template bodies are preprocessed in
     the pass-1 parse), and no plan carries a JVM-side XML id scan."""
-    from wikiprep_spark.plans import pipeline
-    from wikiprep_spark.sources.corpus import build_src_pages
-
-    writes = {}
-    write = pipeline._write
-
-    def spy_write(df, path, partition_by=None):
-        writes[os.path.basename(path)] = df
-        return write(df, path, partition_by)
-
-    monkeypatch.setattr(pipeline, "_write", spy_write)
-    # a plain parquet source, so the only python in the plan is ours
-    src_path = str(tmp_path / "src")
-    build_src_pages(spark, SF001).write.parquet(src_path)
-    pipeline.run_pipeline(spark, spark.read.parquet(src_path),
-                          work_dir=str(tmp_path / "work"))
+    writes = pipeline_writes[0]
     assert set(writes) == {"dicts", "transformed_pages", "triples",
                            "lineage"}
 
-    def nodes(df):
-        plan = df._jdf.queryExecution().executedPlan()
-        if plan.nodeName() == "AdaptiveSparkPlan":
-            plan = plan.executedPlan()
-        return list(_plan_nodes(plan))
-
-    transform = nodes(writes["transformed_pages"])
+    transform = _nodes(writes["transformed_pages"])
     assert [n.nodeName() for n in transform].count("MapInPandas") == 1
     anti = [n for n in transform if n.nodeName() == "BroadcastHashJoin"
             and "LeftAnti" in n.toString()]
@@ -106,9 +132,41 @@ def test_pipeline_pass2_parses_once(spark, monkeypatch, tmp_path):
     assert build[0] == "BroadcastExchange"
     assert "InMemoryTableScan" in build and "MapInPandas" not in build
     assert "ArrowEvalPython" not in [n.nodeName()
-                                     for n in nodes(writes["dicts"])]
+                                     for n in _nodes(writes["dicts"])]
     assert not any("from_xml" in pa.formatted_plan(df)
                    for df in writes.values())
+
+
+def test_pipeline_tail_one_broadcast(spark, pipeline_writes):
+    """The redirect records are one broadcast join over the cached title
+    aggregate: the triples write plan holds exactly one BroadcastExchange
+    and no shuffle, its build side reading the cache.  The session lets
+    AQE size the cached aggregate, so it reads back with fewer partitions
+    than spark.sql.shuffle.partitions, and no write that consumes the
+    caches (pre, losers, agg) gains a shuffle from the changed output
+    partitioning."""
+    writes, _, out, _ = pipeline_writes
+    triples = _nodes(writes["triples"])
+    assert _count(triples, "BroadcastExchangeExec") == 1
+    join = [n for n in triples if n.nodeName() == "BroadcastHashJoin"]
+    assert len(join) == 1
+    assert "InMemoryTableScan" in [
+        n.nodeName() for n in _plan_nodes(join[0].children().apply(1))]
+    for name in ("dicts", "transformed_pages", "triples"):
+        assert _count(_nodes(writes[name]), "ShuffleExchangeExec") == 0, name
+    assert out["title2id"].rdd.getNumPartitions() < int(
+        spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+def test_pipeline_job_descriptions(pipeline_writes):
+    """Every job is described <query>:<stage>; the overlapped lineage write
+    keeps its own description, and the caller's is restored."""
+    _, descriptions, _, after = pipeline_writes
+    assert descriptions == {"dicts": "kg_pipeline:prescan",
+                            "transformed_pages": "kg_pipeline:transform",
+                            "triples": "kg_pipeline:triples",
+                            "lineage": "lineage"}
+    assert after == "caller"
 
 
 def test_hof_lambdas_hoist_row_constants(spark):

@@ -25,7 +25,9 @@ Shuffle budget (the part that must survive 100 TB):
 The dictionaries are then written as one tagged parquet table that every
 transform worker side-loads (functions/dictload.py) — the Spark equivalent
 of the reference's read-only BerkeleyDB tables shared across workers
-(bin/wikiprep:482-512).
+(bin/wikiprep:482-512).  The redirect output join reads the same aggregate:
+a redirect's from-side is its own row, so only the to-side is looked up,
+with one broadcast of the claimed titles.
 """
 
 from __future__ import annotations
@@ -116,24 +118,34 @@ def title2id_df(agg: DataFrame) -> DataFrame:
     )
 
 
+def _surviving_redirect():
+    """A row's last redirect survives unless an earlier non-redirect page
+    already claimed its title (the exists-check at Link.pm:53 runs BEFORE
+    redirect parsing)."""
+    return F.col("last_red").isNotNull() & (
+        F.col("claim").isNull()
+        | (F.col("claim.seq") > F.col("last_red.seq"))
+    )
+
+
+def _claim_is_template():
+    """The row's claim page is a template page.  A non-redirect
+    Template-namespace page is a template candidate and always passes its
+    own gate (it is the title's first claim), so the test is row-local: the
+    claim appears in the same row's ``tmpls``.  False for an unclaimed
+    title."""
+    return F.col("claim").isNotNull() & F.exists(
+        "tmpls", lambda t: t["seq"] == F.col("claim.seq"))
+
+
 def redirects_df(agg: DataFrame) -> DataFrame:
     """(from_title, to_title, from_page_id): the redirect map.  A redirect
-    is dropped when an earlier non-redirect page already claimed its title
-    (the exists-check at Link.pm:53 runs BEFORE redirect parsing); among
-    survivors the LAST one wins."""
-    return (
-        agg.where(
-            F.col("last_red").isNotNull()
-            & (
-                F.col("claim").isNull()
-                | (F.col("claim.seq") > F.col("last_red.seq"))
-            )
-        )
-        .select(
-            F.col("title_norm").alias("from_title"),
-            F.col("last_red.redirect_target").alias("to_title"),
-            F.col("last_red.page_id").alias("from_page_id"),
-        )
+    is dropped when an earlier non-redirect page already claimed its title;
+    among survivors the LAST one wins."""
+    return agg.where(_surviving_redirect()).select(
+        F.col("title_norm").alias("from_title"),
+        F.col("last_red.redirect_target").alias("to_title"),
+        F.col("last_red.page_id").alias("from_page_id"),
     )
 
 
@@ -171,7 +183,7 @@ def tagged_dicts_df(title2id: DataFrame, redirects: DataFrame,
     persisted form of the reference's prescanSave output, written as
     parquet in one distributed job (no driver roundtrip) and side-loaded
     by the transform workers via functions/dictload.py."""
-    tagged = (
+    return (
         title2id.select(
             F.lit("t").alias("kind"),
             F.col("title_norm").alias("k"),
@@ -192,61 +204,45 @@ def tagged_dicts_df(title2id: DataFrame, redirects: DataFrame,
             )
         )
     )
-    # the 3-way union triples the partition count of the (cached) title
-    # aggregate it reads, so a write fans out into 3x as many tiny tasks
-    # and files as the data warrants.  Coalesce (narrow, no shuffle) by
-    # that factor and pack ~4 aggregate partitions per write task on top
-    # (//12): measured ~0.5s off the prescan stage at sf0.1, and fewer,
-    # better-sized dict files at any scale; parallelism still grows
-    # linearly with the aggregate's own partition count
-    n_parts = tagged.rdd.getNumPartitions()
-    if n_parts > 12:
-        tagged = tagged.coalesce(n_parts // 12)
-    return tagged
 
 
-def redirect_records_df(redirects: DataFrame, title2id: DataFrame,
-                        template_bodies: DataFrame):
-    """The redirect output join (Output/Composite.pm:83-125): resolve both
-    endpoints ('unknown' when missing), drop redirects FROM templates, split
-    off redirects TO templates as template-index entries.
+def redirect_records_df(agg: DataFrame):
+    """The redirect output join (Output/Composite.pm:83-125) over the title
+    aggregate: resolve both endpoints against title2id ('unknown' when
+    missing), drop redirects FROM templates, split off redirects TO
+    templates as template-index entries.
 
-    Returns (redirect_records, template_redirect_records).  Both joins are
-    broadcast-able: title2id and the template list are the dimension side.
+    The from-side is row-local: ``from_title`` is the aggregate's key, so
+    ``from_id`` is the row's claim — set when a LATER non-redirect page
+    claimed the title — and whether it is a template is _claim_is_template.
+    Only the to-side needs a lookup: one broadcast left join against the
+    claimed titles with their ids and template flags.
+
+    Returns (redirect_records, template_redirect_records).
     """
-    tmpl_ids = template_bodies.select(
-        F.col("template_id").alias("_tmpl_id")
-    ).distinct()
-
-    t2i_from = title2id.select(
-        F.col("title_norm").alias("from_title"),
-        F.col("page_id").alias("_from_id"),
-    )
-    t2i_to = title2id.select(
+    claims = agg.where(F.col("claim").isNotNull()).select(
         F.col("title_norm").alias("to_title"),
-        F.col("page_id").alias("_to_id"),
+        F.col("claim.page_id").alias("_to_id"),
+        _claim_is_template().alias("_to_tmpl"),
     )
     resolved = (
-        redirects.join(F.broadcast(t2i_from), "from_title", "left")
-        .join(F.broadcast(t2i_to), "to_title", "left")
-        .join(
-            F.broadcast(tmpl_ids),
-            F.col("_from_id") == F.col("_tmpl_id"),
-            "left_anti",
+        agg.where(_surviving_redirect() & ~_claim_is_template())
+        .select(
+            F.col("title_norm").alias("from_title"),
+            F.col("last_red.redirect_target").alias("to_title"),
+            F.col("claim.page_id").alias("_from_id"),
         )
-        .join(
-            F.broadcast(tmpl_ids.withColumnRenamed("_tmpl_id", "_tmpl_to")),
-            F.col("_to_id") == F.col("_tmpl_to"),
-            "left",
-        )
+        .join(F.broadcast(claims), "to_title", "left")
     )
-    redirect_records = resolved.where(F.col("_tmpl_to").isNull()).select(
+    redirect_records = resolved.where(
+        ~F.coalesce(F.col("_to_tmpl"), F.lit(False))
+    ).select(
         F.coalesce(F.col("_from_id").cast("string"), F.lit("unknown")).alias("from_id"),
         "from_title",
         F.coalesce(F.col("_to_id").cast("string"), F.lit("unknown")).alias("to_id"),
         "to_title",
     )
-    template_redirects = resolved.where(F.col("_tmpl_to").isNotNull()).select(
+    template_redirects = resolved.where(F.col("_to_tmpl")).select(
         F.col("_to_id").alias("template_id"),
         F.col("from_title").alias("alias_title"),
     )

@@ -4,8 +4,9 @@ The reference's own two-pass architecture (bin/wikiprep: a prescan pass
 and a transform pass over the same dump), SURVEY.md §7.1, with one python
 operator per pass:
 
-  src_pages ─ pass 1: parse (cached) ─ dup-id losers ─ prescan aggregation ─ dicts ─┐
-  src_pages ─ pass 2: parse + transform kernel ─ minus the losers ──────────────────┴─ edges/triples
+  src_pages ─ pass 1: parse (cached) ─ dup-id losers ─ title aggregate (cached) ─ dicts ─┐
+  src_pages ─ pass 2: parse + transform kernel ─ minus the losers ──────────────────────┴─ edges/triples
+                                            title aggregate ─ redirect records ─┘
 
 Pass 1 parses with the prescan projection (page text kept only for
 templates, as the preprocessed template body) and caches that skinny
@@ -18,6 +19,17 @@ the kernel's output on (page_id, seq) — loser pages are transformed and
 then dropped, which costs little since duplicate ids are rare.  The full
 parse is never materialized.  Re-parsing costs ~10% of the kernel and
 removes a columnar encode+decode round trip of every page text.
+
+The pipeline's tail pays for its rows, not for its job count.  The
+redirect records (Output/Composite.pm:83-125) are one broadcast left join
+over the cached title aggregate (operators/prescan.redirect_records_df);
+the session lets AQE size the three caches (plans/session.py), so the
+dictionary write and the redirect triples run one task per aggregate
+partition that holds data; and both read-backs pass their known schema,
+so no schema-inference job runs.  Every job the pipeline submits is
+described ``kg_pipeline:<stage>`` (prescan, transform, triples; the
+overlapped lineage write is ``lineage``), and the caller's job
+description is restored on return.
 
 Each stage writes a parquet table under ``work_dir`` (the Iceberg-table
 stand-in in this environment — swap the writer for
@@ -42,8 +54,14 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from wikiprep_spark.operators import edges as edge_ops
 from wikiprep_spark.operators import prescan as prescan_ops
-from wikiprep_spark.operators.transform import transform_pages
+from wikiprep_spark.operators.transform import (
+    TRANSFORMED_SCHEMA,
+    transform_pages,
+)
 from wikiprep_spark.sources.pages import parse_pages, parse_pages_prescan
+
+# the triples table as written, pred its partition column
+TRIPLES_SCHEMA = "subj string, pred string, obj string, prop string"
 
 EDGE_BUILDERS = {
     "anchors": edge_ops.anchors_edges,
@@ -169,12 +187,26 @@ def run_pipeline(
                          "mode; fuse_parse=False is not supported")
     if work_dir is None:
         work_dir = tempfile.mkdtemp(prefix="wikiprep_work_")
+    sc = spark.sparkContext
+    caller_description = sc.getLocalProperty("spark.job.description")
+    try:
+        return _run_pipeline(spark, src_pages, work_dir, resume)
+    finally:
+        sc.setJobDescription(caller_description)
+
+
+def _run_pipeline(spark: SparkSession, src_pages: DataFrame, work_dir: str,
+                  resume: bool) -> dict:
+    def stage(name: str):
+        spark.sparkContext.setJobDescription("kg_pipeline:" + name)
+
     metrics = Metrics()
     out: dict = {}
     counts: dict = {}
 
     # --- pass 1: prescan — one title-keyed aggregation for all three
     # dictionaries; id-dedup is a broadcast anti join (no full-data shuffle)
+    stage("prescan")
     t0 = time.time()
     # the dictionary aggregation reads text only for template pages — parse
     # with the prescan projection so the pass doesn't Arrow-ship every
@@ -224,12 +256,15 @@ def run_pipeline(
             0.0 if transform_done else 1.5, lineage_err)
     try:
         # --- pass 2: transform
+        stage("transform")
         t0 = time.time()
         if not transform_done:
             live = prescan_ops.live_pages(
                 transform_pages(src_pages, dicts_path), losers).drop("seq")
             counts["transformed"] = _write(live, transformed_path)
-        transformed = spark.read.parquet(transformed_path)
+        # read back with the known schema: no schema-inference job
+        transformed = spark.read.schema(TRANSFORMED_SCHEMA).parquet(
+            transformed_path)
         metrics.record("transform", time.time() - t0,
                        rows=counts.get("transformed"))
 
@@ -237,18 +272,18 @@ def run_pipeline(
         for name, builder in EDGE_BUILDERS.items():
             out[name] = builder(transformed)
 
-        # redirect records: distributed output join against the cached
-        # title aggregate (Output/Composite.pm:83-125); both dimension
-        # sides broadcast
+        # redirect records: the output join (Output/Composite.pm:83-125)
+        # over the cached title aggregate — row-local from-side, one
+        # broadcast of the claimed titles for the to-side
         redirect_records, template_redirects = (
-            prescan_ops.redirect_records_df(redirects, title2id,
-                                            template_bodies))
+            prescan_ops.redirect_records_df(agg))
         out["redirect_records"] = redirect_records
         out["template_redirects"] = template_redirects
         out["template_index"] = template_index
 
         # single-scan triple derivation (the edge tables above remain
         # available as pruned per-kind projections)
+        stage("triples")
         t0 = time.time()
         triples_path = os.path.join(work_dir, "triples")
         if not (resume and _stage_done(triples_path)):
@@ -259,8 +294,8 @@ def run_pipeline(
                 triples_path, partition_by="pred")
         # the partitioned read-back moves pred last; restore the
         # documented column order
-        out["triples"] = spark.read.parquet(triples_path).select(
-            "subj", "pred", "obj", "prop")
+        out["triples"] = spark.read.schema(TRIPLES_SCHEMA).parquet(
+            triples_path).select("subj", "pred", "obj", "prop")
         metrics.record("triples", time.time() - t0,
                        rows=counts.get("triples"))
     finally:

@@ -49,6 +49,19 @@ def build_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # let AQE coalesce the shuffle partitions of a cached plan, as it
+        # does for any other.  The engine's only caches are the
+        # pipeline's three: the pass-1 parse (pre), its duplicate-id
+        # losers and the title aggregate (agg).  The two that end in a
+        # shuffle, losers and agg, otherwise keep
+        # spark.sql.shuffle.partitions partitions however few rows they
+        # hold, and every consumer fans out into that many near-empty
+        # tasks and files (the dictionary write, the redirect triples).
+        # Their consumers are narrow or broadcast, so no plan gains an
+        # exchange from the changed output partitioning
+        # (tests/test_plans.py guards this)
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+                "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # big page texts: keep Arrow batches modest so executor memory is
         # bounded by batch_size * max_page_size, not partition size
