@@ -1,6 +1,7 @@
 """Graph, dedup, similarity and pipeline operator tests (small data)."""
 
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from wikiprep_spark.operators import dedup, graph, similarity
@@ -110,6 +111,43 @@ def test_connected_components_path_needs_three_rounds(spark, ids):
     got = {tuple(r) for r in graph.connected_components(
         df, max_iterations=2).collect()}
     assert got != set(_union_find_components(edges).items())
+
+
+@pytest.mark.parametrize("edges", [
+    [(3, 7)],
+    [(5, 1), (1, 9), (2, 1), (1, 4)],
+], ids=["pair", "star"])
+def test_connected_components_star_ends_after_seed(spark, edges):
+    """A component shaped as a star around its minimum (a near-dup pair or
+    cluster) is final after the seeded labels, so the loop checkpoints
+    ``sym`` and one round only — no second round to confirm it."""
+    df = spark.createDataFrame(edges, "src long, dst long")
+    checkpoint, calls = type(df).localCheckpoint, []
+
+    def counting(self, *args, **kwargs):
+        calls.append(1)
+        return checkpoint(self, *args, **kwargs)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(type(df), "localCheckpoint", counting)
+        got = {tuple(r) for r in graph.connected_components(df).collect()}
+    assert got == set(_union_find_components(edges).items())
+    assert len(calls) == 2
+
+
+_GRAPHS = st.lists(st.tuples(st.integers(0, 15), st.integers(0, 15)),
+                   max_size=14)
+
+
+@pytest.mark.parametrize("ids", ["long", "string"])
+@settings(max_examples=8, deadline=None)
+@given(edges=_GRAPHS)
+def test_connected_components_matches_union_find(spark, ids, edges):
+    """Seeded min-label propagation equals union-find on random small
+    graphs (self-loops, duplicate and reversed edges, long paths)."""
+    edges, df = _cc_edges(spark, edges, ids)
+    got = {tuple(r) for r in graph.connected_components(df).collect()}
+    assert got == set(_union_find_components(edges).items())
 
 
 @pytest.fixture(scope="module")
@@ -717,8 +755,9 @@ def _inline_signatures(toks, num_hashes):
 
 @pytest.mark.parametrize("shingle", [1, 2, 3, 5])
 def test_token_sets_and_signatures_match_inline_form(spark, shingle):
-    """The hoisted word array and token hashes give the same token sets
-    and signatures, row for row, as the expressions they replace."""
+    """The hoisted word array and the aggregated signatures give the same
+    token sets and signatures, row for row, as the inline expressions,
+    also for NULL text and for docs shorter than the shingle."""
     base = "the quick brown fox jumps over the lazy dog near the river bank"
     docs = spark.createDataFrame(
         [
@@ -731,6 +770,8 @@ def test_token_sets_and_signatures_match_inline_form(spark, shingle):
             (6, base),
             (7, base.replace("lazy", "sleepy")),
             (8, base.upper()),
+            (9, None),
+            (10, "short doc"),
         ],
         "doc_id long, text string",
     )

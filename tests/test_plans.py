@@ -187,3 +187,26 @@ def test_hof_lambdas_hoist_row_constants(spark):
     sigs = dedup.minhash_signatures(docs, toks=toks.localCheckpoint())
     assert evals(sigs, "xxhash64") == 1
     assert evals(textops.lang_id(docs), "regexp_replace") == 1
+
+
+def test_minhash_signatures_one_compiled_aggregate(spark):
+    """The signatures are one groupBy(doc) of min aggregates over the
+    exploded token hashes: no higher-order-function lambda is left for
+    the interpreter to run per token per permutation."""
+    from wikiprep_spark.operators import dedup
+
+    docs = spark.read.parquet(os.path.join(SF001, "documents.parquet"))
+    toks = dedup._token_sets(docs, "doc_id", "text", shingle=3)
+    sigs = dedup.minhash_signatures(docs, toks=toks.localCheckpoint())
+    plan = sigs._jdf.queryExecution().optimizedPlan().toString()
+    assert "lambdafunction" not in plan
+    assert len(re.findall(r"\bAggregate \[", plan)) == 1
+
+
+def test_pipeline_dicts_one_explode(pipeline_writes):
+    """The dictionary write is one projection of the cached title
+    aggregate exploded once — no Union of per-kind branches, which ran a
+    task and left a part file per branch per aggregate partition."""
+    names = [n.nodeName() for n in _nodes(pipeline_writes[0]["dicts"])]
+    assert "Union" not in names
+    assert names.count("Generate") == 1

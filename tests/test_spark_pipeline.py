@@ -27,6 +27,12 @@ SF_DIR = "/root/testdata/sf0.001"
 TAB_DISAMBIG = _row(9000, "Tabbed (disambiguation)",
                     "{{dab}}\n* [[Doc 1|left\tright]] is an article\n"
                     "* [[Doc 2]] is another")
+# a disambiguation page with an unresolved list anchor and a link-free
+# list line: both stay in the disambig table (Legacy.pm writes them) but
+# name no object, so neither may become a triple
+LOOSE_DISAMBIG = _row(9002, "Loose (disambiguation)",
+                      "{{dab}}\n* [[No such page]] is missing\n"
+                      "* a line with no link\n* [[Doc 3]] is an article")
 # an article whose anchors end/start with a tab: the writer strips all
 # surrounding whitespace (Python's str.strip), not only spaces
 TAB_ANCHORS = _row(9001, "Tabbed anchors",
@@ -36,7 +42,7 @@ TAB_ANCHORS = _row(9001, "Tabbed anchors",
 @pytest.fixture(scope="module")
 def corpus(spark):
     extra = spark.createDataFrame(
-        [TAB_DISAMBIG, TAB_ANCHORS],
+        [TAB_DISAMBIG, TAB_ANCHORS, LOOSE_DISAMBIG],
         "repo string, path string, commit string, lang string, "
         "content string")
     return build_src_pages(spark, SF_DIR, limit=LIMIT).unionByName(
@@ -169,6 +175,12 @@ def test_analytic_expectations(result):
                  .where("pred = 'disambiguates'").collect()]
     assert "left right" in dis_props
     assert not any("\t" in (p or "") for p in dis_props)
+    loose = {(r["line_no"], r["target_id"])
+             for r in result["disambig"].collect()
+             if r["disambig_id"] == 9002}
+    assert (2, 1003) in loose and sum(t is None for _, t in loose) == 2
+    assert result["triples"].where(
+        "pred = 'disambiguates' AND obj IS NULL").count() == 0
 
     tab_anchors = {(r["target_id"], r["anchor_text"])
                    for r in result["anchors"].where("source_id = 9001")
@@ -213,7 +225,8 @@ def _triples_view(links, anchors, categories, redirects, related,
         .unionByName(t(redirects, "from_id", "redirects_to", "to_id",
                        "to_title"))
         .unionByName(t(related, "page_id", "related_to", "related_id"))
-        .unionByName(t(disambig, "disambig_id", "disambiguates", "target_id",
+        .unionByName(t(disambig.where(F.col("target_id").isNotNull()),
+                       "disambig_id", "disambiguates", "target_id",
                        "anchor_text"))
         .unionByName(t(external, "source_id", "links_external", "url",
                        "anchor"))

@@ -5,7 +5,9 @@ hashing via xxhash64/md5, shingling via split/transform, banding via
 pmod — so the plans stay in the JVM and shuffle only on the grouping keys.
 Higher-order functions (transform, filter, aggregate) are interpreted per
 element rather than code-generated, so row-constant work (the normalized
-word array, the token hashes) is projected as a column below them.
+word array) is projected as a column below them, and a per-element
+reduction (the minhash minima) runs as exploded rows under compiled
+aggregates instead.
 Designed for the ``documents`` table shape (doc_id, text, ...), but any
 (id, text) pair works.
 """
@@ -199,29 +201,29 @@ def minhash_signatures(
     """(doc, sig: array<long>) minhash signatures over token sets.
 
     Permutation h_i(x) = (a_i * (xxhash64(x) mod M) + b_i) mod M with
-    deterministic odd multipliers, no shuffle at all.  The token hashes
-    are computed once per row into a long array (``_h``); each of the
-    ``num_hashes`` permutations is then an ``array_min`` over a transform
-    of those longs, so no permutation lambda re-hashes a string.
+    deterministic odd multipliers.  The token sets are exploded once and
+    each token is hashed once (``_h``); the ``num_hashes`` permutation
+    minima are then plain ``min`` aggregates of one ``groupBy(doc)``, which
+    whole-stage codegen compiles, instead of ``array_min(transform(...))``
+    lambdas interpreted per token per permutation.  ``explode_outer``
+    keeps a NULL or empty token set as one NULL-hash row, so its signature
+    stays all-NULL.  ``doc`` must be a row key (``id_col`` is one in every
+    caller's input): rows sharing a ``doc`` merge into one signature.
     ``toks`` optionally supplies a prebuilt (doc, toks) frame so a caller
     that also needs the token sets (LSH verify) computes them once.
     """
     if toks is None:
         toks = _token_sets(docs, id_col, text_col, shingle)
-
-    def perm(a, b):
-        # closure factory: pyspark inspects lambda arity, so defaults-as-
-        # captures would be misread as extra lambda arguments
-        return lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(_MERSENNE))
-
-    hashed = toks.select("doc", F.transform(
-        "toks", lambda t: F.pmod(F.xxhash64(t), F.lit(_MERSENNE))
-    ).alias("_h"))
-    sig_cols = [
-        F.array_min(F.transform("_h", perm(2 * i + 1, 1000003 * (i + 1))))
-        for i in range(num_hashes)
-    ]
-    return hashed.select("doc", F.array(*sig_cols).alias("sig"))
+    m = F.lit(_MERSENNE)
+    # xxhash64(NULL) is its seed, not NULL: keep the empty set's row NULL
+    t = F.col("_t")
+    hashed = toks.select("doc", F.explode_outer("toks").alias("_t")).select(
+        "doc", F.when(t.isNotNull(), F.pmod(F.xxhash64(t), m)).alias("_h"))
+    h = F.col("_h")
+    mins = [F.min(F.pmod(h * F.lit(2 * i + 1) + F.lit(1000003 * (i + 1)), m))
+            .alias("_m%d" % i) for i in range(num_hashes)]
+    return hashed.groupBy("doc").agg(*mins).select(
+        "doc", F.array(*["_m%d" % i for i in range(num_hashes)]).alias("sig"))
 
 
 def _minhash_bands(sigs: DataFrame, num_hashes: int,

@@ -127,7 +127,9 @@ def triples_from_transformed(transformed: DataFrame,
     eight separate scans for the per-kind edge tables.  Semantically
     identical to the union of the individual edge tables (tested); at
     scale this is the difference between one and eight passes over the
-    transformed corpus."""
+    transformed corpus.  A ``disambiguates`` triple is emitted only for a
+    disambiguation entry with a resolved ``target_id``, so no triple has
+    a NULL object."""
     pid = F.col("page_id").cast("string")
 
     def s(subj, pred, obj, prop):
@@ -152,8 +154,10 @@ def triples_from_transformed(transformed: DataFrame,
         F.transform("categories",
                     lambda c: s(pid, "in_category", c, nul)),
         F.transform("related", lambda r: s(pid, "related_to", r, nul)),
+        # only resolved list anchors name an object; the disambig table
+        # keeps the unresolved and link-free-line rows for Legacy.pm
         F.transform(
-            "disambig",
+            F.filter("disambig", lambda d: d["target_id"].isNotNull()),
             lambda d: s(pid, "disambiguates", d["target_id"], d["anchor"]),
         ),
         F.transform("external",

@@ -13,10 +13,14 @@ drop-double rule) and connected components over title-equivalence edges.
   cut lineage growth.  Each has ONE convergence probe that rides the
   round's checkpoint job as an ``Observation``: the closure sums depths,
   the components loop asks whether any row's label changed (exact for
-  any orderable label type — long ids and title strings alike).
+  any orderable label type — long ids and title strings alike).  The
+  components labels start from each node's neighborhood minimum, so a
+  star-shaped component (a near-dup pair or cluster) ends after one round.
   ``component_representatives`` turns a pair graph into the min-id
   representative decision both near-dup operators return.
-- ``pagerank`` runs a fixed number of iterations, no probe.
+- ``pagerank`` runs a fixed number of iterations, no probe; its node
+  count and per-iteration dangling mass are Observations on the
+  checkpoint jobs.
 - ``triangle_counts`` is one pass: degree-ordered orientation, wedges,
   and a closing semi-join.
 """
@@ -105,11 +109,16 @@ def connected_components(
     compression. Returns (node, component) where component is the smallest
     node id in the component.
 
-    Each round: every node adopts the minimum label among itself and its
-    neighbors' labels, then labels are compressed by pointing at the label's
-    own label.  Converges in O(log diameter) rounds on most graphs; the
-    loop stops after the first round in which no label changed, so node
-    ids of any orderable type (long ids, title strings) share one probe.
+    Labels are seeded with each node's minimum over itself and its
+    neighbors (one ``groupBy`` over the symmetric edges), not with the
+    node's own id.  Each round: every node adopts the minimum label among
+    itself and its neighbors' labels, then labels are compressed by
+    pointing at the label's own label.  Converges in O(log diameter)
+    rounds on most graphs; the loop stops after the first round in which
+    no label changed, so node ids of any orderable type (long ids, title
+    strings) share one probe.  A component shaped as a star around its
+    minimum (every near-dup pair, every planted cluster) is final after
+    the seed, so its loop ends after one round.
     """
     sym = (
         # both orientations from ONE pass over the edge producer: the
@@ -129,11 +138,13 @@ def connected_components(
         # Spark re-executes the whole upstream per consuming job
         .localCheckpoint()
     )
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-    )
+    # seed: each node's minimum over itself and its neighbors — in its
+    # component and no larger than the node, which is all the min-label
+    # fixpoint needs; a star around its minimum is final here, so round 1
+    # only confirms it
+    labels = sym.groupBy("a").agg(
+        F.least(F.col("a"), F.min("b")).alias("component")
+    ).withColumnRenamed("a", "node")
     for _ in range(max_iterations):
         neighbor_min = (
             sym.join(labels, sym.b == labels.node)
@@ -221,46 +232,53 @@ def pagerank(
     outside the loop and checkpointed, so each iteration is one
     src-keyed broadcast-or-shuffle join plus one dst-keyed aggregation —
     the same two-exchange round as connected_components — with
-    ``localCheckpoint`` per round to cut lineage.  The dangling mass is a
-    map-side scalar aggregate (bounded driver pull, like the convergence
-    probes above).  Fixed iteration count (no convergence probe) keeps
-    the computation a closed deterministic function of the edge set, so
-    an unrolled relational twin can gate it exactly.
+    ``localCheckpoint`` per round to cut lineage.  The node frame carries
+    an ``is_dangling`` flag (the node never appears as a source), and
+    every scalar the loop needs rides a checkpoint job as an
+    ``Observation``: the node and dangling counts on the node frame's,
+    each iteration's dangling mass on the previous ranks'.  So no job runs
+    for a count or a per-iteration driver pull.  Fixed iteration count (no
+    convergence probe) keeps the computation a closed deterministic
+    function of the edge set, so an unrolled relational twin can gate it
+    exactly.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    # one aggregation over both endpoints: a node is dangling iff every
+    # appearance is as a destination
+    obs = Observation()
     nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
+        e.select(F.explode(F.array(
+            F.struct(F.col("src").alias("node"), F.lit(False).alias("d")),
+            F.struct(F.col("dst").alias("node"), F.lit(True).alias("d")),
+        )).alias("_n"))
+        .groupBy("_n.node")
+        .agg(F.bool_and("_n.d").alias("is_dangling"))
+        .observe(obs, F.count(F.lit(1)).alias("n"),
+                 F.sum(F.col("is_dangling").cast("long")).alias("nd"))
         .localCheckpoint()
     )
-    n_nodes = nodes.count()
+    n_nodes = obs.get["n"]
     if n_nodes == 0:
-        return nodes.withColumn("rank", F.lit(0.0))
+        return nodes.select("node", F.lit(0.0).alias("rank"))
     outdeg = e.groupBy("src").agg(
         F.count("*").cast("double").alias("deg"))
     # (src, dst, deg): the loop-invariant join, materialized once
     ew = e.join(outdeg, "src").localCheckpoint()
-    dangling = nodes.join(
-        outdeg.select(F.col("src").alias("node")), "node", "left_anti"
-    ).localCheckpoint()
     inv_n = 1.0 / n_nodes
     ranks = nodes.withColumn("rank", F.lit(inv_n))
+    dm = obs.get["nd"] * inv_n
     for _ in range(iterations):
         contrib = (
-            ew.join(ranks.withColumnRenamed("node", "src"), "src")
+            ew.join(ranks.select(F.col("node").alias("src"), "rank"), "src")
             .groupBy("dst")
             .agg(F.sum(F.col("rank") / F.col("deg")).alias("contrib"))
             .withColumnRenamed("dst", "node")
         )
-        dm = (
-            ranks.join(dangling, "node", "left_semi")
-            .agg(F.sum("rank")).first()[0]
-        ) or 0.0
+        obs = Observation()
         ranks = (
             nodes.join(contrib, "node", "left")
             .select(
-                "node",
+                "node", "is_dangling",
                 (
                     F.lit((1.0 - damping) * inv_n)
                     + F.lit(damping)
@@ -268,8 +286,11 @@ def pagerank(
                        + F.lit(dm * inv_n))
                 ).alias("rank"),
             )
+            .observe(obs, F.sum(F.when(F.col("is_dangling"), F.col("rank")))
+                     .alias("dm"))
             .localCheckpoint()
         )
+        dm = obs.get["dm"] or 0.0
     return ranks.select("node", F.round("rank", round_to).alias("rank"))
 
 

@@ -149,16 +149,20 @@ def redirects_df(agg: DataFrame) -> DataFrame:
     )
 
 
-def template_pages_df(agg: DataFrame) -> DataFrame:
-    """Template-namespace pages that pass Templates::prescan's gate: the
+def _template_passes(t):
+    """Templates::prescan's gate for one ``tmpls`` entry ``t``: the
     Link::prescan call returned true — not shadowed by an earlier
     same-title page."""
+    return F.col("claim").isNull() | (F.col("claim.seq") >= t["seq"])
+
+
+def template_pages_df(agg: DataFrame) -> DataFrame:
+    """Template-namespace pages that pass Templates::prescan's gate
+    (_template_passes)."""
     t = agg.select(
         "title_norm", "claim", F.explode("tmpls").alias("t")
     )
-    return t.where(
-        F.col("claim").isNull() | (F.col("claim.seq") >= F.col("t.seq"))
-    ).select(
+    return t.where(_template_passes(F.col("t"))).select(
         F.col("t.page_id").alias("page_id"),
         "title_norm",
         F.col("t.text").alias("text"),
@@ -177,33 +181,32 @@ def template_bodies_df(template_pages: DataFrame) -> DataFrame:
     )
 
 
-def tagged_dicts_df(title2id: DataFrame, redirects: DataFrame,
-                    template_bodies: DataFrame) -> DataFrame:
+def tagged_dicts_df(agg: DataFrame) -> DataFrame:
     """All three dictionaries as one tagged (kind, k, v) table — the
     persisted form of the reference's prescanSave output, written as
     parquet in one distributed job (no driver roundtrip) and side-loaded
-    by the transform workers via functions/dictload.py."""
-    return (
-        title2id.select(
-            F.lit("t").alias("kind"),
-            F.col("title_norm").alias("k"),
-            F.col("page_id").cast("string").alias("v"),
-        )
-        .unionByName(
-            redirects.select(
-                F.lit("r").alias("kind"),
-                F.col("from_title").alias("k"),
-                F.col("to_title").alias("v"),
-            )
-        )
-        .unionByName(
-            template_bodies.select(
-                F.lit("b").alias("kind"),
-                F.col("template_id").cast("string").alias("k"),
-                F.col("body").alias("v"),
-            )
-        )
-    )
+    by the transform workers via functions/dictload.py.
+
+    One projection of the title aggregate: per row, the title's claim
+    (``t``), its surviving redirect (``r``) and its gated template bodies
+    (``b``) are packed into one array and exploded once, as the triples
+    are — the same rows as title2id_df, redirects_df and
+    template_bodies_df, without a union, so the write runs one task per
+    aggregate partition."""
+    def entry(kind, k, v):
+        return F.struct(F.lit(kind).alias("kind"), k.alias("k"),
+                        v.cast("string").alias("v"))
+
+    claim = F.when(F.col("claim").isNotNull(), entry(
+        "t", F.col("title_norm"), F.col("claim.page_id")))
+    redirect = F.when(_surviving_redirect(), entry(
+        "r", F.col("title_norm"), F.col("last_red.redirect_target")))
+    bodies = F.transform(
+        F.filter("tmpls", _template_passes),
+        lambda t: entry("b", t["page_id"].cast("string"), t["text"]))
+    return agg.select(F.explode(F.concat(
+        F.array_compact(F.array(claim, redirect)), bodies)).alias("d")
+    ).select("d.kind", "d.k", "d.v")
 
 
 def redirect_records_df(agg: DataFrame):

@@ -217,12 +217,12 @@ def _run_pipeline(spark: SparkSession, src_pages: DataFrame, work_dir: str,
     pre = parse_pages_prescan(src_pages).persist()
     losers = prescan_ops.dup_losers(pre).persist()
     live_pre = prescan_ops.live_pages(pre, losers)
-    # the dictionary branches and the collect job share this aggregate;
-    # Spark does no cross-branch CSE, so cache it once (skinny rows — only
-    # template candidates carry text).  Materialize it NOW: if the union
-    # branches of the dictionary write race a cold cache inside one job,
-    # each branch recomputes the full parse upstream (measured 4x prescan
-    # blowup on a 4-executor cluster before this count)
+    # the dictionary write and both sides of the redirect join share this
+    # aggregate; Spark does no cross-branch CSE, so cache it once (skinny
+    # rows — only template candidates carry text).  Materialize it NOW: if
+    # two branches of one job race a cold cache, each recomputes the full
+    # parse upstream (measured 4x prescan blowup on a 4-executor cluster,
+    # when the dictionary write was a 3-way union, before this count)
     agg = prescan_ops.title_aggregate(live_pre).persist()
     agg.count()
     title2id = prescan_ops.title2id_df(agg)
@@ -240,8 +240,7 @@ def _run_pipeline(spark: SparkSession, src_pages: DataFrame, work_dir: str,
     n_dict_rows = None
     dicts_path = os.path.join(work_dir, "dicts")
     if not (resume and _stage_done(dicts_path)):
-        n_dict_rows = _write(prescan_ops.tagged_dicts_df(
-            title2id, redirects, template_bodies), dicts_path)
+        n_dict_rows = _write(prescan_ops.tagged_dicts_df(agg), dicts_path)
     metrics.record("prescan", time.time() - t0, dict_rows=n_dict_rows)
 
     transformed_path = os.path.join(work_dir, "transformed_pages")
