@@ -309,13 +309,15 @@ def test_lsh_topk_subset_of_exact(spark):
 
 
 def test_fused_pipeline_equality(spark, tmp_path):
-    """The fused two-pass pipeline's lineage table equals a pure-Python
-    oracle over the source rows, malformed records included: total rows,
-    content_checksum = sum of crc32(sha256(content) hex digest) and
-    byte_count = sum of len(content).  Duplicate page ids keep the first
-    page in seq order (bin/wikiprep:466-470): corpus page 1005 comes twice
-    more under "wiki/dup" and once under "!wrap", which sorts first and
-    wins."""
+    """The fused two-pass pipeline's lineage table equals, row for row, a
+    JVM-side oracle over the source partitions (spark_partition_id,
+    crc32(sha2(content, 256)), length(content)), and its totals equal a
+    pure-Python oracle over the source rows, malformed records and a
+    non-BMP character included: total rows, content_checksum = sum of
+    crc32(sha256(content) hex digest) and byte_count = sum of
+    len(content).  Duplicate page ids keep the first page in seq order
+    (bin/wikiprep:466-470): corpus page 1005 comes twice more under
+    "wiki/dup" and once under "!wrap", which sorts first and wins."""
     import hashlib
     import json
     import zlib
@@ -331,7 +333,7 @@ def test_fused_pipeline_equality(spark, tmp_path):
          ("wiki/dup", "b.xml", "c2", "wikitext",
           _row(1005, "Dup B", "text b")[4]),
          ("!wrap", "w.xml", "c0", "wikitext",
-          "<mediawiki>" + _row(1005, "Dup W", "text w")[4]
+          "<mediawiki>" + _row(1005, "Dup W", "text w \U0001F600")[4]
           + "</mediawiki>")],
         "repo string, path string, commit string, lang string, "
         "content string")
@@ -343,6 +345,16 @@ def test_fused_pipeline_equality(spark, tmp_path):
     out = run_pipeline(spark, src, work_dir=str(tmp_path / "w"),
                        resume=False)
     lineage = spark.read.parquet(str(tmp_path / "w" / "lineage"))
+    per_partition = (
+        src.select(F.spark_partition_id().alias("partition_id"),
+                   F.crc32(F.sha2("content", 256)).alias("crc"),
+                   F.length("content").alias("record_chars"))
+        .groupBy("partition_id")
+        .agg(F.count("*").alias("rows"),
+             F.sum("crc").alias("content_checksum"),
+             F.sum("record_chars").alias("byte_count")))
+    assert sorted(map(tuple, lineage.collect())) == sorted(
+        map(tuple, per_partition.collect()))
     got = tuple(lineage.agg(F.sum("rows"), F.sum("content_checksum"),
                             F.sum("byte_count")).first())
     want = (
@@ -406,9 +418,10 @@ def test_pipeline_resume_skips_finished_stages(spark, tmp_path):
 
 def test_pipeline_failure_joins_lineage_thread(spark, tmp_path,
                                                monkeypatch):
-    """A failing transform write propagates its error only after the
-    overlapped lineage writer has been joined — no thread is left writing
-    into work_dir."""
+    """A failing transform write propagates its error and leaves nothing
+    writing into work_dir: the lineage is a synchronous stage written
+    before the transform, so its table is complete, and no lineage
+    thread is started."""
     import os
     import threading
 
@@ -454,10 +467,10 @@ def _live_vs_first_wins_oracle(spark, src):
     records the oracle rejected."""
     from wikiprep_spark.operators import prescan as P
     from wikiprep_spark.sources.mediawiki_xml import parse_page_record
-    from wikiprep_spark.sources.pages import parse_pages, parse_pages_prescan
+    from wikiprep_spark.sources.pages import parse_pages_prescan
 
-    live = P.live_pages(parse_pages(src),
-                        P.dup_losers(parse_pages_prescan(src)))
+    pre = parse_pages_prescan(src)
+    live = P.live_pages(pre, P.dup_losers(pre))
     got = {tuple(r) for r in live.select("page_id", "seq").collect()}
 
     first, rejected = {}, set()
@@ -498,7 +511,7 @@ def test_dup_losers_from_src_equivalence(spark):
         # first, so it is the 1005 that wins) and a doubly-wrapped one
         # (rejected)
         ("!wrap", "w.xml", "c0", "wikitext",
-         "<mediawiki>" + _row(1005, "Dup W", "text w")[4] + "</mediawiki>"),
+         "<mediawiki>" + _row(1005, "Dup W", "text w \U0001F600")[4] + "</mediawiki>"),
         ("!wrap2", "w.xml", "c0", "wikitext",
          "<export><mediawiki>" + _row(1005, "Dup W2", "text w2")[4]
          + "</mediawiki></export>"),

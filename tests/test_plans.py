@@ -159,14 +159,36 @@ def test_pipeline_tail_one_broadcast(spark, pipeline_writes):
 
 
 def test_pipeline_job_descriptions(pipeline_writes):
-    """Every job is described <query>:<stage>; the overlapped lineage write
-    keeps its own description, and the caller's is restored."""
+    """Every job is described <query>:<stage>, and the caller's
+    description is restored."""
     _, descriptions, _, after = pipeline_writes
     assert descriptions == {"dicts": "kg_pipeline:prescan",
+                            "lineage": "kg_pipeline:lineage",
                             "transformed_pages": "kg_pipeline:transform",
-                            "triples": "kg_pipeline:triples",
-                            "lineage": "lineage"}
+                            "triples": "kg_pipeline:triples"}
     assert after == "caller"
+
+
+def test_pipeline_lineage_reads_the_pass1_cache(pipeline_writes):
+    """The lineage is an aggregate of the cached pass-1 parse: its write
+    plan reads an InMemoryTableScan, scans no file and hashes nothing
+    (the parse already carries each record's sha256).  Outside that
+    cache, the source parquet is scanned once, by the transformed_pages
+    write — two scans of the source per run, not three."""
+    writes = pipeline_writes[0]
+    lineage = _nodes(writes["lineage"])
+    assert _count(lineage, "InMemoryTableScanExec") == 1
+    assert _count(lineage, "FileSourceScanExec") == 0
+    assert "sha2(" not in pa.formatted_plan(writes["lineage"])
+
+    def source_scans(df):
+        return [n for n in _nodes(df)
+                if n.getClass().getSimpleName() == "FileSourceScanExec"
+                and n.relation().location().rootPaths().head().getName()
+                == "src"]
+
+    assert {name: len(source_scans(df)) for name, df in writes.items()} == {
+        "dicts": 0, "lineage": 0, "transformed_pages": 1, "triples": 0}
 
 
 def test_hof_lambdas_hoist_row_constants(spark):

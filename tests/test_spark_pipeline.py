@@ -16,6 +16,7 @@ from wikiprep_spark.functions.prescan import prescan_pages
 from wikiprep_spark.plans.pipeline import run_pipeline
 from wikiprep_spark.sources.corpus import _row, build_src_pages
 from wikiprep_spark.sources.mediawiki_xml import parse_page_record
+from wikiprep_spark.sources.pages import parse_pages_prescan
 
 LIMIT = 60
 SF_DIR = "/root/testdata/sf0.001"
@@ -65,12 +66,13 @@ def sequential(corpus):
     return pre, results
 
 
-def test_sha256_invariant(corpus, result):
+def test_sha256_invariant(corpus):
     expected = {
         hashlib.sha256(r["content"].encode()).hexdigest()
         for r in corpus.select("content").collect()
     }
-    got = {r["content_sha256"] for r in result["parsed"].collect()}
+    got = {r["content_sha256"]
+           for r in parse_pages_prescan(corpus).collect()}
     assert got == expected
 
 

@@ -2,23 +2,25 @@
 
 The reference's own two-pass architecture (bin/wikiprep: a prescan pass
 and a transform pass over the same dump), SURVEY.md §7.1, with one python
-operator per pass:
+operator per pass; the source is read twice, once per pass:
 
-  src_pages ─ pass 1: parse (cached) ─ dup-id losers ─ title aggregate (cached) ─ dicts ─┐
-  src_pages ─ pass 2: parse + transform kernel ─ minus the losers ──────────────────────┴─ edges/triples
-                                            title aggregate ─ redirect records ─┘
+  src_pages ─ pass 1: parse (cached) ─┬─ dup-id losers ─ title aggregate (cached) ─ dicts ─┐
+                                      └─ lineage                                           │
+  src_pages ─ pass 2: parse + transform kernel ─ minus the losers ─────────────────────────┴─ edges/triples
+                                            title aggregate ─ redirect records ────────────┘
 
 Pass 1 parses with the prescan projection (page text kept only for
 templates, as the preprocessed template body) and caches that skinny
-parse: the duplicate-id losers and the dictionary aggregation both read
-it, so the python page-id rule runs once per record in this pass and the
-dictionary write runs no python.  Pass 2 parses inside the transform
-kernel (operators/transform.transform_pages), so each task starts one
-python worker, and the broadcast anti-join drops the cached losers from
-the kernel's output on (page_id, seq) — loser pages are transformed and
-then dropped, which costs little since duplicate ids are rare.  The full
-parse is never materialized.  Re-parsing costs ~10% of the kernel and
-removes a columnar encode+decode round trip of every page text.
+parse: the duplicate-id losers, the dictionary aggregation and the
+lineage all read it, so in this pass the python page-id rule runs once
+per record and each record is hashed once, and neither the dictionary nor
+the lineage write runs python.  Pass 2 parses inside the transform kernel
+(operators/transform.transform_pages), so each task starts one python
+worker, and the broadcast anti-join drops the cached losers from the
+kernel's output on (page_id, seq) — loser pages are transformed and then
+dropped, which costs little since duplicate ids are rare.  The full parse
+is never materialized.  Re-parsing costs ~10% of the kernel and removes a
+columnar encode+decode round trip of every page text.
 
 The pipeline's tail pays for its rows, not for its job count.  The
 redirect records (Output/Composite.pm:83-125) are one broadcast left join
@@ -27,19 +29,20 @@ the session lets AQE size the three caches (plans/session.py), so the
 dictionary write and the redirect triples run one task per aggregate
 partition that holds data; and both read-backs pass their known schema,
 so no schema-inference job runs.  Every job the pipeline submits is
-described ``kg_pipeline:<stage>`` (prescan, transform, triples; the
-overlapped lineage write is ``lineage``), and the caller's job
-description is restored on return.
+described ``kg_pipeline:<stage>`` (prescan, lineage, transform, triples),
+and the caller's job description is restored on return.
 
 Each stage writes a parquet table under ``work_dir`` (the Iceberg-table
 stand-in in this environment — swap the writer for
 ``writeTo(...).createOrReplace()`` on a cluster with an Iceberg catalog).
 A completed stage is detected by Spark's ``_SUCCESS`` marker, so a killed
-run resumes from the last finished stage without recomputing earlier ones;
-within a stage, Spark's task retry handles partial work.  Per-stage metrics
-(seconds; rows as observed on the stage's write job, null for a resumed
-stage) and per-partition lineage (row counts, sha256 checksums of the input
-contents) land in ``work_dir/metrics.jsonl`` and ``work_dir/lineage``.
+run resumes by skipping the writes of the finished stages; pass 1's parse
+and title aggregate are not written and re-run on every call, since the
+redirect records and the losers read them.  Within a stage, Spark's task
+retry handles partial work.  Per-stage metrics (seconds; rows as observed
+on the stage's write job, null for a resumed stage) and per-partition
+lineage (row counts, sha256 checksums of the input contents) land in
+``work_dir/metrics.jsonl`` and ``work_dir/lineage``.
 """
 
 from __future__ import annotations
@@ -47,7 +50,6 @@ from __future__ import annotations
 import json
 import os
 import tempfile
-import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -58,7 +60,7 @@ from wikiprep_spark.operators.transform import (
     TRANSFORMED_SCHEMA,
     transform_pages,
 )
-from wikiprep_spark.sources.pages import parse_pages, parse_pages_prescan
+from wikiprep_spark.sources.pages import parse_pages_prescan
 
 # the triples table as written, pred its partition column
 TRIPLES_SCHEMA = "subj string, pred string, obj string, prop string"
@@ -115,17 +117,18 @@ def _write(df: DataFrame, path: str, partition_by=None) -> int | None:
         return None
 
 
-def lineage_src_df(src_pages: DataFrame) -> DataFrame:
-    """Per-input-partition lineage, computed entirely JVM-side from the
-    source table: row count, an order-insensitive checksum (sum of
-    crc32(sha256(content))) and the raw record chars.  Verifies the
-    per-row content invariant survives every re-run / resume, malformed
-    records included."""
+def lineage_df(pre: DataFrame) -> DataFrame:
+    """Per-input-partition lineage, an aggregate of the cached pass-1
+    parse: it keeps one row per source row (malformed records included)
+    in the source's partitioning, with the sha256 of each raw record and
+    its length already computed.  Row count, an order-insensitive
+    checksum (sum of crc32(content_sha256)) and the raw record chars:
+    the per-row content invariant survives every re-run / resume."""
     return (
-        src_pages.select(
+        pre.select(
             F.spark_partition_id().alias("partition_id"),
-            F.crc32(F.sha2("content", 256)).alias("crc"),
-            F.length("content").alias("record_chars"),
+            F.crc32("content_sha256").alias("crc"),
+            "record_chars",
         )
         .groupBy("partition_id")
         .agg(
@@ -134,30 +137,6 @@ def lineage_src_df(src_pages: DataFrame) -> DataFrame:
             F.sum("record_chars").alias("byte_count"),
         )
     )
-
-
-def _start_lineage(spark: SparkSession, src_pages: DataFrame, path: str,
-                   delay: float, errors: list) -> threading.Thread:
-    """Submit the lineage write from a driver thread.  It reads only
-    src_pages — independent of the transform/triples chain — so its tasks
-    back-fill task slots freed by the transform stage's tail instead of
-    serializing ~1.5s of pure JVM hashing at the end (guide §2.6).  FIFO
-    pools give the EARLIER job priority, so ``delay`` lets the transform
-    job get in flight first; failures land in ``errors``."""
-    lin = lineage_src_df(src_pages)
-
-    def job():
-        time.sleep(delay)
-        try:
-            spark.sparkContext.setJobDescription("lineage")
-            _write(lin, path)
-        except BaseException as exc:  # surfaced after the join
-            errors.append(exc)
-
-    thread = threading.Thread(target=job, name="wikiprep-lineage",
-                              daemon=True)
-    thread.start()
-    return thread
 
 
 def run_pipeline(
@@ -175,12 +154,13 @@ def run_pipeline(
     ``fuse_parse`` is accepted for callers of the former multi-mode
     signature; the fused mode is the only one, so ``False`` raises.
 
-    Returns a dict of DataFrames: parsed, transformed, every edge table,
-    redirect_records, template_index, triples (subj, pred, obj, prop),
-    plus "_metrics" (the Metrics object), "_dicts_path" (the tagged
-    dictionary parquet functions/dictload.load_env_from_parquet reads) and
-    "_counts" (row counts observed on the write jobs of the stages that
-    ran; callers should prefer these over re-scanning with .count()).
+    Returns a dict of DataFrames: transformed, every edge table,
+    redirect_records, template_redirects, title2id, redirects_raw,
+    template_bodies, triples (subj, pred, obj, prop), plus "_metrics" (the
+    Metrics object), "_dicts_path" (the tagged dictionary parquet
+    functions/dictload.load_env_from_parquet reads) and "_counts" (row
+    counts observed on the write jobs of the stages that ran; callers
+    should prefer these over re-scanning with .count()).
     """
     if not fuse_parse:
         raise ValueError("run_pipeline has one mode, the fused two-pass "
@@ -229,10 +209,6 @@ def _run_pipeline(spark: SparkSession, src_pages: DataFrame, work_dir: str,
     redirects = prescan_ops.redirects_df(agg)
     template_pages = prescan_ops.template_pages_df(agg)
     template_bodies = prescan_ops.template_bodies_df(template_pages)
-    template_index = template_pages.select(
-        F.col("page_id").alias("template_id"),
-        F.col("title_norm").alias("title"),
-    )
 
     # the dictionaries persist as one shared tagged parquet table
     # (prescanSave equivalent; distributed write, no driver roundtrip) —
@@ -243,68 +219,59 @@ def _run_pipeline(spark: SparkSession, src_pages: DataFrame, work_dir: str,
         n_dict_rows = _write(prescan_ops.tagged_dicts_df(agg), dicts_path)
     metrics.record("prescan", time.time() - t0, dict_rows=n_dict_rows)
 
-    transformed_path = os.path.join(work_dir, "transformed_pages")
-    transform_done = resume and _stage_done(transformed_path)
+    # lineage: an aggregate of the cached parse, so the source is scanned
+    # and each record hashed once in this pass
+    stage("lineage")
+    t0 = time.time()
     lineage_path = os.path.join(work_dir, "lineage")
-    lineage_thread = None
-    lineage_err: list = []
+    n_lineage_rows = None
     if not (resume and _stage_done(lineage_path)):
-        # no head start to give when the transform stage is resumed
-        lineage_thread = _start_lineage(
-            spark, src_pages, lineage_path,
-            0.0 if transform_done else 1.5, lineage_err)
-    try:
-        # --- pass 2: transform
-        stage("transform")
-        t0 = time.time()
-        if not transform_done:
-            live = prescan_ops.live_pages(
-                transform_pages(src_pages, dicts_path), losers).drop("seq")
-            counts["transformed"] = _write(live, transformed_path)
-        # read back with the known schema: no schema-inference job
-        transformed = spark.read.schema(TRANSFORMED_SCHEMA).parquet(
-            transformed_path)
-        metrics.record("transform", time.time() - t0,
-                       rows=counts.get("transformed"))
+        n_lineage_rows = _write(lineage_df(pre), lineage_path)
+    metrics.record("lineage", time.time() - t0, rows=n_lineage_rows)
 
-        # edge tables: lazy projections of the wide table
-        for name, builder in EDGE_BUILDERS.items():
-            out[name] = builder(transformed)
+    # --- pass 2: transform
+    stage("transform")
+    t0 = time.time()
+    transformed_path = os.path.join(work_dir, "transformed_pages")
+    if not (resume and _stage_done(transformed_path)):
+        live = prescan_ops.live_pages(
+            transform_pages(src_pages, dicts_path), losers).drop("seq")
+        counts["transformed"] = _write(live, transformed_path)
+    # read back with the known schema: no schema-inference job
+    transformed = spark.read.schema(TRANSFORMED_SCHEMA).parquet(
+        transformed_path)
+    metrics.record("transform", time.time() - t0,
+                   rows=counts.get("transformed"))
 
-        # redirect records: the output join (Output/Composite.pm:83-125)
-        # over the cached title aggregate — row-local from-side, one
-        # broadcast of the claimed titles for the to-side
-        redirect_records, template_redirects = (
-            prescan_ops.redirect_records_df(agg))
-        out["redirect_records"] = redirect_records
-        out["template_redirects"] = template_redirects
-        out["template_index"] = template_index
+    # edge tables: lazy projections of the wide table
+    for name, builder in EDGE_BUILDERS.items():
+        out[name] = builder(transformed)
 
-        # single-scan triple derivation (the edge tables above remain
-        # available as pruned per-kind projections)
-        stage("triples")
-        t0 = time.time()
-        triples_path = os.path.join(work_dir, "triples")
-        if not (resume and _stage_done(triples_path)):
-            # partitioned by predicate: partition pruning for per-edge reads
-            counts["triples"] = _write(
-                edge_ops.triples_from_transformed(transformed,
-                                                  redirect_records),
-                triples_path, partition_by="pred")
-        # the partitioned read-back moves pred last; restore the
-        # documented column order
-        out["triples"] = spark.read.schema(TRIPLES_SCHEMA).parquet(
-            triples_path).select("subj", "pred", "obj", "prop")
-        metrics.record("triples", time.time() - t0,
-                       rows=counts.get("triples"))
-    finally:
-        if lineage_thread is not None:
-            lineage_thread.join()
-    if lineage_err:
-        raise lineage_err[0]
+    # redirect records: the output join (Output/Composite.pm:83-125) over
+    # the cached title aggregate — row-local from-side, one broadcast of
+    # the claimed titles for the to-side
+    redirect_records, template_redirects = (
+        prescan_ops.redirect_records_df(agg))
+    out["redirect_records"] = redirect_records
+    out["template_redirects"] = template_redirects
+
+    # single-scan triple derivation (the edge tables above remain
+    # available as pruned per-kind projections)
+    stage("triples")
+    t0 = time.time()
+    triples_path = os.path.join(work_dir, "triples")
+    if not (resume and _stage_done(triples_path)):
+        # partitioned by predicate: partition pruning for per-edge reads
+        counts["triples"] = _write(
+            edge_ops.triples_from_transformed(transformed, redirect_records),
+            triples_path, partition_by="pred")
+    # the partitioned read-back moves pred last; restore the documented
+    # column order
+    out["triples"] = spark.read.schema(TRIPLES_SCHEMA).parquet(
+        triples_path).select("subj", "pred", "obj", "prop")
+    metrics.record("triples", time.time() - t0, rows=counts.get("triples"))
     metrics.save(os.path.join(work_dir, "metrics.jsonl"))
 
-    out["parsed"] = parse_pages(src_pages)
     out["transformed"] = transformed
     out["title2id"] = title2id
     out["redirects_raw"] = redirects

@@ -7,10 +7,10 @@ and every pass of the fused two-pass pipeline (plans/pipeline.py) runs it
 inside its one python operator: ``parse_pages_prescan`` is pass 1's, which
 keeps text only for templates, already preprocessed (Templates.pm:41-86),
 since the template bodies are all the prescan aggregation reads; the
-pipeline caches that skinny parse (the duplicate-id losers derive from it
-too).  Pass 2 parses inside the transform kernel
-(operators/transform.transform_pages), so the full parse is never
-materialized; ``parse_pages`` is that full parse as a table.
+pipeline caches that skinny parse, and the duplicate-id losers and the
+per-partition lineage derive from it too.  Pass 2 parses inside the
+transform kernel (operators/transform.transform_pages), so the full parse
+is never materialized.
 
 ``seq`` is the total-order key replacing the reference's dump document
 order: the lexicographic (repo, path, commit) key.  Using the key itself
@@ -62,9 +62,9 @@ def parse_rows(batch: pd.DataFrame) -> list[tuple]:
         try:
             rec = parse_page_record(content)
         except ValueError as exc:
-            # content_sha256 is still the sha of the raw record so the
-            # lineage checksum stays comparable with the JVM-side
-            # sha2(content) even on dirty dumps
+            # content_sha256 and record_chars still describe the raw
+            # record: the pipeline's lineage sums them over every source
+            # row, dirty records included
             rows.append(
                 (seq, None, None, None, None, None, None,
                  sha256_hex(content), None, False, False, str(exc), 0,
@@ -97,24 +97,10 @@ def parse_rows(batch: pd.DataFrame) -> list[tuple]:
     return rows
 
 
-def _parse_batch(batch: pd.DataFrame) -> pd.DataFrame:
-    return pd.DataFrame(parse_rows(batch), columns=PARSED_COLUMNS)
-
-
-def parse_pages(src_pages: DataFrame) -> DataFrame:
-    """src_pages -> parsed page table (one XML parse per row, Arrow-batched)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            if len(batch):
-                yield _parse_batch(batch)
-
-    return src_pages.mapInPandas(gen, schema=PARSED_SCHEMA)
-
-
 def parse_pages_prescan(src_pages: DataFrame) -> DataFrame:
-    """Prescan-projection parse: identical rows, but ``text`` is kept ONLY
-    for Template-namespace pages, as the preprocessed template body
+    """src_pages -> pass 1's parse: one ``parse_rows`` row per source row
+    (one XML parse per row, Arrow-batched), but ``text`` is kept ONLY for
+    Template-namespace pages, as the preprocessed template body
     (Templates.pm:41-86) — the only text the dictionary aggregation reads,
     so the dictionary write runs no python of its own.  Arrow-returning
     the full text column for every page is pure transfer cost in the
@@ -123,7 +109,7 @@ def parse_pages_prescan(src_pages: DataFrame) -> DataFrame:
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
             if len(batch):
-                out = _parse_batch(batch)
+                out = pd.DataFrame(parse_rows(batch), columns=PARSED_COLUMNS)
                 out["text"] = [
                     preprocess_template_body(text or "") if tmpl else None
                     for text, tmpl in zip(out["text"], out["is_template"])
