@@ -382,6 +382,7 @@ def test_pipeline_resume_skips_finished_stages(spark, tmp_path):
     stages whose _SUCCESS marker exists, and must recompute exactly the
     stage whose marker was removed."""
     import os
+    import shutil
 
     from wikiprep_spark.plans.pipeline import run_pipeline
     from wikiprep_spark.sources.corpus import build_src_pages
@@ -414,6 +415,23 @@ def test_pipeline_resume_skips_finished_stages(spark, tmp_path):
     assert set(third["_counts"]) == {"triples"}
     assert third["triples"].count() == n_triples
     assert {st: mtimes(st) for st in before} == before
+
+    # cold resume of the finished run: a copy of the source matches no
+    # cached plan, and past the caller's own read of it the call starts
+    # no job — not even the pass-1 parse
+    cold_dir = str(tmp_path / "src_copy")
+    shutil.copytree(src_dir, cold_dir)
+    cold_src = spark.read.parquet(cold_dir)
+    sc = spark.sparkContext
+    sc.setJobGroup("cold_resume", "cold_resume")
+    try:
+        cold = run_pipeline(spark, cold_src, work_dir=wd, resume=True)
+        jobs = sc.statusTracker().getJobIdsForGroup("cold_resume")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert jobs == []
+    assert cold["triples"].count() == n_triples
 
 
 def test_pipeline_failure_joins_lineage_thread(spark, tmp_path,

@@ -154,7 +154,7 @@ def test_pipeline_tail_one_broadcast(spark, pipeline_writes):
         n.nodeName() for n in _plan_nodes(join[0].children().apply(1))]
     for name in ("dicts", "transformed_pages", "triples"):
         assert _count(_nodes(writes[name]), "ShuffleExchangeExec") == 0, name
-    assert out["title2id"].rdd.getNumPartitions() < int(
+    assert out["template_bodies"].rdd.getNumPartitions() < int(
         spark.conf.get("spark.sql.shuffle.partitions"))
 
 

@@ -10,6 +10,7 @@ import hashlib
 
 import pytest
 
+from wikiprep_spark.functions.dictload import load_env_from_parquet
 from wikiprep_spark.functions.edges import EDGE_COLUMNS, edge_collections
 from wikiprep_spark.functions.page import TransformEnv, transform_one
 from wikiprep_spark.functions.prescan import prescan_pages
@@ -77,16 +78,17 @@ def test_sha256_invariant(corpus):
 
 
 def test_prescan_matches_sequential(result, sequential):
+    """The written dictionary table, loaded exactly as the transform
+    kernel loads it, equals the sequential prescan; the returned redirect
+    map is that table's redirect rows."""
     pre, _ = sequential
-    t2i = {r["title_norm"]: r["page_id"]
-           for r in result["title2id"].collect()}
+    t2i, redir, bodies = load_env_from_parquet(result["_dicts_path"])
     assert t2i == pre["title2id"]
-    red = {r["from_title"]: r["to_title"]
-           for r in result["redirects_raw"].collect()}
-    assert red == pre["redir"]
-    bodies = {r["template_id"]: r["body"]
-              for r in result["template_bodies"].collect()}
+    assert redir == pre["redir"]
     assert bodies == pre["templates"]
+    red = [(r["from_title"], r["to_title"])
+           for r in result["redirects_raw"].collect()]
+    assert sorted(red) == sorted(pre["redir"].items())
 
 
 def test_edges_match_sequential(result, sequential):

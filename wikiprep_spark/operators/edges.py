@@ -73,12 +73,6 @@ def external_edges(transformed: DataFrame) -> DataFrame:
     )
 
 
-def bare_urls_edges(transformed: DataFrame) -> DataFrame:
-    return transformed.where(_ok()).select(
-        "page_id", F.posexplode("bare_urls").alias("pos", "url")
-    )
-
-
 def disambig_edges(transformed: DataFrame) -> DataFrame:
     """(disambig_id, line_no, pos, target_id, anchor_text); one (line_no,
     null, null, null) row marks a link-free list line."""

@@ -22,12 +22,17 @@ Shuffle budget (the part that must survive 100 TB):
      shuffle (only template rows carry text into it, already preprocessed
      by the pass-1 parse, so the dictionaries are plain projections of
      the aggregate and their write runs no python).
-The dictionaries are then written as one tagged parquet table that every
-transform worker side-loads (functions/dictload.py) — the Spark equivalent
-of the reference's read-only BerkeleyDB tables shared across workers
-(bin/wikiprep:482-512).  The redirect output join reads the same aggregate:
-a redirect's from-side is its own row, so only the to-side is looked up,
-with one broadcast of the claimed titles.
+The dictionaries are then written as one tagged parquet table
+(tagged_dicts_df) that every transform worker side-loads
+(functions/dictload.py) — the Spark equivalent of the reference's
+read-only BerkeleyDB tables shared across workers (bin/wikiprep:482-512).
+That table is the one boundary pass 1 ends at: whoever needs a
+dictionary, the pipeline's redirect map included, reads it from there.
+Besides that write, the aggregate feeds only two projections.  The
+redirect output join (redirect_records_df): a redirect's from-side is its
+own row, so only the to-side is looked up, with one broadcast of the
+claimed titles.  And the template index (template_bodies_df), which keeps
+the title_norm the table does not carry.
 """
 
 from __future__ import annotations
@@ -111,13 +116,6 @@ def title_aggregate(live: DataFrame) -> DataFrame:
     )
 
 
-def title2id_df(agg: DataFrame) -> DataFrame:
-    """(title_norm, page_id): the winning non-redirect page per title."""
-    return agg.where(F.col("claim").isNotNull()).select(
-        "title_norm", F.col("claim.page_id").alias("page_id")
-    )
-
-
 def _surviving_redirect():
     """A row's last redirect survives unless an earlier non-redirect page
     already claimed its title (the exists-check at Link.pm:53 runs BEFORE
@@ -138,17 +136,6 @@ def _claim_is_template():
         "tmpls", lambda t: t["seq"] == F.col("claim.seq"))
 
 
-def redirects_df(agg: DataFrame) -> DataFrame:
-    """(from_title, to_title, from_page_id): the redirect map.  A redirect
-    is dropped when an earlier non-redirect page already claimed its title;
-    among survivors the LAST one wins."""
-    return agg.where(_surviving_redirect()).select(
-        F.col("title_norm").alias("from_title"),
-        F.col("last_red.redirect_target").alias("to_title"),
-        F.col("last_red.page_id").alias("from_page_id"),
-    )
-
-
 def _template_passes(t):
     """Templates::prescan's gate for one ``tmpls`` entry ``t``: the
     Link::prescan call returned true — not shadowed by an earlier
@@ -156,28 +143,16 @@ def _template_passes(t):
     return F.col("claim").isNull() | (F.col("claim.seq") >= t["seq"])
 
 
-def template_pages_df(agg: DataFrame) -> DataFrame:
-    """Template-namespace pages that pass Templates::prescan's gate
-    (_template_passes)."""
-    t = agg.select(
-        "title_norm", "claim", F.explode("tmpls").alias("t")
-    )
-    return t.where(_template_passes(F.col("t"))).select(
-        F.col("t.page_id").alias("page_id"),
-        "title_norm",
-        F.col("t.text").alias("text"),
-        F.col("t.seq").alias("seq"),
-    )
-
-
-def template_bodies_df(template_pages: DataFrame) -> DataFrame:
-    """(template_id, title_norm, body): the template pages' texts, which
-    the pass-1 parse (sources/pages.parse_pages_prescan) already
+def template_bodies_df(agg: DataFrame) -> DataFrame:
+    """(template_id, title_norm, body): the Template-namespace pages that
+    pass Templates::prescan's gate (_template_passes), with their texts,
+    which the pass-1 parse (sources/pages.parse_pages_prescan) already
     preprocessed (Templates.pm:41-86)."""
-    return template_pages.select(
-        F.col("page_id").alias("template_id"),
+    t = agg.select("title_norm", "claim", F.explode("tmpls").alias("t"))
+    return t.where(_template_passes(F.col("t"))).select(
+        F.col("t.page_id").alias("template_id"),
         "title_norm",
-        F.col("text").alias("body"),
+        F.col("t.text").alias("body"),
     )
 
 
@@ -190,9 +165,8 @@ def tagged_dicts_df(agg: DataFrame) -> DataFrame:
     One projection of the title aggregate: per row, the title's claim
     (``t``), its surviving redirect (``r``) and its gated template bodies
     (``b``) are packed into one array and exploded once, as the triples
-    are — the same rows as title2id_df, redirects_df and
-    template_bodies_df, without a union, so the write runs one task per
-    aggregate partition."""
+    are — without a union, so the write runs one task per aggregate
+    partition."""
     def entry(kind, k, v):
         return F.struct(F.lit(kind).alias("kind"), k.alias("k"),
                         v.cast("string").alias("v"))

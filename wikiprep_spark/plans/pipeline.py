@@ -37,12 +37,15 @@ stand-in in this environment — swap the writer for
 ``writeTo(...).createOrReplace()`` on a cluster with an Iceberg catalog).
 A completed stage is detected by Spark's ``_SUCCESS`` marker, so a killed
 run resumes by skipping the writes of the finished stages; pass 1's parse
-and title aggregate are not written and re-run on every call, since the
-redirect records and the losers read them.  Within a stage, Spark's task
-retry handles partial work.  Per-stage metrics (seconds; rows as observed
-on the stage's write job, null for a resumed stage) and per-partition
-lineage (row counts, sha256 checksums of the input contents) land in
-``work_dir/metrics.jsonl`` and ``work_dir/lineage``.
+and title aggregate are not written and run only when a stage that reads
+them runs, so a finished resume starts no job.  The written ``dicts``
+table is the one place the pass-1 dictionaries are read from: the kernel
+side-loads it and ``redirects_raw`` is read back from it.  Within a
+stage, Spark's task retry handles partial work.  Per-stage metrics
+(seconds; rows as observed on the stage's write job, null for a resumed
+stage) and per-partition lineage (row counts, sha256 checksums of the
+input contents) land in ``work_dir/metrics.jsonl`` and
+``work_dir/lineage``.
 """
 
 from __future__ import annotations
@@ -64,6 +67,8 @@ from wikiprep_spark.sources.pages import parse_pages_prescan
 
 # the triples table as written, pred its partition column
 TRIPLES_SCHEMA = "subj string, pred string, obj string, prop string"
+# the tagged dictionary table (operators/prescan.tagged_dicts_df)
+DICTS_SCHEMA = "kind string, k string, v string"
 
 EDGE_BUILDERS = {
     "anchors": edge_ops.anchors_edges,
@@ -72,7 +77,6 @@ EDGE_BUILDERS = {
     "related": edge_ops.related_edges,
     "interwiki": edge_ops.interwiki_edges,
     "external": edge_ops.external_edges,
-    "bare_urls": edge_ops.bare_urls_edges,
     "disambig": edge_ops.disambig_edges,
     "template_inclusions": edge_ops.template_inclusion_edges,
     "pages": edge_ops.pages_table,
@@ -155,8 +159,9 @@ def run_pipeline(
     signature; the fused mode is the only one, so ``False`` raises.
 
     Returns a dict of DataFrames: transformed, every edge table,
-    redirect_records, template_redirects, title2id, redirects_raw,
-    template_bodies, triples (subj, pred, obj, prop), plus "_metrics" (the
+    redirect_records, template_redirects, redirects_raw (from_title,
+    to_title; the dicts table's redirect rows), template_bodies (the
+    template index), triples (subj, pred, obj, prop), plus "_metrics" (the
     Metrics object), "_dicts_path" (the tagged dictionary parquet
     functions/dictload.load_env_from_parquet reads) and "_counts" (row
     counts observed on the write jobs of the stages that ran; callers
@@ -199,16 +204,9 @@ def _run_pipeline(spark: SparkSession, src_pages: DataFrame, work_dir: str,
     live_pre = prescan_ops.live_pages(pre, losers)
     # the dictionary write and both sides of the redirect join share this
     # aggregate; Spark does no cross-branch CSE, so cache it once (skinny
-    # rows — only template candidates carry text).  Materialize it NOW: if
-    # two branches of one job race a cold cache, each recomputes the full
-    # parse upstream (measured 4x prescan blowup on a 4-executor cluster,
-    # when the dictionary write was a 3-way union, before this count)
+    # rows — only template candidates carry text).  The dictionary write,
+    # one branch, is its first consumer and fills the cache
     agg = prescan_ops.title_aggregate(live_pre).persist()
-    agg.count()
-    title2id = prescan_ops.title2id_df(agg)
-    redirects = prescan_ops.redirects_df(agg)
-    template_pages = prescan_ops.template_pages_df(agg)
-    template_bodies = prescan_ops.template_bodies_df(template_pages)
 
     # the dictionaries persist as one shared tagged parquet table
     # (prescanSave equivalent; distributed write, no driver roundtrip) —
@@ -273,9 +271,12 @@ def _run_pipeline(spark: SparkSession, src_pages: DataFrame, work_dir: str,
     metrics.save(os.path.join(work_dir, "metrics.jsonl"))
 
     out["transformed"] = transformed
-    out["title2id"] = title2id
-    out["redirects_raw"] = redirects
-    out["template_bodies"] = template_bodies
+    # the redirect map as the kernel sees it: read back from the written
+    # dictionaries, the one boundary pass 1 ends at
+    out["redirects_raw"] = spark.read.schema(DICTS_SCHEMA).parquet(
+        dicts_path).where(F.col("kind") == "r").select(
+        F.col("k").alias("from_title"), F.col("v").alias("to_title"))
+    out["template_bodies"] = prescan_ops.template_bodies_df(agg)
     out["_metrics"] = metrics
     out["_dicts_path"] = dicts_path
     out["_counts"] = counts
